@@ -25,6 +25,20 @@ Scale design (the part that matters at 100 TB):
     EXACT for hamming ≤ 3 by pigeonhole (4 chunks, ≤3 differing bits →
     at least one chunk equal).
 
+The LSH core — every screen (`minhash_lsh_pairs`, the candidate and
+multiplicity observables, the recall audit, `dedup_incremental_neardup`
+and the streaming ingest screen) is built from these steps, each
+written once:
+  guard       `stop_shingles` / `stop_shingle_filter` (df ≤ max_df)
+  signature   `minhash_signatures`
+  bands       `band_relation`
+  collisions  `band_join`; `_band_collisions` for a self-screen, which
+              `lsh_candidate_pairs` dedups and
+              `lsh_collision_multiplicity` counts
+  verify      `verify_jaccard` (candidates ⋈ both guarded shingle sets)
+  expand      `_expand_exact_dups` (exact-dup members of the reps)
+The oracles mirror it with `_sig_band_ctes` / `_screen_ctes`.
+
 Filtered-universe semantics: `ngram_jaccard_pairs` computes Jaccard
 over the shingle universe with document frequency ≤ `max_df` (default
 MAX_SHINGLE_DF) — shingles shared by more documents are treated as
@@ -221,6 +235,20 @@ FROM documents GROUP BY md5(text)
 
 # --- n-gram Jaccard (exact all-pairs over shared shingles) -------------------
 
+def stop_shingles(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
+    """(sh) — the stop-list of a (doc_id, sh) relation: the shingle
+    hashes whose document frequency in it exceeds `max_df`. Whoever
+    owns the df statistic owns the list: the whole corpus for the
+    self-screens (`stop_shingle_filter`), the persisted CORPUS side for
+    the incremental screens, which filter both sides by it."""
+    return (
+        sh.groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+        .select("sh")
+    )
+
+
 def stop_shingle_filter(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
     """Drop shingle hashes whose document frequency exceeds `max_df`.
 
@@ -233,39 +261,22 @@ def stop_shingle_filter(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFram
     Cache it first when it is expensive to recompute — shingling is the
     CPU-bound stage (`_shingle_pair_overlap` does exactly this).
     """
-    frequent = (
-        sh.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("sh")
-    )
-    return sh.join(F.broadcast(frequent), "sh", "left_anti")
+    return sh.join(F.broadcast(stop_shingles(sh, max_df)), "sh", "left_anti")
 
 
 def _shingle_pair_overlap(
-    docs: DataFrame,
-    max_df: int,
-    candidates: DataFrame | None = None,
-    raw: DataFrame | None = None,
+    docs: DataFrame, max_df: int, raw: DataFrame | None = None
 ) -> DataFrame:
-    """Shared candidate machinery for the exact shingle-set measures
-    (Jaccard and containment): (doc_a, doc_b, n_common, n_a, n_b) for
-    every doc pair sharing at least one filtered shingle.
-
-    `candidates` (optional, columns doc_a < doc_b) restricts the
-    enumeration to a pre-screened pair relation — the 100 TB shape:
-    at corpus scale the exact measures VERIFY LSH candidates rather
-    than enumerate the sharing-pair universe (whose size is quadratic
-    in per-shingle df even under the stop-shingle guard). The overlap
-    is then computed by fanning each candidate pair out over its two
-    shingle sets (the same keyed joins `minhash_lsh_pairs` verifies
-    with) instead of the inverted-index self-join. A candidate pair
-    sharing no filtered shingle yields no row — identical to the
-    self-join's semantics, where non-sharing pairs never surface.
+    """Shared machinery for the exact shingle-set measures (Jaccard
+    and containment): (doc_a, doc_b, n_common, n_a, n_b) for every doc
+    pair sharing at least one filtered shingle, from the
+    inverted-index self-join. At corpus scale the sharing-pair
+    universe is quadratic in per-shingle df even under the
+    stop-shingle guard — `minhash_lsh_pairs` is the scale path.
 
     `raw` (optional) is a pre-computed (ideally cached)
-    `doc_shingle_hashes(docs)` relation, so a composed caller (LSH
-    screen + exact verify) shares ONE shingling pass.
+    `doc_shingle_hashes(docs)` relation, so a caller that also screens
+    (`lsh_recall_audit`) shares ONE shingling pass.
 
     Two cache points, both load-bearing (measured at sf0.1, noop
     protocol): the RAW shingle relation is cached so the stop-shingle
@@ -279,24 +290,13 @@ def _shingle_pair_overlap(
     raw = raw if raw is not None else doc_shingle_hashes(docs).cache()
     sh = stop_shingle_filter(raw, max_df=max_df).cache()
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    if candidates is None:
-        a = sh.alias("a")
-        b = sh.alias("b")
-        common = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    else:
-        sa = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-        sb = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-        common = (
-            candidates.select("doc_a", "doc_b")
-            .join(sa, "doc_a")
-            .join(sb, ["doc_b", "sh"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
+    a = sh.alias("a")
+    b = sh.alias("b")
+    common = (
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
     ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
     cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
     return common.join(ca, "doc_a").join(cb, "doc_b")
@@ -306,7 +306,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
     max_df: int = MAX_SHINGLE_DF,
-    candidates: DataFrame | None = None,
     sh: DataFrame | None = None,
 ) -> DataFrame:
     """Jaccard over per-doc distinct shingle HASHES (8-byte join keys;
@@ -320,15 +319,10 @@ def ngram_jaccard_pairs(
     whose similarity rests solely on shingles shared by more than
     `max_df` documents (boilerplate) does not appear. The oracle mirrors
     the filter, so parity holds at any scale. Cache rationale:
-    `_shingle_pair_overlap`.
-
-    `candidates` (doc_a < doc_b) scopes the enumeration to a
-    pre-screened pair relation — pass LSH candidates at corpus scale
-    (`lsh_screened_jaccard_pairs` is the registered composition) so
-    the exact measure verifies instead of enumerating the universe.
-    `sh` shares a pre-computed shingle relation with the screener."""
+    `_shingle_pair_overlap`. `sh` shares a pre-computed raw shingle
+    relation with a caller that also screens."""
     return (
-        _shingle_pair_overlap(docs, max_df, candidates=candidates, raw=sh)
+        _shingle_pair_overlap(docs, max_df, raw=sh)
         .withColumn(
             "jaccard",
             F.round(
@@ -351,8 +345,6 @@ def containment_pairs(
     threshold: float = CONTAINMENT_THRESHOLD,
     min_shingles: int = CONTAINMENT_MIN_SHINGLES,
     max_df: int = MAX_SHINGLE_DF,
-    candidates: DataFrame | None = None,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment over the shingle sets: C(A→B) =
     |A∩B| / |A|. Catches sub-document duplication — a short doc quoted
@@ -373,12 +365,11 @@ def containment_pairs(
     (`_shingle_pair_overlap` — same cached shingle relation, same
     stop-shingle guard bounding per-key fan-out, same keyed
     self-join); only the final measure differs. Filtered-universe
-    semantics carry over unchanged. `candidates`/`sh`: see
-    ngram_jaccard_pairs — the candidate-scoped verify path."""
+    semantics carry over unchanged."""
     cont_a = F.round(F.col("n_common").cast("double") / F.col("n_a"), 6)
     cont_b = F.round(F.col("n_common").cast("double") / F.col("n_b"), 6)
     return (
-        _shingle_pair_overlap(docs, max_df, candidates=candidates, raw=sh)
+        _shingle_pair_overlap(docs, max_df)
         .filter(F.least(F.col("n_a"), F.col("n_b")) >= min_shingles)
         .withColumn("cont_a_in_b", cont_a)
         .withColumn("cont_b_in_a", cont_b)
@@ -388,8 +379,8 @@ def containment_pairs(
 
 
 # SQL twin of _shingle_pair_overlap, shared by the Jaccard and
-# containment oracles (change the stop-shingle / candidate SQL here and
-# both oracles move together, like the Spark side).
+# containment oracles (change the stop-shingle / pair SQL here and both
+# oracles move together, like the Spark side).
 _PAIR_OVERLAP_CTES = f"""shf AS (
   SELECT doc_id, sh FROM shh
   WHERE sh NOT IN (
@@ -443,8 +434,6 @@ def weighted_cosine_pairs(
     docs: DataFrame,
     threshold: float = WEIGHTED_COSINE_THRESHOLD,
     max_df: int = MAX_SHINGLE_DF,
-    candidates: DataFrame | None = None,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Sparse-vector near-dup: cosine similarity over idf-weighted
     shingle sets. The weighted sibling of `ngram_jaccard_pairs` — a
@@ -480,13 +469,8 @@ def weighted_cosine_pairs(
     fan-out exactly as in the Jaccard path; only the 1-row doc-count
     scalar is broadcast. Raw shingles cached (df agg + weight join
     consumers), weighted relation cached (norms + both self-join
-    sides) — the `_shingle_pair_overlap` pattern.
-
-    `candidates`/`sh`: see ngram_jaccard_pairs — when a pre-screened
-    pair relation is given, the dot-product aggregation fans each
-    candidate over its two weighted shingle sets instead of
-    self-joining the inverted index."""
-    raw = sh if sh is not None else doc_shingle_hashes(docs).cache()
+    sides) — the `_shingle_pair_overlap` pattern."""
+    raw = doc_shingle_hashes(docs).cache()
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     idf = F.round(
         F.log(
@@ -509,24 +493,13 @@ def weighted_cosine_pairs(
     )
     wsh = raw.join(weights, "sh").cache()
     norms = wsh.groupBy("doc_id").agg(F.sum("w2").alias("s"))
-    if candidates is None:
-        a = wsh.alias("a")
-        b = wsh.alias("b")
-        pair = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.sum(F.col("a.w2")).alias("s_ab"))
-        )
-    else:
-        wa = wsh.select(F.col("doc_id").alias("doc_a"), "sh", F.col("w2").alias("w2a"))
-        wb = wsh.select(F.col("doc_id").alias("doc_b"), "sh")
-        pair = (
-            candidates.select("doc_a", "doc_b")
-            .join(wa, "doc_a")
-            .join(wb, ["doc_b", "sh"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.sum("w2a").alias("s_ab"))
-        )
+    a = wsh.alias("a")
+    b = wsh.alias("b")
+    pair = (
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.sum(F.col("a.w2")).alias("s_ab"))
+    )
     na = norms.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
     nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
     cosine = F.round(
@@ -674,6 +647,153 @@ def band_relation(
     )
 
 
+def band_join(
+    left: DataFrame,
+    right: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    ordered: bool = False,
+) -> tuple[DataFrame, list[Column]]:
+    """The band equi-join of every LSH screen, from two
+    `band_relation`s: one row per band in which a `left` doc and a
+    `right` doc share a band key (a keyed shuffle on (band,
+    band_hash), never a cross product). Rows are NOT deduplicated — a
+    pair colliding in k bands yields k rows. `ordered` keeps only left
+    doc_id < right doc_id, the self-join form where each unordered
+    pair counts once.
+
+    Returns (rows, pair): `pair` names the two docs as columns `a` and
+    `b`. Callers select or group by `pair` directly on the join rows,
+    so the renames fold into their projection or grouping keys.
+
+    (Measured dead end: candidate generation via ONE groupBy on the
+    band key — collect_list(doc_id), then a streamed explode×explode
+    pair expansion — halves the shuffle (the self-join shuffles the
+    24·N-row relation on both sides). A quiet-box interleaved A/B at
+    sf0.1 showed 3.5/3.9 s min/median vs 4.3/4.9 for this self-join,
+    but the verdict did NOT reproduce under load at sf0.1 (5.1/5.5 vs
+    4.6/5.3) or sf1 (16.7/19.5 vs 15.7/19.2) — the gap is inside this
+    box's noise band. The self-join stays: identical candidate set,
+    and a hot band key is split by AQE skew handling, where the
+    grouped variant pins each colliding group's id array to one
+    task.)"""
+    on = (F.col("l.band") == F.col("r.band")) & (
+        F.col("l.band_hash") == F.col("r.band_hash")
+    )
+    if ordered:
+        on = on & (F.col("l.doc_id") < F.col("r.doc_id"))
+    pair = [F.col("l.doc_id").alias(a), F.col("r.doc_id").alias(b)]
+    return left.alias("l").join(right.alias("r"), on), pair
+
+
+def verify_jaccard(
+    candidates: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+    names: tuple[str, str, str, str] = ("doc_a", "doc_b", "n_a", "n_b"),
+) -> DataFrame:
+    """(a, b, jaccard) — the exact verify of every LSH screen: the
+    `candidates` pairs whose shingle-set Jaccard, rounded to 6 dp, is
+    ≥ `threshold`. `sh_a` and `sh_b` are the two sides' GUARDED
+    (doc_id, sh) relations (the same relation twice for a
+    self-screen); `names` are the pair columns of `candidates` and the
+    per-side set-size columns.
+
+    Only the candidates are verified (the whole point of LSH): each
+    pair fans out over side a's shingles and probes side b's on
+    (b, sh) — keyed joins, never the all-pairs join. A candidate
+    sharing no shingle yields no row.
+    (At cluster scale, additionally semi-filtering the sides down to
+    candidate doc ids — with `candidates` cached — keeps the
+    composite-key join from shuffling the full shingle relation;
+    re-measured under the protocol of record (noop sink + clearCache,
+    sf0.1, interleaved min/median-of-5): median 5.2 s vs 4.3 s —
+    still counterproductive at local test scale, where the extra
+    candidate materialization costs more than the shuffle it saves.
+    Same verdict, same protocol, for the no-explode formulation that
+    keeps shingles as per-doc arrays (signature = 16 array_min
+    projections, verification = array_intersect on candidate pairs):
+    26.8 s vs 4.0 s — higher-order array functions are interpreted
+    per element, not codegen'd, so the "zero-shuffle" signature pass
+    loses by an order of magnitude to the exploded ObjectHashAggregate.)"""
+    a, b, n_a, n_b = names
+
+    def sizes(sh: DataFrame, doc: str, n: str) -> DataFrame:
+        return (
+            sh.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias(n))
+            .select(F.col("doc_id").alias(doc), n)
+        )
+
+    common = (
+        candidates.join(sh_a.select(F.col("doc_id").alias(a), "sh"), a)
+        .join(sh_b.select(F.col("doc_id").alias(b), "sh"), [b, "sh"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    jaccard = F.round(
+        F.col("n_common").cast("double")
+        / (F.col(n_a) + F.col(n_b) - F.col("n_common")),
+        6,
+    )
+    return (
+        common.join(sizes(sh_a, a, n_a), a)
+        .join(sizes(sh_b, b, n_b), b)
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _expand_exact_dups(
+    rep_pairs: DataFrame, dup_members: DataFrame, shf: DataFrame
+) -> DataFrame:
+    """Expand representative-level (doc_a, doc_b, jaccard) pairs back
+    over the exact-dup cluster members (`dup_members` = (doc_id,
+    rep_id) for clusters with > 1 copy; `shf` = the guarded shingle
+    relation the pairs were verified on)."""
+    # Cross-cluster: every (member of A, member of B) combo inherits
+    # the rep jaccard. LEFT joins against the dup-cluster members only:
+    # a rep with no duplicates stands for itself (coalesce), so the
+    # expansion is free when no exact dups exist instead of an inner
+    # join through a members relation the size of the corpus.
+    ma = dup_members.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("da"))
+    mb = dup_members.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("db"))
+    ea = F.coalesce(F.col("da"), F.col("doc_a"))
+    eb = F.coalesce(F.col("db"), F.col("doc_b"))
+    cross = (
+        rep_pairs.join(ma, "doc_a", "left")
+        .join(mb, "doc_b", "left")
+        .select(
+            F.least(ea, eb).alias("doc_a"),
+            F.greatest(ea, eb).alias("doc_b"),
+            "jaccard",
+        )
+    )
+    # Intra-cluster: identical docs are jaccard-1.0 pairs, provided the
+    # doc has ≥1 GUARDED shingle (identical docs whose shingles are all
+    # stop-shingles share nothing measurable: 0/0 is no row, matching
+    # the oracle). Singleton clusters generate no intra pairs, so
+    # joining dup_members (not all members) is result-identical.
+    shingled = shf.select(F.col("doc_id").alias("s_rep")).distinct()
+    x, y = dup_members.alias("x"), dup_members.alias("y")
+    intra = (
+        x.join(
+            y,
+            (F.col("x.rep_id") == F.col("y.rep_id"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .join(shingled, F.col("x.rep_id") == F.col("s_rep"), "left_semi")
+        .select(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+    )
+    return cross.unionByName(intra)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = NEARDUP_THRESHOLD,
@@ -725,7 +845,7 @@ def minhash_lsh_pairs(
       of >100 docs), an 80 GB shuffle that filled the disk; the
       guarded screen is bounded by construction.
     * **S-curve alignment.** The exact verify (here and in the
-      screened/audit variants) measures filtered-universe Jaccard, so
+      recall audit) measures filtered-universe Jaccard, so
       colliding on raw-shingle signatures screened for the WRONG
       similarity: a pair with filtered-Jaccard 0.6 whose raw sets are
       diluted by disjoint stop shingles could sit far below the
@@ -783,7 +903,6 @@ def minhash_lsh_pairs(
         ).select("doc_id", "rep_id")
     )
     dup_extras = dup_members.filter(F.col("doc_id") != F.col("rep_id")).select("doc_id")
-    rep_docs = docs.join(dup_extras, "doc_id", "left_anti")
 
     # ONE shingling pass over the full corpus; the guarded relation
     # (filtered, rep-restricted) feeds signature generation AND
@@ -793,111 +912,49 @@ def minhash_lsh_pairs(
     sh = stop_shingle_filter(sh, max_df=max_df).join(
         dup_extras, "doc_id", "left_anti"
     ).cache()
-    sig = minhash_signatures(rep_docs, sh=sh, n_perm=bands * rows)
-    band_rel = band_relation(sig, bands=bands, rows=rows)
-    # (Measured dead end: candidate generation via ONE groupBy on the
-    # band key — collect_list(doc_id), then a streamed
-    # explode×explode pair expansion — halves the shuffle (the
-    # self-join shuffles the 24·N-row relation on both sides). A
-    # quiet-box interleaved A/B at sf0.1 showed 3.5/3.9 s min/median
-    # vs 4.3/4.9 for this self-join, but the verdict did NOT reproduce
-    # under load at sf0.1 (5.1/5.5 vs 4.6/5.3) or sf1 (16.7/19.5 vs
-    # 15.7/19.2) — the gap is inside this box's noise band. The
-    # self-join stays: identical candidate set, and a hot band key is
-    # split by AQE skew handling, where the grouped variant pins each
-    # colliding group's id array to one task.)
-    a = band_rel.alias("a")
-    b = band_rel.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    candidates = lsh_candidate_pairs(docs, bands=bands, rows=rows, shf=sh)
+    rep_pairs = verify_jaccard(candidates, sh, sh, threshold)
+    return _expand_exact_dups(rep_pairs, dup_members, sh)
+
+
+def _sig_band_ctes(bands: int, rows: int, src: str = "shf", keys: str = "doc_id") -> str:
+    """The `sig` and `bands` CTEs — the SQL twin of
+    `minhash_signatures` → `band_relation`, grouped by `keys` over the
+    guarded shingle CTE `src`. Shared by every LSH oracle."""
+    sig_aggs = ",\n    ".join(
+        f"MIN(({a} * (sh % 2147483648) + {b}) % {MINHASH_PRIME}) AS h{seed}"
+        for seed, (a, b) in enumerate(_mh_params(bands * rows))
     )
-    # Verify ONLY the candidates (the whole point of LSH): intersect the
-    # two shingle sets per candidate pair — never the all-pairs join.
-    # (At cluster scale, additionally semi-filtering sa/sb down to
-    # candidate doc ids — with `candidates` cached — keeps the
-    # composite-key join from shuffling the full shingle relation;
-    # re-measured under the protocol of record (noop sink + clearCache,
-    # sf0.1, interleaved min/median-of-5): median 5.2 s vs 4.3 s —
-    # still counterproductive at local test scale, where the extra
-    # candidate materialization costs more than the shuffle it saves.
-    # Same verdict, same protocol, for the no-explode formulation that
-    # keeps shingles as per-doc arrays (signature = 16 array_min
-    # projections, verification = array_intersect on candidate pairs):
-    # 26.8 s vs 4.0 s — higher-order array functions are interpreted
-    # per element, not codegen'd, so the "zero-shuffle" signature pass
-    # loses by an order of magnitude to the exploded ObjectHashAggregate.)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    common = (
-        candidates.join(sa, "doc_a")
-        .join(sb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    rep_pairs = (
-        common.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
+    band_selects = "\n  UNION ALL\n".join(
+        "  SELECT {keys}, {band} AS band, md5({expr}) AS band_hash FROM sig".format(
+            keys=keys,
+            band=band,
+            expr=" || ',' || ".join(
+                f"h{band * rows + j}::VARCHAR" for j in range(rows)
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        for band in range(bands)
     )
-    # Expand rep-level pairs over exact-dup cluster members. Cross-cluster:
-    # every (member of A, member of B) combo inherits the rep jaccard.
-    # LEFT joins against the dup-cluster members only: a rep with no
-    # duplicates stands for itself (coalesce), so the expansion is free
-    # when no exact dups exist instead of an inner join through a
-    # members relation the size of the corpus.
-    ma = dup_members.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("da"))
-    mb = dup_members.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("db"))
-    ea = F.coalesce(F.col("da"), F.col("doc_a"))
-    eb = F.coalesce(F.col("db"), F.col("doc_b"))
-    cross = (
-        rep_pairs.join(ma, "doc_a", "left")
-        .join(mb, "doc_b", "left")
-        .select(
-            F.least(ea, eb).alias("doc_a"),
-            F.greatest(ea, eb).alias("doc_b"),
-            "jaccard",
-        )
-    )
-    # Intra-cluster: identical docs are jaccard-1.0 pairs, provided the
-    # doc has ≥1 shingle (zero-shingle docs never pair — 0/0 is no row,
-    # matching the unfactored semantics and the oracle). Singleton
-    # clusters generate no intra pairs, so joining dup_members (not all
-    # members) is result-identical.
-    shingled = sh.select(F.col("doc_id").alias("s_rep")).distinct()
-    x, y = dup_members.alias("x"), dup_members.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .join(shingled, F.col("x.rep_id") == F.col("s_rep"), "left_semi")
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
+    return f"""sig AS (
+  SELECT {keys},
+    {sig_aggs}
+  FROM {src} GROUP BY {keys}
+),
+bands AS (
+{band_selects}
+)"""
+
+
+def _screen_ctes(bands: int, rows: int) -> str:
+    """`sig`, `bands` and the distinct ordered band self-join
+    `candidates` over the guarded CTE `shf` — the SQL twin of
+    `lsh_candidate_pairs`."""
+    return f"""{_sig_band_ctes(bands, rows)},
+candidates AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
+)"""
 
 
 def _minhash_ctes(
@@ -911,38 +968,13 @@ def _minhash_ctes(
     `_minhash_estimate_oracle` — signatures, candidates, AND the
     exact verify all over the df ≤ max_df filtered universe, mirroring
     `minhash_lsh_pairs`."""
-    sig_aggs = ",\n    ".join(
-        f"MIN(({a} * (sh % 2147483648) + {b}) % {MINHASH_PRIME}) AS h{seed}"
-        for seed, (a, b) in enumerate(_mh_params(bands * rows))
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {band} AS band, md5({expr}) AS band_hash FROM sig".format(
-            band=band,
-            expr=" || ',' || ".join(
-                f"h{band * rows + j}::VARCHAR" for j in range(rows)
-            ),
-        )
-        for band in range(bands)
-    )
     return f"""{_SHINGLES_CTE},
 shf AS (
   SELECT shh.doc_id, shh.sh FROM shh
   JOIN (SELECT sh FROM shh GROUP BY sh HAVING COUNT(*) <= {max_df}) keepsh
     ON shh.sh = keepsh.sh
 ),
-sig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shf GROUP BY doc_id
-),
-bands AS (
-{band_selects}
-),
-candidates AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-),
+{_screen_ctes(bands, rows)},
 cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
@@ -1034,7 +1066,7 @@ def lsh_recall_audit(
     (`test_lsh_collision_probability_curve` asserts
     P(collide | s=0.5) ≥ 0.9 from the (b, r) constants): a standing
     deployment runs this on a SAMPLED slice — n_true_pairs enumerates
-    the exact sharing-pair universe, the thing the composed scale path
+    the exact sharing-pair universe, the thing the LSH screen
     exists to avoid — and alarms when measured recall drifts from the
     curve (hash-family or shingle-universe change). That sampled
     deployment is runnable as `lsh_recall_audit_sampled`
@@ -1080,19 +1112,6 @@ def _lsh_recall_audit_oracle(
 ) -> str:
     """Oracle twin of `lsh_recall_audit`: the guarded exact-pair CTEs
     (NGRAM_JACCARD's) plus the banded-candidate CTEs, counted."""
-    sig_aggs = ",\n    ".join(
-        f"MIN(({a} * (sh % 2147483648) + {b}) % {MINHASH_PRIME}) AS h{seed}"
-        for seed, (a, b) in enumerate(_mh_params(bands * rows))
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {band} AS band, md5({expr}) AS band_hash FROM sig".format(
-            band=band,
-            expr=" || ',' || ".join(
-                f"h{band * rows + j}::VARCHAR" for j in range(rows)
-            ),
-        )
-        for band in range(bands)
-    )
     return f"""
 WITH {_SHINGLES_CTE},
 {_PAIR_OVERLAP_CTES},
@@ -1103,19 +1122,7 @@ true_pairs AS (
   JOIN cnt cb ON cb.doc_id = doc_b
   WHERE ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) >= {threshold}
 ),
-sig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shf GROUP BY doc_id
-),
-bands AS (
-{band_selects}
-),
-candidates AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-),
+{_screen_ctes(bands, rows)},
 hits AS (
   SELECT t.doc_a, t.doc_b FROM true_pairs t
   JOIN candidates c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
@@ -1259,6 +1266,30 @@ JOIN sig sb ON sb.doc_id = v.doc_b
 """
 
 
+def _band_collisions(
+    docs: DataFrame,
+    bands: int,
+    rows: int,
+    sh: DataFrame | None,
+    max_df: int,
+    shf: DataFrame | None,
+) -> tuple[DataFrame, list[Column]]:
+    """One row per band collision of the self-screen, as `band_join`'s
+    (rows, pair) with pair = (doc_a, doc_b): guard → signature → bands
+    → ordered band self-join, NOT deduplicated. The shared body of
+    `lsh_candidate_pairs` (distinct pairs) and
+    `lsh_collision_multiplicity` (rows counted per pair); parameters as
+    documented there."""
+    if shf is None:
+        shf = stop_shingle_filter(
+            sh if sh is not None else doc_shingle_hashes(docs), max_df=max_df
+        )
+    band_rel = band_relation(
+        minhash_signatures(docs, sh=shf, n_perm=bands * rows), bands=bands, rows=rows
+    )
+    return band_join(band_rel, band_rel, ordered=True)
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     bands: int = LSH_BANDS,
@@ -1273,32 +1304,13 @@ def lsh_candidate_pairs(
     `minhash_lsh_pairs` — the guard bounds every band bucket at
     ~max_df docs and aligns the S-curve with the guarded measure the
     verifiers report). This is the screen half of `minhash_lsh_pairs`,
-    exposed so the exact enumerators can verify a pre-screened
-    relation instead of enumerating the sharing-pair universe (their
-    `candidates` param). `sh` shares a pre-computed RAW
-    `doc_shingle_hashes` relation (guard applied here); `shf` shares
-    an ALREADY-GUARDED relation (e.g. the screened-jaccard
-    composition's, whose df must count full-corpus copies) and takes
-    precedence."""
-    if shf is None:
-        shf = stop_shingle_filter(
-            sh if sh is not None else doc_shingle_hashes(docs), max_df=max_df
-        )
-    band_rel = band_relation(
-        minhash_signatures(docs, sh=shf, n_perm=bands * rows), bands=bands, rows=rows
-    )
-    a = band_rel.alias("a")
-    b = band_rel.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    exposed for the recall audit and the screen's cost observables.
+    `sh` shares a pre-computed RAW `doc_shingle_hashes` relation (guard
+    applied here); `shf` shares an ALREADY-GUARDED relation (e.g.
+    `minhash_lsh_pairs`' rep-restricted one, whose df must count
+    full-corpus copies) and takes precedence."""
+    hits, pair = _band_collisions(docs, bands, rows, sh, max_df, shf)
+    return hits.select(*pair).distinct()
 
 
 def lsh_collision_multiplicity(
@@ -1318,27 +1330,8 @@ def lsh_collision_multiplicity(
     shuffle/spill driver the sf100 adjudication measured at 986M rows
     for b=24,r=3 (LSH_SF100_PLAN_r11.json) — while count(*) is the
     distinct-candidate count the exact verifier pays per row."""
-    if shf is None:
-        shf = stop_shingle_filter(
-            sh if sh is not None else doc_shingle_hashes(docs), max_df=max_df
-        )
-    band_rel = band_relation(
-        minhash_signatures(docs, sh=shf, n_perm=bands * rows), bands=bands, rows=rows
-    )
-    a = band_rel.alias("a")
-    b = band_rel.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-    )
+    hits, pair = _band_collisions(docs, bands, rows, sh, max_df, shf)
+    return hits.groupBy(*pair).agg(F.count(F.lit(1)).alias("n_bands"))
 
 
 def lsh_candidate_volume(
@@ -1437,111 +1430,14 @@ def lsh_screened_jaccard_pairs(
     rows: int = LSH_ROWS,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
-    """The SCALE-PATH composition the exact enumerators document:
-    banded-LSH screen → exact filtered-universe Jaccard verify, with
-    exact-duplicate pre-grouping. At 100 TB the standalone
-    `ngram_jaccard_pairs` self-join enumerates every sharing pair —
-    quadratic in per-shingle df even under the stop-shingle guard;
-    this runs the SAME exact measure over only the LSH candidates
-    (recall = the banded S-curve, ≥0.96 at the default threshold 0.5),
-    so cost is proportional to true near-dup density.
-
-    Semantics: `ngram_jaccard_pairs`' measure (Jaccard over the
-    df ≤ `max_df` filtered shingle universe, with df computed over the
-    FULL corpus — not the rep subset, which keeps exact-dup
-    pre-grouping result-transparent: identical text ⇒ identical raw
-    and filtered shingle sets ⇒ identical signature, bands, and
-    jaccard) restricted to `lsh_candidate_pairs` collisions, reported
-    at `threshold`.
-
-    Scale shape mirrors `minhash_lsh_pairs`: one shingling pass feeds
-    df weights, signatures, and verification; exact dups are
-    pre-grouped so band keys stay cold under duplication skew; the
-    verify fans candidates over their two shingle sets (keyed joins);
-    rep-level pairs expand back over cluster members at the end.
-    `clusters` (optional) is a precomputed `dedup_exact(docs)`."""
-    digests = docs.select("doc_id", F.md5("text").alias("ch"))
-    if clusters is None:
-        clusters = dedup_exact(docs)
-    dup_members = digests.join(
-        clusters.filter(F.col("n_copies") > 1).select(
-            F.col("content_hash").alias("ch"),
-            F.col("keep_doc_id").alias("rep_id"),
-        ),
-        "ch",
-    ).select("doc_id", "rep_id")
-    dup_extras = dup_members.filter(F.col("doc_id") != F.col("rep_id")).select("doc_id")
-
-    # ONE shingling pass over the full corpus: the stop-shingle df must
-    # count ALL copies (the plain enumerator's universe), while the
-    # screen/verify run over reps only. Screen and verify share the
-    # SAME guarded relation — the screen's S-curve applies to exactly
-    # the similarity the verify thresholds.
-    raw_all = doc_shingle_hashes(docs).cache()
-    shf_all = stop_shingle_filter(raw_all, max_df=max_df).cache()
-    shf_rep = shf_all.join(dup_extras, "doc_id", "left_anti")
-
-    candidates = lsh_candidate_pairs(docs, bands=bands, rows=rows, shf=shf_rep)
-
-    counts = shf_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sa = shf_rep.select(F.col("doc_id").alias("doc_a"), "sh")
-    sb = shf_rep.select(F.col("doc_id").alias("doc_b"), "sh")
-    common = (
-        candidates.join(sa, "doc_a")
-        .join(sb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    """`ngram_jaccard_pairs`' measure (Jaccard over the df ≤ `max_df`
+    filtered shingle universe) at `threshold`, reported only for pairs
+    the banded-LSH screen surfaces — which is exactly
+    `minhash_lsh_pairs`. Kept as its own registry entry and oracle: the
+    oracle states the result as screen ∩ exact enumeration."""
+    return minhash_lsh_pairs(
+        docs, threshold=threshold, clusters=clusters, bands=bands, rows=rows, max_df=max_df
     )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    rep_pairs = (
-        common.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    # Expansion over exact-dup members — identical to minhash_lsh_pairs
-    # (see its docstring), except the intra-cluster guard requires ≥1
-    # FILTERED shingle: the measure here is over the filtered universe,
-    # so identical docs whose shingles are all stop-shingles share
-    # nothing measurable (0/0 → no row), matching the oracle.
-    ma = dup_members.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("da"))
-    mb = dup_members.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("db"))
-    ea = F.coalesce(F.col("da"), F.col("doc_a"))
-    eb = F.coalesce(F.col("db"), F.col("doc_b"))
-    cross = (
-        rep_pairs.join(ma, "doc_a", "left")
-        .join(mb, "doc_b", "left")
-        .select(
-            F.least(ea, eb).alias("doc_a"),
-            F.greatest(ea, eb).alias("doc_b"),
-            "jaccard",
-        )
-    )
-    shingled = shf_rep.select(F.col("doc_id").alias("s_rep")).distinct()
-    x, y = dup_members.alias("x"), dup_members.alias("y")
-    intra = (
-        x.join(
-            y,
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .join(shingled, F.col("x.rep_id") == F.col("s_rep"), "left_semi")
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
 
 
 def _lsh_screened_jaccard_oracle(
@@ -1553,35 +1449,10 @@ def _lsh_screened_jaccard_oracle(
     """No rep logic needed: exact-dup pre-grouping is result-transparent
     (identical text ⇒ identical signature/bands/filtered set), so the
     oracle is simply screen ∩ filtered-universe-jaccard over ALL docs."""
-    sig_aggs = ",\n    ".join(
-        f"MIN(({a} * (sh % 2147483648) + {b}) % {MINHASH_PRIME}) AS h{seed}"
-        for seed, (a, b) in enumerate(_mh_params(bands * rows))
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {band} AS band, md5({expr}) AS band_hash FROM sig".format(
-            band=band,
-            expr=" || ',' || ".join(
-                f"h{band * rows + j}::VARCHAR" for j in range(rows)
-            ),
-        )
-        for band in range(bands)
-    )
     return f"""
 WITH {_SHINGLES_CTE},
 {_PAIR_OVERLAP_CTES},
-sig AS (
-  SELECT doc_id,
-    {sig_aggs}
-  FROM shf GROUP BY doc_id
-),
-bands AS (
-{band_selects}
-),
-candidates AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-)
+{_screen_ctes(bands, rows)}
 SELECT c.doc_a, c.doc_b,
        ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) AS jaccard
 FROM candidates c
@@ -1751,11 +1622,11 @@ def dedup_incremental(
     )
 
 
-def _dedup_incremental_docs(spark, sf_dir):
+def _corpus_and_batch(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """The incremental queries' (corpus, batch) split of the corpus."""
     docs = _docs(spark, sf_dir)
-    batch = docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
-    corpus = docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
-    return dedup_incremental(corpus, batch)
+    in_batch = F.col("doc_id") % INCR_BATCH_MOD == 0
+    return docs.filter(~in_batch), docs.filter(in_batch)
 
 
 DEDUP_INCREMENTAL_ORACLE = f"""
@@ -2085,72 +1956,20 @@ def dedup_incremental_neardup(
     universe on both sides."""
     n_perm = bands * rows
     csh_raw = doc_shingle_hashes(corpus).cache()
-    stop = (
-        csh_raw.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("sh")
-    )
-    csh = csh_raw.join(F.broadcast(stop), "sh", "left_anti").cache()
-    bsh = (
-        doc_shingle_hashes(batch)
-        .join(F.broadcast(stop), "sh", "left_anti")
-        .cache()
-    )
+    stop = F.broadcast(stop_shingles(csh_raw, max_df))
+    csh = csh_raw.join(stop, "sh", "left_anti").cache()
+    bsh = doc_shingle_hashes(batch).join(stop, "sh", "left_anti").cache()
     cband = band_relation(
         minhash_signatures(corpus, sh=csh, n_perm=n_perm), bands=bands, rows=rows
     )
     bband = band_relation(
         minhash_signatures(batch, sh=bsh, n_perm=n_perm), bands=bands, rows=rows
     )
-    candidates = (
-        bband.alias("b")
-        .join(
-            cband.alias("c"),
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.band_hash") == F.col("c.band_hash")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_doc"),
-            F.col("c.doc_id").alias("corpus_doc"),
-        )
-        .distinct()
+    hits, pair = band_join(bband, cband, "batch_doc", "corpus_doc")
+    candidates = hits.select(*pair).distinct()
+    return verify_jaccard(
+        candidates, bsh, csh, threshold, names=("batch_doc", "corpus_doc", "n_b", "n_c")
     )
-    bcounts = bsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_b"))
-    ccounts = csh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_c"))
-    sb = bsh.select(F.col("doc_id").alias("batch_doc"), "sh")
-    sc = csh.select(F.col("doc_id").alias("corpus_doc"), "sh")
-    common = (
-        candidates.join(sb, "batch_doc")
-        .join(sc, ["corpus_doc", "sh"])
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.join(
-            bcounts.select(F.col("doc_id").alias("batch_doc"), "n_b"), "batch_doc"
-        )
-        .join(
-            ccounts.select(F.col("doc_id").alias("corpus_doc"), "n_c"), "corpus_doc"
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_b") + F.col("n_c") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("batch_doc", "corpus_doc", "jaccard")
-    )
-
-
-def _dedup_incremental_neardup_docs(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    batch = docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
-    corpus = docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
-    return dedup_incremental_neardup(corpus, batch)
 
 
 def _incremental_neardup_oracle(
@@ -2158,19 +1977,6 @@ def _incremental_neardup_oracle(
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
 ) -> str:
-    sig_aggs = ",\n    ".join(
-        f"MIN(({a} * (sh % 2147483648) + {b}) % {MINHASH_PRIME}) AS h{seed}"
-        for seed, (a, b) in enumerate(_mh_params(bands * rows))
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, side, {band} AS band, md5({expr}) AS band_hash FROM sig".format(
-            band=band,
-            expr=" || ',' || ".join(
-                f"h{band * rows + j}::VARCHAR" for j in range(rows)
-            ),
-        )
-        for band in range(bands)
-    )
     return f"""
 WITH {_SHINGLES_CTE},
 sided_raw AS (
@@ -2186,14 +1992,7 @@ sided AS (
     GROUP BY sh HAVING COUNT(*) > {MAX_SHINGLE_DF}
   )
 ),
-sig AS (
-  SELECT doc_id, side,
-    {sig_aggs}
-  FROM sided GROUP BY doc_id, side
-),
-bands AS (
-{band_selects}
-),
+{_sig_band_ctes(bands, rows, src="sided", keys="doc_id, side")},
 candidates AS (
   SELECT DISTINCT b.doc_id AS batch_doc, c.doc_id AS corpus_doc
   FROM bands b JOIN bands c
@@ -2416,7 +2215,7 @@ DEDUP_QUERIES = [
     QueryDef("dedup_exact", lambda s, d: dedup_exact(_docs(s, d)), DEDUP_EXACT_ORACLE),
     QueryDef(
         "dedup_incremental_batch",
-        _dedup_incremental_docs,
+        lambda s, d: dedup_incremental(*_corpus_and_batch(s, d)),
         DEDUP_INCREMENTAL_ORACLE,
     ),
     QueryDef(
@@ -2436,7 +2235,7 @@ DEDUP_QUERIES = [
     ),
     QueryDef(
         "dedup_incremental_neardup",
-        _dedup_incremental_neardup_docs,
+        lambda s, d: dedup_incremental_neardup(*_corpus_and_batch(s, d)),
         _incremental_neardup_oracle(),
     ),
     QueryDef(
@@ -2483,9 +2282,9 @@ DEDUP_QUERIES = [
         lambda s, d: lsh_recall_audit_sampled(_docs(s, d)),
         _lsh_recall_audit_sampled_oracle(),
     ),
-    # The runnable scale-path composition: LSH screen → exact
-    # filtered-universe Jaccard verify (the `candidates` param of the
-    # exact enumerators, pre-wired).
+    # ngram_jaccard's measure restricted to LSH-screened pairs — the
+    # same operator as dedup_minhash_lsh, checked against an oracle
+    # that states it as screen ∩ exact enumeration.
     QueryDef(
         "dedup_lsh_screened_jaccard",
         lambda s, d: lsh_screened_jaccard_pairs(_docs(s, d)),

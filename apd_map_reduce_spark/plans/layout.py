@@ -11,6 +11,8 @@ the guard makes this safe to leave in production plans.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -62,13 +64,17 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     return df
 
 
+_BYTE_SHIFTS = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
 def _parse_bytes(v: str) -> int:
-    """Spark byte-conf string → bytes ('128m', '4194304b', '1g')."""
-    s = v.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    if s and s[-1] in mult:
-        return int(s[:-1]) * mult[s[-1]]
-    return int(s)
+    """Spark byte-conf string → bytes, in Spark's own grammar: an
+    integer with an optional b, k/kb, m/mb, g/gb, t/tb or p/pb suffix
+    ('128m', '512mb', '4194304b', '1g'); a bare integer is bytes."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", v.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark byte string: {v!r}")
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2)]
 
 
 def scan_splits_estimate(

@@ -86,9 +86,7 @@ def get_spark(
         # 100 TB posture: bound scan task size so a partition fits in
         # executor memory regardless of input file layout. Deployment
         # dial (guide §6 suggests 512m-1g for big sequential scans on
-        # fast storage): SPARK_GRAFT_MAX_PARTITION_BYTES; the 128m
-        # default is the measured local keep (see OPTIMIZATION_r13.md,
-        # sf100 interleaved A/B).
+        # fast storage): SPARK_GRAFT_MAX_PARTITION_BYTES, default 128m.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),

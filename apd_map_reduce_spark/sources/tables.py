@@ -74,15 +74,22 @@ def table_input_size(sf_dir: str, name: str) -> tuple[int, int] | None:
     ``df.rdd.getNumPartitions()`` probe forced a full physical-planning
     pass per query CONSTRUCTION). Returns None when the path is not
     statable locally (object store, missing file) — callers fall back
-    to the planning probe, so remote deployments lose nothing."""
+    to the planning probe, so remote deployments lose nothing.
+    Partitioned (nested) directories are walked recursively; `_`/`.`
+    entries (_SUCCESS, .crc, _temporary/) are skipped at every level,
+    as Spark's file index skips them."""
     path = os.path.join(sf_dir, f"{name}.parquet")
+    hidden = ("_", ".")
     try:
         if os.path.isdir(path):
-            sizes = [
-                e.stat().st_size
-                for e in os.scandir(path)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            ]
+            sizes = []
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+                sizes += [
+                    os.path.getsize(os.path.join(root, f))
+                    for f in files
+                    if not f.startswith(hidden)
+                ]
             return (sum(sizes), len(sizes)) if sizes else None
         return (os.path.getsize(path), 1)
     except OSError:

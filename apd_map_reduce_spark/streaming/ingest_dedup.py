@@ -45,11 +45,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apd_map_reduce_spark.operators.dedup import (
-    MAX_SHINGLE_DF,
     NEARDUP_THRESHOLD,
+    band_join,
     band_relation,
     doc_shingle_hashes,
     minhash_signatures,
+    stop_shingles,
+    verify_jaccard,
 )
 
 MATCHES_SCHEMA = (
@@ -123,71 +125,24 @@ def _screen_and_index(index_path: str, matches_path: str, threshold: float):
         # so bucket sizes stay bounded by ~max_df + one batch. An index
         # rebuild re-signs under the current stop-list.
         if csh is not None:
-            stop = (
-                csh.groupBy("sh")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > MAX_SHINGLE_DF)
-                .select("sh")
-            )
-            cshf = csh.join(F.broadcast(stop), "sh", "left_anti")
-            bshf = bsh.join(F.broadcast(stop), "sh", "left_anti")
+            stop = F.broadcast(stop_shingles(csh))
+            cshf = csh.join(stop, "sh", "left_anti")
+            bshf = bsh.join(stop, "sh", "left_anti")
         else:
             cshf = None
             bshf = bsh
         bbands = band_relation(minhash_signatures(batch_df, sh=bshf))
 
         if cband is not None and cshf is not None:
-            candidates = (
-                bbands.alias("b")
-                .join(
-                    cband.alias("c"),
-                    (F.col("b.band") == F.col("c.band"))
-                    & (F.col("b.band_hash") == F.col("c.band_hash")),
-                )
-                .select(
-                    F.col("b.doc_id").alias("batch_doc"),
-                    F.col("c.doc_id").alias("corpus_doc"),
-                )
-                .distinct()
-            )
-            bcounts = bshf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_b"))
-            ccounts = cshf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_c"))
-            common = (
-                candidates.join(
-                    bshf.select(F.col("doc_id").alias("batch_doc"), "sh"), "batch_doc"
-                )
-                .join(
-                    cshf.select(F.col("doc_id").alias("corpus_doc"), "sh"),
-                    ["corpus_doc", "sh"],
-                )
-                .groupBy("batch_doc", "corpus_doc")
-                .agg(F.count(F.lit(1)).alias("n_common"))
-            )
-            matches = (
-                common.join(
-                    bcounts.select(F.col("doc_id").alias("batch_doc"), "n_b"),
-                    "batch_doc",
-                )
-                .join(
-                    ccounts.select(F.col("doc_id").alias("corpus_doc"), "n_c"),
-                    "corpus_doc",
-                )
-                .withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("n_common").cast("double")
-                        / (F.col("n_b") + F.col("n_c") - F.col("n_common")),
-                        6,
-                    ),
-                )
-                .filter(F.col("jaccard") >= threshold)
-                .select(
-                    "batch_doc",
-                    "corpus_doc",
-                    "jaccard",
-                    F.lit(batch_id).alias("batch_id"),
-                )
-            )
+            hits, pair = band_join(bbands, cband, "batch_doc", "corpus_doc")
+            candidates = hits.select(*pair).distinct()
+            matches = verify_jaccard(
+                candidates,
+                bshf,
+                cshf,
+                threshold,
+                names=("batch_doc", "corpus_doc", "n_b", "n_c"),
+            ).withColumn("batch_id", F.lit(batch_id))
             matches.write.mode("append").parquet(matches_path)
         else:
             # First batch of a fresh pipeline: materialize an EMPTY

@@ -10,12 +10,12 @@ score by min (noise only ever adds time).
         --queries corpus_clean_snapshot,dedup_minhash_lsh \
         --passes 5 --out AB_r10.json
 
-Unlike scripts/ab_guard_dedup.py (which shadow-imports ONE old module
-into the live session and must assert every shared timed-path symbol
-is drift-free, or the timing is a chimera), this tool checks the old
-ref out into a throwaway `git worktree` and runs each variant in its
-own subprocess with sys.path pinned to its tree — the old variant is
-the WHOLE old tree, so any ref works with zero per-symbol audits. The
+Rather than shadow-importing one old module into the live session
+(which would have to assert every shared timed-path symbol is
+drift-free, or the timing is a chimera), this tool checks the old ref
+out into a throwaway `git worktree` and runs each variant in its own
+subprocess with sys.path pinned to its tree — the old variant is the
+WHOLE old tree, so any ref works with zero per-symbol audits. The
 price is one JVM start per (variant, pass); all queries in the list
 share that session, so the cost amortizes across the query list.
 

@@ -207,8 +207,7 @@ def main() -> None:
         # record sweep removes the confound structurally.
         merged: dict[str, dict] = {}
         # Per-PID path: two concurrent --isolate invocations must not
-        # round-trip through the same file (same race ab_guard_dedup
-        # fixed for its shadow-module source).
+        # round-trip through the same file.
         iso_path = f"/tmp/scale_step_isolated.{os.getpid()}.json"
         try:
             for name in names:

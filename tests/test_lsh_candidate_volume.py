@@ -43,7 +43,9 @@ from apd_map_reduce_spark.operators.dedup import (
     LSH_SCALE_BANDS,
     LSH_SCALE_ROWS,
     MAX_SHINGLE_DF,
+    lsh_candidate_pairs,
     lsh_candidate_volume,
+    lsh_collision_multiplicity,
     lsh_collision_probability,
     ngram_jaccard_pairs,
 )
@@ -76,6 +78,18 @@ def _volume(docs, bands, rows):
 
 def test_no_true_neardups_in_background_fixture(background_docs):
     assert ngram_jaccard_pairs(background_docs).count() == 0
+
+
+def test_multiplicity_and_candidates_share_one_band_join(background_docs):
+    """Both observables come from the same band self-join: the
+    multiplicity relation keys exactly the distinct candidate pairs,
+    each pair colliding in at least one band."""
+    mult = lsh_collision_multiplicity(background_docs).collect()
+    cands = lsh_candidate_pairs(background_docs).collect()
+    assert mult, "fixture produced no band collisions"
+    assert {(r.doc_a, r.doc_b) for r in mult} == {(r.doc_a, r.doc_b) for r in cands}
+    assert len(mult) == len(cands)
+    assert all(r.n_bands >= 1 for r in mult)
 
 
 def test_volume_invariant_bound(background_docs):

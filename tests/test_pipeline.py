@@ -369,40 +369,6 @@ def test_weighted_cosine_downweights_boilerplate(spark):
     )
 
 
-def test_candidate_scoped_enumerators_match_full_enumeration(spark):
-    """The `candidates` param of the exact pair enumerators is a pure
-    RESTRICTION: for any candidate relation C, the candidate-scoped
-    result equals the full enumeration inner-filtered to C — same
-    measures, same thresholds, no rescaling of counts or weights."""
-    from apd_map_reduce_spark.operators.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs,
-        weighted_cosine_pairs,
-    )
-    from apd_map_reduce_spark.sources.tables import load_table
-
-    from .conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-
-    for fn, cols in (
-        (ngram_jaccard_pairs, ("n_common", "jaccard")),
-        (containment_pairs, ("n_common", "cont_a_in_b", "cont_b_in_a")),
-        (weighted_cosine_pairs, ("cosine",)),
-    ):
-        full = {(r.doc_a, r.doc_b): tuple(getattr(r, c) for c in cols)
-                for r in fn(docs).collect()}
-        assert full, f"{fn.__name__}: fixture produced no pairs"
-        # candidates: every other full pair + a planted non-sharing pair
-        kept = sorted(full)[::2]
-        cands = spark.createDataFrame(
-            kept + [(-1, -2)], "doc_a LONG, doc_b LONG"
-        )
-        scoped = {(r.doc_a, r.doc_b): tuple(getattr(r, c) for c in cols)
-                  for r in fn(docs, candidates=cands).collect()}
-        assert scoped == {p: full[p] for p in kept}, fn.__name__
-
-
 def test_lsh_screened_jaccard_agrees_with_minhash_on_planted_dups(spark):
     """The composed screen+verify entry must report the planted
     high-similarity pairs the LSH family's recall contract covers:

@@ -16,6 +16,7 @@ Three contracts:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from apd_map_reduce_spark.plans.layout import spread_by
@@ -130,3 +131,62 @@ def test_scan_splits_estimate_matches_probe_decision(spark):
     # scale-correct: an 11 GB / 100-file input estimates >= target
     # splits, so the guard no-ops without any planning pass
     assert scan_splits_estimate(spark, 11 << 30, 100, target) >= target
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [
+        ("128m", 128 << 20),
+        ("128mb", 128 << 20),
+        ("512MB", 512 << 20),
+        ("1g", 1 << 30),
+        ("1gb", 1 << 30),
+        ("4194304b", 4194304),
+        ("4194304", 4194304),
+        ("64k", 64 << 10),
+        ("64kb", 64 << 10),
+        ("2t", 2 << 40),
+        ("2tb", 2 << 40),
+        ("1p", 1 << 50),
+        ("1pb", 1 << 50),
+    ],
+)
+def test_parse_bytes_accepts_spark_byte_grammar(text, expected):
+    """Every suffix Spark's byte-conf parser accepts (single letter or
+    two-letter `*b` form, or none) — a `SPARK_GRAFT_MAX_PARTITION_BYTES`
+    of `512mb` must not raise during query construction."""
+    from apd_map_reduce_spark.plans.layout import _parse_bytes
+
+    assert _parse_bytes(text) == expected
+
+
+@pytest.mark.parametrize("text", ["", "mb", "1.5g", "12q", "-1m"])
+def test_parse_bytes_rejects_non_byte_strings(text):
+    from apd_map_reduce_spark.plans.layout import _parse_bytes
+
+    with pytest.raises(ValueError):
+        _parse_bytes(text)
+
+
+def test_table_input_size_walks_partitioned_directories(spark, tmp_path):
+    """A `partitionBy` write holds its parquet files only in
+    `key=value/` subdirectories; the size walk must recurse into them
+    and skip `_`/`.` entries (_SUCCESS, .crc) at every level."""
+    import os
+
+    from apd_map_reduce_spark.sources.tables import table_input_size
+
+    df = spark.range(0, 200).select(
+        F.col("id"), (F.col("id") % 3).alias("part")
+    )
+    df.write.partitionBy("part").parquet(str(tmp_path / "t.parquet"))
+
+    data = []
+    for root, dirs, files in os.walk(tmp_path / "t.parquet"):
+        data += [
+            os.path.getsize(os.path.join(root, f))
+            for f in files
+            if f.endswith(".parquet")
+        ]
+    assert len(data) >= 3, "fixture must spread files over partition dirs"
+    assert table_input_size(str(tmp_path), "t") == (sum(data), len(data))
