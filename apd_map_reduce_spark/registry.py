@@ -168,39 +168,6 @@ def _interleave(families: list[list[QueryDef]]) -> list[QueryDef]:
 ROUND = 13
 _GATE_WINDOW = 49  # driver window (50) minus the pinned flagship
 
-# Round 9 closes the cumulative-gate story (r8 verdict directive #1):
-# these 17 queries are exactly the registry entries that appeared in
-# NONE of the CORRECTNESS_r01..r08 driver windows (set-difference over
-# those artifacts; scripts/check_rotation_coverage.py re-derives it).
-# They are NOT adjacent in rotation order — the two ANN audits sit 100+
-# positions from the events/stats tail — so no single 49-wide rotation
-# window covers them. The r9 window therefore hoists them to positions
-# 1-17; the remaining 32 slots continue the normal rotation. From r10
-# on the plain rotation resumes with every query driver-hashed at least
-# once.
-_NEVER_DRIVER_HASHED_R9 = frozenset(
-    {
-        "q19_discounted_revenue",
-        "events_funnel_timeout",
-        "events_sequence_match",
-        "events_error_bursts",
-        "full_outer_reconcile",
-        "events_locf_fill",
-        "window_percent_rank",
-        "stats_regression",
-        "stats_mad_prices",
-        "stats_winsorized_prices",
-        "events_session_window_builtin",
-        "sql_revenue_by_nation_year",
-        "events_variant_extract",
-        "orders_open_backlog",
-        "stats_corr_matrix",
-        "ann_ivf_recall_audit",
-        "ann_lsh_recall_audit",
-    }
-)
-
-
 # Queries ADDED in the current round (standing policy, the r9 closing
 # mechanism generalized): a new registry entry has no prior driver hash
 # by construction, so it is hoisted to the head of the gate window and
@@ -216,9 +183,8 @@ def _rotate(qs: list[QueryDef]) -> list[QueryDef]:
     head, rest = qs[0], qs[1:]
     off = ((ROUND - 6) * _GATE_WINDOW) % len(rest) if rest else 0
     rotated = rest[off:] + rest[:off]
-    hoist_names = _NEVER_DRIVER_HASHED_R9 if ROUND == 9 else _NEW_IN_ROUND
-    hoist = [q for q in rotated if q.name in hoist_names]
-    rotated = hoist + [q for q in rotated if q.name not in hoist_names]
+    hoist = [q for q in rotated if q.name in _NEW_IN_ROUND]
+    rotated = hoist + [q for q in rotated if q.name not in _NEW_IN_ROUND]
     return [head] + rotated
 
 

@@ -132,10 +132,10 @@ def release_caches(spark: SparkSession) -> int:
     docs, candidate sets) at MEMORY_AND_DISK and do NOT unpersist —
     a builder returns a lazy DataFrame, so there is no scope inside it
     where the cache is provably done being read. The session OWNER
-    releases instead: the bench harness calls
-    ``spark.catalog.clearCache()`` between queries (bench.py), the CLI
-    releases after each query, and long-lived sessions call this hook
-    at pipeline boundaries.
+    releases instead: the timing protocol calls
+    ``spark.catalog.clearCache()`` after every run (scripts/timing.py),
+    the CLI releases after each query, and long-lived sessions call
+    this hook at pipeline boundaries.
 
     ``catalog.clearCache()`` drops the SQL relation cache (every
     DataFrame ``.cache()``/``.persist()``); the ``getPersistentRDDs``

@@ -1,9 +1,9 @@
 """Benchmark harness (driver contract + SURVEY.md §6.3 protocol).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS], warm timings (one untimed JVM/plan warmup
-pass over a trivial query, then each query timed end-to-end including
-its action), and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS], warm timings (one untimed warm pass over
+every query, then each query timed end-to-end including its action,
+min-of-3), and prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Cold-start sections (BASELINE.md's own protocol reports cold AND warm —
@@ -18,26 +18,23 @@ the first-plan compile):
     headline query once, no warmup pass (startup amortized once, the
     realistic cold-suite shape).
 Invoke `bench.py --cold-child <flagship|headline>` for the child
-workload (no output; the parent times the process).
+workload (one `RESULT` line; the parent times the process with
+scripts/timing.py::fresh).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from apd_map_reduce_spark.registry import headline_queries  # noqa: E402
 from apd_map_reduce_spark.session import get_spark  # noqa: E402
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from scripts.timing import RESULT, fresh, noop, stats, time_runs  # noqa: E402
 
 
 def _cold_child(which: str, sf_dir: str) -> None:
@@ -51,19 +48,16 @@ def _cold_child(which: str, sf_dir: str) -> None:
         qs = [q for q in qs if q.name == "corpus_inverted_index"]
         assert qs, "flagship missing from headline set"
     for q in qs:
-        _noop(q.fn(spark, sf_dir))
+        noop(q.fn(spark, sf_dir))
+    print(RESULT + "{}")
 
 
 def _measure_cold(which: str, sf_dir: str) -> float:
-    t0 = time.time()
-    subprocess.run(
-        [sys.executable, __file__, "--cold-child", which],
-        check=True,
+    _, wall = fresh(
+        [sys.executable, str(Path(__file__).resolve()), "--cold-child", which],
         env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
     )
-    return round(time.time() - t0, 3)
+    return wall
 
 
 def main() -> None:
@@ -90,20 +84,14 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm protocol (BASELINE.md): one untimed pass per query warms JIT/
-    # codegen/broadcast paths, then caches are dropped so the timed pass
-    # re-executes every plan end-to-end. Reference numbers include C++
-    # process startup; warm-vs-warm is the honest comparison (SURVEY §6.3).
-    # noop-sink write, not count(): count() lets Catalyst drop final
-    # sorts (EliminateSorts) and every projection, under-measuring
-    # queries whose cost includes the ORDER BY / projection stage.
-    # The noop sink executes the complete physical plan and discards
-    # rows executor-side (no driver materialization).
-    run = _noop
-
-    for q in headline_queries():
-        run(q.fn(spark, sf_dir))
-    spark.catalog.clearCache()
+    # Warm protocol (BASELINE.md, scripts/timing.py): one untimed pass
+    # over every query warms JIT/codegen/broadcast paths, then each
+    # query gets its timed passes. Reference numbers include C++
+    # process startup; warm-vs-warm is the honest comparison (SURVEY
+    # §6.3).
+    builds = {q.name: partial(q.fn, spark, sf_dir) for q in headline_queries()}
+    for build in builds.values():
+        time_runs(spark, build, runs=0)
 
     # Min-of-3 per query, median reported alongside: single-pass wall
     # time on this box swings far more than ±25% (identical code
@@ -115,24 +103,13 @@ def main() -> None:
     # back-comparable to every prior round's artifact); the median
     # exposes how noisy each query's passes were, so a round-over-round
     # delta can be read against the spread instead of trusted blindly.
-    # Per-query action (noop sink, full plan) and warm protocol
-    # unchanged; caches are dropped between passes so every pass
-    # rebuilds its own (they are dead weight, and letting them pile up
-    # makes later queries measure storage-eviction pressure instead of
-    # their own plan).
     PASSES = 3
-    timings: dict[str, float] = {}
-    medians: dict[str, float] = {}
-    for q in headline_queries():
-        samples: list[float] = []
-        for _ in range(PASSES):
-            t0 = time.time()
-            run(q.fn(spark, sf_dir))
-            samples.append(time.time() - t0)
-            spark.catalog.clearCache()
-        samples.sort()
-        timings[q.name] = round(samples[0], 3)
-        medians[q.name] = round(samples[len(samples) // 2], 3)
+    per_query = {
+        name: stats(time_runs(spark, build, PASSES, warm=0))
+        for name, build in builds.items()
+    }
+    timings = {name: s["min"] for name, s in per_query.items()}
+    medians = {name: s["median"] for name, s in per_query.items()}
 
     total = round(sum(timings.values()), 3)
     print(

@@ -14,15 +14,16 @@ Rather than shadow-importing one old module into the live session
 (which would have to assert every shared timed-path symbol is
 drift-free, or the timing is a chimera), this tool checks the old ref
 out into a throwaway `git worktree` and runs each variant in its own
-subprocess with sys.path pinned to its tree — the old variant is the
+fresh process with sys.path pinned to its tree — the old variant is the
 WHOLE old tree, so any ref works with zero per-symbol audits. The
 price is one JVM start per (variant, pass); all queries in the list
 share that session, so the cost amortizes across the query list.
 
-Per-child protocol (matches AB_WARM_r7 / bench.py): one untimed warm
-run per query, then --timed-runs timed runs with the cache cleared
-between, noop sink. Parent aggregates min/median per variant and the
-old/new min ratio per query.
+Both variants run the SAME current-tree child, `scripts/timing.py`
+(one untimed warm run per query, then --timed-runs timed runs with the
+cache cleared between, noop sink), so old and new are timed by the
+same code even when the old ref predates it. Parent aggregates
+min/median per variant and the old/new min ratio per query.
 """
 
 from __future__ import annotations
@@ -34,40 +35,13 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+TIMING = REPO / "scripts" / "timing.py"
+sys.path.insert(0, str(REPO))
 
-# Runs inside EACH variant's subprocess with argv = [tree, sf_dir,
-# timed_runs, q1,q2,...]; imports resolve against `tree` only. Kept
-# dependency-light (registry + session only) so it loads on any ref
-# back to the registry's introduction.
-CHILD_SRC = r"""
-import json, sys, time
-tree, sf_dir, timed_runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
-names = sys.argv[4].split(",")
-sys.path.insert(0, tree)
-from apd_map_reduce_spark.registry import QUERY_INDEX
-from apd_map_reduce_spark.session import get_spark
-spark = get_spark(app_name="ab-interleave-child")
-spark.sparkContext.setLogLevel("ERROR")
-out = {}
-for name in names:
-    q = QUERY_INDEX.get(name)
-    if q is None:
-        out[name] = None  # not in this ref's registry
-        continue
-    def run_once():
-        t0 = time.monotonic()
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.monotonic() - t0
-        spark.catalog.clearCache()
-        return round(dt, 3)
-    run_once()  # warm (untimed)
-    out[name] = [run_once() for _ in range(timed_runs)]
-print("ABCHILD " + json.dumps(out))
-"""
+from scripts.timing import fresh, stats  # noqa: E402
 
 
 def _git(*args: str) -> str:
@@ -75,38 +49,6 @@ def _git(*args: str) -> str:
         ["git", "-C", str(REPO), *args],
         capture_output=True, text=True, check=True,
     ).stdout.strip()
-
-
-def _child(
-    tree: Path,
-    sf_dir: str,
-    timed_runs: int,
-    names: list[str],
-    env_extra: dict[str, str] | None = None,
-) -> dict:
-    env = dict(os.environ)
-    env.update(env_extra or {})
-    # Per-variant scratch cwd: Spark's cwd-relative droppings
-    # (spark-warehouse, derby.log, metastore_db) land in /tmp, not in
-    # the live working tree (ADVICE r10). sys.path is pinned to `tree`
-    # inside CHILD_SRC, so cwd carries no import meaning.
-    scratch = Path(tempfile.mkdtemp(prefix=f"ab_{tree.name}_"))
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-c", CHILD_SRC, str(tree), sf_dir,
-             str(timed_runs), ",".join(names)],
-            capture_output=True, text=True, cwd=str(scratch), env=env,
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    for line in proc.stdout.splitlines():
-        if line.startswith("ABCHILD "):
-            return json.loads(line[len("ABCHILD "):])
-    raise RuntimeError(
-        f"child in {tree} produced no result line\n"
-        f"--- stdout ---\n{proc.stdout[-2000:]}\n"
-        f"--- stderr ---\n{proc.stderr[-2000:]}"
-    )
 
 
 def main() -> None:
@@ -147,7 +89,7 @@ def main() -> None:
     if args.ref:
         old_sha = _git("rev-parse", "--short", args.ref)
         old_label = f"{args.ref} ({old_sha})"
-        wt = Path(f"/tmp/ab_interleave_wt_{os.getpid()}")
+        wt = Path(tempfile.mkdtemp(prefix="ab_interleave_wt_"))
         _git("worktree", "add", "--detach", str(wt), args.ref)
     else:
         old_sha = head_sha
@@ -158,8 +100,12 @@ def main() -> None:
         }
         for p in range(args.passes):
             for label, tree in (("old", wt or REPO), ("new", REPO)):
-                got = _child(tree, args.sf_dir, args.timed_runs, names,
-                             env_extra=env_old if label == "old" else None)
+                env = {**os.environ, **(env_old if label == "old" else {})}
+                got, _ = fresh(
+                    [sys.executable, str(TIMING), str(tree), args.sf_dir,
+                     str(args.timed_runs), ",".join(names)],
+                    env=env,
+                )
                 for n in names:
                     if got.get(n) is None:
                         raise RuntimeError(
@@ -170,10 +116,6 @@ def main() -> None:
                 print(f"pass {p + 1}/{args.passes} {label}: "
                       + " ".join(f"{n}={got[n]}" for n in names),
                       file=sys.stderr)
-
-        def stats(v: list[float]) -> dict:
-            return {"samples": v, "min": min(v),
-                    "median": sorted(v)[len(v) // 2]}
 
         out = {
             "protocol": {

@@ -3,12 +3,12 @@ current registry window closes it.
 
 The external correctness gate hashes the first 50 registry entries each
 round and records them in CORRECTNESS_r{NN}.json. The registry rotates
-that window per round (registry.ROUND) so the gate is cumulative; round
-9 additionally hoists the still-never-hashed queries into the window
-(registry._NEVER_DRIVER_HASHED_R9). This script recomputes, from the
+that window per round (registry.ROUND) so the gate is cumulative, and
+hoists the current round's new queries (registry._NEW_IN_ROUND) into
+the window. This script recomputes, from the
 committed artifacts alone, (a) which queries have never appeared in any
 driver window and (b) whether the CURRENT window covers all of them —
-so the hard-coded hoist list is auditable rather than trusted.
+so a query left outside every window is caught, not trusted away.
 
 Usage: python scripts/check_rotation_coverage.py
 Exit 0 iff every never-hashed query is inside the current 50-entry
@@ -48,16 +48,6 @@ def main() -> int:
     print(f"registry: {len(all_names)} queries; ROUND={registry.ROUND}")
     print(f"driver-hashed cumulatively: {len(seen & set(all_names))}")
     print(f"never driver-hashed: {len(never)}: {never}")
-
-    if registry.ROUND == 9:
-        hoist = set(registry._NEVER_DRIVER_HASHED_R9)
-        if hoist != set(never):
-            print(
-                "MISMATCH between registry._NEVER_DRIVER_HASHED_R9 and the "
-                f"artifact-derived set: hardcoded-only={sorted(hoist - set(never))} "
-                f"derived-only={sorted(set(never) - hoist)}"
-            )
-            return 1
 
     if missing:
         print(f"FAIL: {len(missing)} never-hashed queries OUTSIDE the window: {missing}")

@@ -27,12 +27,13 @@ Usage: python scripts/cold_split.py [out_json] [--reps 5]
 from __future__ import annotations
 
 import json
-import subprocess
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from scripts.timing import fresh  # noqa: E402
 
 CHILD_SRC = r"""
 import json, sys, time
@@ -47,7 +48,7 @@ spark.sparkContext.setLogLevel("ERROR")
 t2 = time.monotonic()
 rows = e.entry(spark).collect()
 t3 = time.monotonic()
-print("COLDSPLIT " + json.dumps({
+print("RESULT " + json.dumps({
     "imports": round(t1 - t0, 3),
     "session": round(t2 - t1, 3),
     "first_run": round(t3 - t2, 3),
@@ -67,25 +68,13 @@ def main() -> int:
 
     runs = []
     for _ in range(reps):
-        t0 = time.monotonic()
-        proc = subprocess.run(
-            [sys.executable, "-c", CHILD_SRC, str(REPO)],
-            capture_output=True, text=True, cwd="/tmp",
+        rec, total = fresh([sys.executable, "-c", CHILD_SRC, str(REPO)])
+        rec["total"] = total
+        rec["interp_boot"] = round(
+            total - rec["imports"] - rec["session"] - rec["first_run"], 3
         )
-        total = round(time.monotonic() - t0, 3)
-        for line in proc.stdout.splitlines():
-            if line.startswith("COLDSPLIT "):
-                rec = json.loads(line[len("COLDSPLIT "):])
-                rec["total"] = total
-                rec["interp_boot"] = round(
-                    total - rec["imports"] - rec["session"] - rec["first_run"], 3
-                )
-                runs.append(rec)
-                print(rec, flush=True)
-                break
-        else:
-            print(f"child failed:\n{proc.stderr[-2000:]}", file=sys.stderr)
-            return 1
+        runs.append(rec)
+        print(rec, flush=True)
 
     def stat(key):
         vals = sorted(r[key] for r in runs)

@@ -144,8 +144,9 @@ def main() -> None:
         "prove the cache is done being read. The SESSION OWNER releases",
         "instead — `apd_map_reduce_spark.session.release_caches(spark)`",
         "(SQL-cache clear + a `getPersistentRDDs` sweep for RDD-level",
-        "leftovers). The bench harness calls `spark.catalog.clearCache()`",
-        "between queries, the `query` CLI releases after each run, and a",
+        "leftovers). The timing protocol (`scripts/timing.py`) calls",
+        "`spark.catalog.clearCache()` after every run, the `query` CLI",
+        "releases after each run, and a",
         "long-lived session should call the hook at pipeline boundaries.",
         "`tests/test_cache_release.py` asserts the hook leaves zero",
         "persistent RDDs behind after a cache-heavy registry query.",

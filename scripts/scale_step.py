@@ -7,7 +7,8 @@ per 10x step alongside output row counts (pair counts legitimately
 grow faster than linear when the data's duplicate density grows —
 interpret time growth against result growth, not in isolation).
 Protocol of record: warm pass, then min-of-3 noop-sink runs with
-caches cleared between passes (same as bench.py).
+caches cleared between passes (scripts/timing.py::time_runs, as
+bench.py).
 
 A FOURTH decade (sf1: 10x documents / 4x embeddings, mirroring the
 previous step's per-table ratios) is generated on demand by
@@ -23,21 +24,23 @@ thing their docstrings tell you not to run unsampled.
 Usage: python scripts/scale_step.py [out_json] [--no-sf1] [--sf10] [--only q1,q2]
 (--only restricts to a comma-separated subset — partial sweeps for new
 operators; merge into the committed artifact with the full run.)
+The payload is printed as one `RESULT {json}` line — the line that
+--isolate parses from its fresh per-query children.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import subprocess
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from apd_map_reduce_spark.registry import QUERY_INDEX  # noqa: E402
 from apd_map_reduce_spark.session import get_spark  # noqa: E402
+from scripts.timing import RESULT, fresh, time_runs  # noqa: E402
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 SF1_DIR = Path(__file__).resolve().parent.parent / ".scale" / "sf1"
@@ -141,6 +144,28 @@ SCALE_PATH = [
 PASSES = 3
 
 
+def _sweep(names: list[str], sf_dirs: list[str]) -> dict[str, dict]:
+    spark = get_spark(app_name="scale-step")
+    spark.sparkContext.setLogLevel("ERROR")
+    results: dict[str, dict] = {}
+    for name in names:
+        q = QUERY_INDEX[name]
+        per_sf: dict[str, dict] = {}
+        for sf_dir in sf_dirs:
+            sf = sf_dir.rsplit("sf", 1)[-1]
+            rows = q.fn(spark, sf_dir).count()
+            best = min(time_runs(spark, partial(q.fn, spark, sf_dir), PASSES))
+            per_sf[sf] = {"sec": best, "rows": rows}
+        sfs = [d.rsplit("sf", 1)[-1] for d in sf_dirs]
+        growth = [
+            round(per_sf[sfs[i + 1]]["sec"] / per_sf[sfs[i]]["sec"], 2)
+            for i in range(len(sfs) - 1)
+        ]
+        results[name] = {"per_sf": per_sf, "time_growth_per_10x": growth}
+        print(f"{name}: {per_sf} growth {growth}")
+    return results
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     with_sf1 = "--no-sf1" not in args
@@ -205,69 +230,21 @@ def main() -> None:
         # and protocol) — deep-session JVM state / sustained box load
         # is indistinguishable after the fact, so the artifact-of-
         # record sweep removes the confound structurally.
-        merged: dict[str, dict] = {}
-        # Per-PID path: two concurrent --isolate invocations must not
-        # round-trip through the same file.
-        iso_path = f"/tmp/scale_step_isolated.{os.getpid()}.json"
-        try:
-            for name in names:
-                sub_args = [sys.executable, str(Path(__file__).resolve()),
-                            iso_path, "--only", name]
-                if not with_sf1:
-                    sub_args.append("--no-sf1")
-                if with_sf10:
-                    sub_args.append("--sf10")
-                subprocess.run(sub_args, check=True)
-                with open(iso_path, encoding="utf-8") as fh:
-                    merged.update(json.load(fh)["queries"])
-        finally:
-            # Guarded: empty --only list never created the file, and a
-            # failed subprocess must not leak the temp file (ADVICE r10).
-            if os.path.exists(iso_path):
-                os.unlink(iso_path)
-        payload = {
-            "protocol": "warm + min-of-3 noop, caches cleared; fresh JVM per query (--isolate)",
-            "queries": merged,
-        }
-        print(json.dumps(payload))
-        if out_path:
-            with open(out_path, "w", encoding="utf-8") as fh:
-                json.dump(payload, fh, indent=1)
-            print(f"wrote {out_path}")
-        return
+        flags = (["--no-sf1"] if not with_sf1 else []) + (["--sf10"] if with_sf10 else [])
+        results = {}
+        for name in names:
+            child, _ = fresh(
+                [sys.executable, str(Path(__file__).resolve()), "--only", name, *flags]
+            )
+            results.update(child["queries"])
+            print(f"{name}: {child['queries'][name]}")
+        protocol = "warm + min-of-3 noop, caches cleared; fresh JVM per query (--isolate)"
+    else:
+        results = _sweep(names, sf_dirs)
+        protocol = "warm + min-of-3 noop, caches cleared"
 
-    spark = get_spark(app_name="scale-step")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    results: dict[str, dict] = {}
-    for name in names:
-        q = QUERY_INDEX[name]
-        per_sf: dict[str, dict] = {}
-        for sf_dir in sf_dirs:
-            sf = sf_dir.rsplit("sf", 1)[-1]
-            rows = q.fn(spark, sf_dir).count()
-            run(q.fn(spark, sf_dir))  # warm
-            spark.catalog.clearCache()
-            best = float("inf")
-            for _ in range(PASSES):
-                t0 = time.time()
-                run(q.fn(spark, sf_dir))
-                best = min(best, time.time() - t0)
-                spark.catalog.clearCache()
-            per_sf[sf] = {"sec": round(best, 3), "rows": rows}
-        sfs = [d.rsplit("sf", 1)[-1] for d in sf_dirs]
-        growth = [
-            round(per_sf[sfs[i + 1]]["sec"] / per_sf[sfs[i]]["sec"], 2)
-            for i in range(len(sfs) - 1)
-        ]
-        results[name] = {"per_sf": per_sf, "time_growth_per_10x": growth}
-        print(f"{name}: {per_sf} growth {growth}")
-
-    payload = {"protocol": "warm + min-of-3 noop, caches cleared", "queries": results}
-    print(json.dumps(payload))
+    payload = {"protocol": protocol, "queries": results}
+    print(RESULT + json.dumps(payload))
     if out_path:
         with open(out_path, "w", encoding="utf-8") as fh:
             json.dump(payload, fh, indent=1)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from apd_map_reduce_spark.operators.components import connected_components, dup_groups
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -32,6 +34,34 @@ def test_components_match_union_find(spark):
     assert got == uf_reference(pairs)
     # chain 1-2-3-10-11 collapses to min label 1 despite diameter > 1
     assert got[11] == 1 and got[23] == 20
+
+
+@pytest.mark.parametrize(
+    "pairs, want",
+    [
+        ([], {}),
+        ([(1, 1), (5, 5)], {1: 1, 5: 5}),
+        ([(1, 2)], {1: 1, 2: 1}),
+    ],
+    ids=["empty", "self_pairs", "single_edge"],
+)
+def test_components_converge_at_max_iter_one(spark, pairs, want):
+    # At most one label-changing round: the confirming round that sees
+    # no change is not charged to max_iter.
+    df = spark.createDataFrame(pairs, "doc_a LONG, doc_b LONG")
+    got = {r.doc_id: r.component for r in connected_components(df, max_iter=1).collect()}
+    assert got == want
+
+
+def test_components_raise_when_labels_change_past_max_iter(spark):
+    # A 16-node path: round 1 (hop + pointer jump) moves node k to k-2,
+    # so round 2 still changes labels and max_iter=1 must raise.
+    pairs = [(k, k + 1) for k in range(1, 16)]
+    df = spark.createDataFrame(pairs, "doc_a LONG, doc_b LONG")
+    with pytest.raises(RuntimeError, match="still changing"):
+        connected_components(df, max_iter=1)
+    got = {r.doc_id: r.component for r in connected_components(df).collect()}
+    assert got == uf_reference(pairs)
 
 
 def test_dup_groups_on_documents(spark):

@@ -1,9 +1,8 @@
-"""The ROUND=9 closing-rotation contract (r8 verdict directive #1).
+"""The cumulative gate-window coverage contract.
 
-The hoist list in ``registry._NEVER_DRIVER_HASHED_R9`` is hard-coded;
-these tests re-derive it from the committed CORRECTNESS_r* artifacts so
-a stale or typo'd list fails CI rather than silently shipping a window
-that misses a query.
+These tests re-derive the never-hashed set from the committed
+CORRECTNESS_r* artifacts so a stale ``registry._NEW_IN_ROUND`` fails CI
+rather than silently shipping a window that misses a query.
 """
 
 from __future__ import annotations
@@ -16,18 +15,14 @@ def test_hoist_list_matches_artifacts():
     seen = driver_hashed_names()
     all_names = [q.name for q in registry.ALL_QUERIES]
     derived_never = {n for n in all_names if n not in seen}
-    if registry.ROUND == 9:
-        assert set(registry._NEVER_DRIVER_HASHED_R9) == derived_never
-    else:
-        # From r10 on cumulative coverage is closed (CORRECTNESS_r09
-        # included): the only queries allowed to lack a driver hash
-        # are the ones ADDED in the current round, which the registry
-        # hoists into the gate window (checked by the test below) so
-        # they are hashed the round they land.
-        assert derived_never <= set(registry._NEW_IN_ROUND), (
-            f"never-driver-hashed queries that are not new this round: "
-            f"{derived_never - set(registry._NEW_IN_ROUND)}"
-        )
+    # Cumulative coverage is closed (CORRECTNESS_r09 included): the only
+    # queries allowed to lack a gate hash are the ones ADDED in the
+    # current round, which the registry hoists into the gate window
+    # (checked by the test below) so they are hashed the round they land.
+    assert derived_never <= set(registry._NEW_IN_ROUND), (
+        f"never-hashed queries that are not new this round: "
+        f"{derived_never - set(registry._NEW_IN_ROUND)}"
+    )
 
 
 def test_window_covers_never_hashed():
