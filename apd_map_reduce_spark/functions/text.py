@@ -1,12 +1,26 @@
-"""Scalar text functions (reference P1-P5, SURVEY.md §2.2).
+"""Scalar text functions (reference P1-P5, SURVEY.md §2.2) — the one
+home of the reference word contract and of the 60-bit md5 hash.
 
 The reference's entire scalar surface is word normalization
 (`tema1a/src/main.cpp:31-39`: strip non-alphabetic bytes, lowercase,
-ASCII-only under the default C locale) plus trivial filters. Encoded
-here as Column expressions — JVM-side, inside whole-stage codegen;
-no Python UDFs.
+ASCII-only under the default C locale) plus trivial filters. The repo
+speaks it in three dialects, each defined here once:
+
+  contract            Spark Column            DuckDB SQL     Python
+  normalized tokens   tokenize_normalized     TOKENS_SQL     tokenize_normalized_py
+  whitespace tokens   ws_token_count          WS_COUNT_SQL   —
+  60-bit md5 hash     hash60                  hash60_sql     hash60_py
+
+The Spark forms are JVM-side Column expressions inside whole-stage
+codegen — no Python UDFs. The SQL forms are what every DuckDB oracle
+interpolates; the Python forms serve UDTF/pandas twins and driver-side
+constants.
 
 Semantics pinned by the goldens (SURVEY.md §5.2):
+  * Whitespace is C `isspace` in the C locale (`operator>>`), which is
+    Java's `\\s`: exactly [ \\t\\n\\x0B\\f\\r]. RE2's `\\s` (DuckDB)
+    lacks \\x0B and Python's str `\\s` is unicode-aware (NBSP, \\x1c-\\x1f
+    …), so the SQL and Python twins spell the class out.
   * ASCII classes only (`[^A-Za-z]`), NOT ``\\p{L}`` — multibyte UTF-8
     characters are deleted, not transliterated.
   * ``Don't`` → ``dont``, ``look-out`` → ``lookout``, ``foo123`` → ``foo``,
@@ -15,12 +29,18 @@ Semantics pinned by the goldens (SURVEY.md §5.2):
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ASCII-anchored on purpose; see module docstring.
 NON_ALPHA = "[^A-Za-z]"
-WHITESPACE = "\\s+"
+WHITESPACE = "\\s+"  # Java regex: \s is already the ASCII isspace class
+WHITESPACE_SQL = "[ \\t\\n\\v\\f\\r]+"  # RE2 spelling of the same class
+JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")  # Python spelling of the same class
+_NON_ALPHA_RE = re.compile(NON_ALPHA)
 
 
 def null_safe_size(arr: Column) -> Column:
@@ -60,8 +80,48 @@ def tokenize_normalized(col: Column | str) -> Column:
 
     All-JVM: split → transform(lower∘regexp_replace) → filter.
     """
-    toks = tokenize(col)
-    return F.filter(
-        F.transform(toks, lambda t: F.lower(F.regexp_replace(t, NON_ALPHA, ""))),
-        lambda w: w != "",
-    )
+    return F.filter(F.transform(tokenize(col), normalize_word), lambda w: w != "")
+
+
+def ws_token_count(col: Column | str) -> Column:
+    """Whitespace-token count of the trimmed text as a long (NULL text →
+    NULL). Counts raw tokens, before normalization drops any."""
+    c = F.col(col) if isinstance(col, str) else col
+    return null_safe_size(F.split(F.trim(c), WHITESPACE)).cast("long")
+
+
+def hash60(col: Column) -> Column:
+    """First 15 hex chars of md5 → bigint (60 bits, always positive)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+# --- DuckDB twins (oracle SQL over a `text` column) ------------------------
+
+TOKENS_SQL = (
+    f"list_filter(list_transform(string_split_regex(text, '{WHITESPACE_SQL}'), "
+    "t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')"
+)
+WS_COUNT_SQL = f"len(string_split_regex(trim(text), '{WHITESPACE_SQL}'))"
+
+
+def hash60_sql(expr: str) -> str:
+    """`hash60` as DuckDB SQL over the string expression `expr`."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+
+
+# --- Python twins ------------------------------------------------------------
+
+def tokenize_normalized_py(text: str) -> list[str]:
+    """`tokenize_normalized` for one Python string — pinned by tests to
+    the JVM expression token-for-token."""
+    out = []
+    for raw in JAVA_WS.split(text):
+        w = _NON_ALPHA_RE.sub("", raw).lower()
+        if w:
+            out.append(w)
+    return out
+
+
+def hash60_py(s: str) -> int:
+    """`hash60` of one Python string (md5 over its UTF-8 bytes)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)

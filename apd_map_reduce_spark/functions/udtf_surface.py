@@ -7,16 +7,16 @@ Arrow-batched UDFs instead. The UDTF exists for the cases where a
 user genuinely needs per-row Python generator logic with a table
 output — and as the lateral-join API demonstration.
 
-`tokenize_positions_udtf` is semantics-identical to the JVM path
-`posexplode(normalized_tokens())` (reference P1/P2 rules), asserted by
-tests/test_udtf.py.
+`TokenizePositions` is semantics-identical to the JVM path
+`posexplode(tokenize_normalized("text"))` (reference P1/P2 rules): both
+come from functions/text.py, and tests/test_udtf.py asserts it.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql.functions import udtf
+
+from apd_map_reduce_spark.functions.text import tokenize_normalized_py
 
 
 @udtf(returnType="word: string, pos: int")
@@ -29,12 +29,8 @@ class TokenizePositions:
     def eval(self, text: str):  # noqa: D102
         if text is None:
             return
-        pos = 0
-        for raw in re.split(r"\s+", text):
-            w = re.sub(r"[^A-Za-z]", "", raw).lower()
-            if w:
-                pos += 1
-                yield w, pos
+        for pos, w in enumerate(tokenize_normalized_py(text), 1):
+            yield w, pos
 
 
 def register_udtfs(spark) -> None:

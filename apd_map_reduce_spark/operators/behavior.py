@@ -67,25 +67,22 @@ def user_behavior_features(events: DataFrame) -> DataFrame:
 
 def fingerprint_pandas(docs: DataFrame) -> DataFrame:
     """Scalar @pandas_udf flavor: the reference P1/P2 normalization
-    re-implemented vectorized in pandas, fingerprinted like
+    run in the Python worker (`tokenize_normalized_py`), fingerprinted like
     textstats.doc_fingerprint. Dogfooding: its oracle is the SAME SQL
     as the JVM-expression fingerprint, so the Python and JVM
     normalization paths are proven equivalent by the gate."""
-    import re
-
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
+    from apd_map_reduce_spark.functions.text import tokenize_normalized_py
+
     @pandas_udf("string")
     def _norm(text: pd.Series) -> pd.Series:
-        def norm_one(t: str) -> str:
-            toks = re.split(r"\s+", t)
-            cleaned = [re.sub("[^A-Za-z]", "", x).lower() for x in toks]
-            return " ".join(w for w in cleaned if w)
-
         # NULL text → NULL fingerprint (the JVM twin's md5(NULL)); a
-        # plain .map would crash re.split on None.
-        return text.map(norm_one, na_action="ignore")
+        # plain .map would crash the tokenizer on None.
+        return text.map(
+            lambda t: " ".join(tokenize_normalized_py(t)), na_action="ignore"
+        )
 
     normalized = _norm(F.col("text"))
     return docs.select(

@@ -25,8 +25,6 @@ against a static DuckDB oracle):
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,7 +32,7 @@ from apd_map_reduce_spark.functions.embeddings import (
     valid_embeddings,
     valid_embeddings_sql,
 )
-
+from apd_map_reduce_spark.functions.text import hash60_py
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -66,7 +64,7 @@ def init_centroids(k: int = K, dim: int = DIM) -> list[tuple[int, list[float]]]:
     for c in range(k):
         row = []
         for d in range(dim):
-            h = int(hashlib.md5(f"kmeans:{c}:{d}".encode()).hexdigest()[:15], 16)
+            h = hash60_py(f"kmeans:{c}:{d}")
             row.append(round((h / float(1 << 60)) * 2.0 - 1.0, 6))
         cents.append((c, row))
     return cents
@@ -214,9 +212,7 @@ def pq_codebooks(
         for c in range(k):
             row = []
             for d in range(sub):
-                h = int(
-                    hashlib.md5(f"pq:{mi}:{c}:{d}".encode()).hexdigest()[:15], 16
-                )
+                h = hash60_py(f"pq:{mi}:{c}:{d}")
                 row.append(round((h / float(1 << 60)) * 2.0 - 1.0, 6))
             book.append((c, row))
         books.append(book)

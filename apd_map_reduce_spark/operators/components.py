@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apd_map_reduce_spark.functions.text import TOKENS_SQL, tokenize_normalized
+from apd_map_reduce_spark.plans.layout import spread
+
 
 def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """pairs(doc_a, doc_b) undirected → DataFrame[doc_id, component]
@@ -226,18 +229,12 @@ def canonical_selection(
     relation — pass it when the caller already ran the closure (the
     component computation is an iterative driver loop Catalyst cannot
     deduplicate across two calls)."""
-    from pyspark.sql.window import Window
-
-    from apd_map_reduce_spark.operators.dedup import normalized_tokens
-
     if groups is None:
         groups = dup_groups(docs, threshold=threshold)
-    from apd_map_reduce_spark.plans.layout import spread
-
     # spread() first (dedup-family rule): the tokenizer is per-row CPU
     # and a low-split scan would serialize it into one task.
     ntok = spread(docs).select(
-        "doc_id", F.size(normalized_tokens()).cast("long").alias("n_tokens")
+        "doc_id", F.size(tokenize_normalized("text")).cast("long").alias("n_tokens")
     )
     w = Window.partitionBy("component").orderBy(
         F.desc("n_tokens"), F.asc("doc_id")
@@ -256,8 +253,6 @@ def canonical_selection(
 
 
 def _canonical_selection_oracle(threshold: float = 0.5) -> str:
-    from apd_map_reduce_spark.operators.dedup import _TOKENS_SQL
-
     return f"""
 WITH ranked AS (
   SELECT g.component, g.group_size, g.doc_id, n.n_tokens,
@@ -266,7 +261,7 @@ WITH ranked AS (
          ) AS rn
   FROM ({_dup_groups_oracle(threshold)}) g
   JOIN (
-    SELECT doc_id, CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens FROM documents
+    SELECT doc_id, CAST(len({TOKENS_SQL}) AS BIGINT) AS n_tokens FROM documents
   ) n USING (doc_id)
 )
 SELECT component, group_size, doc_id AS keep_doc_id, n_tokens

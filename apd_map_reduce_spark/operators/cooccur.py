@@ -37,8 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apd_map_reduce_spark.operators.dedup import _TOKENS_SQL, normalized_tokens
-from apd_map_reduce_spark.functions.text import null_safe_size
+from apd_map_reduce_spark.functions.text import (
+    TOKENS_SQL,
+    null_safe_size,
+    tokenize_normalized,
+)
 from apd_map_reduce_spark.plans.layout import (
     explode_nonnull,
     posexplode_nonnull,
@@ -63,7 +66,7 @@ def _positions(n_expr: Column) -> Column:
 
 def _tokens_rel(docs: DataFrame) -> DataFrame:
     """(doc_id, ts) with ts = P1/P2-normalized token array."""
-    return spread(docs).select("doc_id", normalized_tokens().alias("ts"))
+    return spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
 
 
 def _offset_pairs(j: int) -> Column:
@@ -141,7 +144,7 @@ def cooccurrence_pmi(
 
 
 _PMI_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 offsets AS (SELECT unnest(generate_series(1, {COOCCUR_WINDOW})) AS j),
 pidx AS (
   SELECT ts, j, unnest(generate_series(1, greatest(len(ts) - j, 0))) AS i
@@ -202,7 +205,7 @@ def _phrase_oracle(phrase: tuple[str, ...] = PHRASE) -> str:
         f"ts[i+{k}] = '{w}'" for k, w in enumerate(phrase)
     )
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 hits AS (
   SELECT doc_id,
          list_filter(generate_series(1, greatest(len(ts) - {n - 1}, 0)),
@@ -236,7 +239,7 @@ def positional_index(docs: DataFrame) -> DataFrame:
 
 
 _POSITIONAL_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 idx AS (
   SELECT doc_id, ts, unnest(generate_series(1, len(ts))) AS i FROM toks
 ),
@@ -278,7 +281,7 @@ def delta_postings(docs: DataFrame) -> DataFrame:
 
 
 _DELTA_POSTINGS_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 ids AS (SELECT DISTINCT doc_id, unnest(ts) AS word FROM toks),
 g AS (
   SELECT word, doc_id,
@@ -361,7 +364,7 @@ def sharded_positional_index(
 
 def _sharded_positional_oracle(block: int = POSTING_SHARD_BLOCK) -> str:
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 idx AS (
   SELECT doc_id, ts, unnest(generate_series(1, len(ts))) AS i FROM toks
 ),
@@ -411,7 +414,7 @@ def sharded_delta_postings(
 
 def _sharded_delta_oracle(block: int = POSTING_SHARD_BLOCK) -> str:
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 ids AS (SELECT DISTINCT doc_id, unnest(ts) AS word FROM toks),
 g AS (
   SELECT word, doc_id, doc_id // {block} AS shard_id,
@@ -464,7 +467,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
 
 
 _TFIDF_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 tok AS (SELECT doc_id, unnest(ts) AS term FROM toks),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
 dfr AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -514,7 +517,7 @@ def bm25_search(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY, k: int = B
     (N, total_tokens) scalars, once for the postings path) — in a
     standing deployment those corpus statistics live in the index
     metadata and only the postings pass remains."""
-    base = spread(docs).select("doc_id", normalized_tokens().alias("ts"))
+    base = spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
     # total_tokens: null_safe_size so a NULL-text doc contributes
     # nothing (non-ANSI size(NULL) is -1; the oracle's SUM skips NULL).
     totals = base.agg(
@@ -575,7 +578,7 @@ def _bm25_oracle(terms: tuple[str, ...] = BM25_QUERY, k: int = BM25_TOP_K) -> st
     k1 = BM25_K1
     b = BM25_B
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 totals AS (SELECT COUNT(*) AS n_docs, SUM(len(ts)) AS total_tokens FROM toks),
 tok AS (
   SELECT doc_id, len(ts) AS dl, unnest(ts) AS term FROM toks
@@ -646,7 +649,7 @@ def bm25_multi_search(
     identical to the single-window form because (score DESC, doc_id
     ASC) is a total order per query."""
     qset = queries.select("query_id", "term").distinct()
-    base = spread(docs).select("doc_id", normalized_tokens().alias("ts"))
+    base = spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
     # total_tokens: null_safe_size so a NULL-text doc contributes
     # nothing (non-ANSI size(NULL) is -1; the oracle's SUM skips NULL).
     totals = base.agg(
@@ -721,7 +724,7 @@ WITH qset AS (
   SELECT DISTINCT query_id::BIGINT AS query_id, term
   FROM (VALUES {values}) q(query_id, term)
 ),
-toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 totals AS (SELECT COUNT(*) AS n_docs, SUM(len(ts)) AS total_tokens FROM toks),
 tok AS (
   SELECT doc_id, len(ts) AS dl, unnest(ts) AS term FROM toks
@@ -800,7 +803,7 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
 
 
 _BIGRAM_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 idx AS (
   SELECT doc_id, ts, unnest(generate_series(1, len(ts) - 1)) AS i
   FROM toks WHERE len(ts) >= 2

@@ -3,7 +3,7 @@ large-scale training-data pipeline would need"): deterministic
 train/eval splitting, stratified sampling, and benchmark-contamination
 detection.
 
-All determinism is md5-derived (hash60, shared with operators/dedup),
+All determinism is md5-derived (`functions.text.hash60` and its SQL twin),
 so every operator has a bitwise-identical DuckDB oracle — no RNG, no
 engine-specific sampling.
 
@@ -26,18 +26,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
-
+from apd_map_reduce_spark.functions.text import (
+    TOKENS_SQL,
+    hash60,
+    hash60_sql,
+    null_safe_size,
+    tokenize_normalized,
+)
 from apd_map_reduce_spark.operators.dedup import (
     MAX_SHINGLE_DF,
     _SHINGLES_CTE,
-    _TOKENS_SQL,
     doc_shingle_hashes,
-    hash60,
-    normalized_tokens,
     stop_shingle_filter,
 )
-from apd_map_reduce_spark.functions.text import null_safe_size
+from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
 from apd_map_reduce_spark.queries.base import QueryDef, grouped_topk, two_phase_rank
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -65,7 +67,7 @@ def train_test_split_hash(docs: DataFrame, eval_pct: int = EVAL_PCT) -> DataFram
 
 
 SPLIT_ORACLE = f"""
-SELECT CASE WHEN ('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 15))::BIGINT % 100 < {EVAL_PCT}
+SELECT CASE WHEN {hash60_sql("'split:' || doc_id::VARCHAR")} % 100 < {EVAL_PCT}
             THEN 'eval' ELSE 'train' END AS split,
        lang, COUNT(*) AS n_docs
 FROM documents
@@ -104,7 +106,7 @@ WITH ranked AS (
   SELECT lang, doc_id,
          ROW_NUMBER() OVER (
            PARTITION BY lang
-           ORDER BY ('0x' || substr(md5('sample:' || doc_id::VARCHAR), 1, 15))::BIGINT ASC,
+           ORDER BY {hash60_sql("'sample:' || doc_id::VARCHAR")} ASC,
                     doc_id ASC
          ) AS rnk
   FROM documents
@@ -145,7 +147,7 @@ def weighted_sample_topk(docs: DataFrame, k: int = WEIGHTED_K) -> DataFrame:
 
 WEIGHTED_SAMPLE_ORACLE = f"""
 SELECT doc_id, n_chars + 1 AS weight,
-       ROUND(ln((('0x' || substr(md5('wsample:' || doc_id::VARCHAR), 1, 15))::BIGINT + 1)::DOUBLE
+       ROUND(ln(({hash60_sql("'wsample:' || doc_id::VARCHAR")} + 1)::DOUBLE
                 / {float(1 << 60)}) / (n_chars + 1), 9) AS sample_key
 FROM documents
 ORDER BY sample_key DESC, doc_id ASC
@@ -214,7 +216,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS) -> DataFr
 
     Scale: pure per-row explode — no shuffle; output rows ≈ tokens/C,
     so the operator is scan-bound and embarrassingly parallel."""
-    toks = normalized_tokens()
+    toks = tokenize_normalized("text")
     df = spread(docs).select("doc_id", toks.alias("ts"))
     n_chunks = F.ceil(F.size("ts") / F.lit(float(chunk_tokens))).cast("int")
     chunk = F.slice(F.col("ts"), F.col("ci") * chunk_tokens + 1, chunk_tokens)
@@ -237,8 +239,10 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS) -> DataFr
     )
 
 
-CHUNKS_ORACLE = f"""
-WITH toksq AS (SELECT doc_id, {{tokens_sql}} AS ts FROM documents),
+# shared with the UDTF twin in udtfs.py so the "same oracle" contract
+# lives in exactly one constant
+CHUNKS_ORACLE_SQL = f"""
+WITH toksq AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 nz AS (SELECT doc_id, ts FROM toksq WHERE len(ts) > 0),
 c AS (
   SELECT doc_id, ts,
@@ -253,10 +257,6 @@ SELECT doc_id, (ci + 1)::BIGINT AS chunk_idx,
          AS chunk_md5
 FROM c
 """
-
-# the fully-wired oracle — shared with the UDTF twin in udtfs.py so
-# the "same oracle" contract lives in exactly one constant
-CHUNKS_ORACLE_SQL = CHUNKS_ORACLE.format(tokens_sql=_TOKENS_SQL)
 
 
 PACK_BLOCK_DOCS = 4096  # docs per prefix-sum block (two-level scan)
@@ -298,7 +298,7 @@ def pack_token_shards(
     counts = spread(docs).select(
         "lang",
         "doc_id",
-        null_safe_size(normalized_tokens()).cast("long").alias("n_tokens"),
+        null_safe_size(tokenize_normalized("text")).cast("long").alias("n_tokens"),
         F.expr(f"doc_id div {block}").alias("blk"),
     ).cache()
     block_tot = counts.groupBy("lang", "blk").agg(
@@ -344,7 +344,7 @@ def pack_token_shards(
 
 SHARDS_ORACLE = f"""
 WITH counts AS (
-  SELECT lang, doc_id, len({{tokens_sql}})::BIGINT AS n_tokens FROM documents
+  SELECT lang, doc_id, len({TOKENS_SQL})::BIGINT AS n_tokens FROM documents
 ),
 cum AS (
   SELECT lang, doc_id, n_tokens,
@@ -378,7 +378,7 @@ _MIX_CASE = " ".join(
 )
 MIXTURE_ORACLE = f"""
 SELECT doc_id, lang FROM documents
-WHERE ('0x' || substr(md5('mix:' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000
+WHERE {hash60_sql("'mix:' || doc_id::VARCHAR")} % 1000000
       < (CASE lang {_MIX_CASE} ELSE {MIX_DEFAULT_PPM} END)
 """
 
@@ -522,7 +522,7 @@ def corpus_source_profile(docs: DataFrame) -> DataFrame:
     key (map-side partial aggregation does nearly all the work; the
     distinct-digest count rewrites to a two-level aggregate, still
     keyed by (lang, source, digest) — uniform, skew-free)."""
-    toks = normalized_tokens()
+    toks = tokenize_normalized("text")
     per_doc = spread(docs).select(
         "lang",
         "source",
@@ -558,7 +558,7 @@ def corpus_source_profile(docs: DataFrame) -> DataFrame:
 SOURCE_PROFILE_ORACLE = f"""
 WITH per_doc AS (
   SELECT lang, source, md5(text) AS digest,
-         CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens,
+         CAST(len({TOKENS_SQL}) AS BIGINT) AS n_tokens,
          CAST(n_chars AS BIGINT) AS n_chars
   FROM documents
 )
@@ -604,7 +604,7 @@ CURATION_QUERIES = [
     QueryDef(
         "pack_token_shards",
         lambda s, d: pack_token_shards(_docs(s, d)),
-        SHARDS_ORACLE.format(tokens_sql=_TOKENS_SQL),
+        SHARDS_ORACLE,
     ),
     QueryDef(
         "mixture_rebalance",

@@ -3,8 +3,8 @@ extends the reference's distinct-set aggregation A1/A2, SURVEY.md §2.4,
 to document-level near-dup semantics).
 
 All hashing is md5-based (both engines expose md5) so every operator has
-a bitwise-identical DuckDB oracle. Hash60(s) = first 15 hex chars of
-md5(s) as a 60-bit signed-safe bigint.
+a bitwise-identical DuckDB oracle: `functions.text.hash60` (first 15 hex
+chars of md5 as a 60-bit signed-safe bigint) and its SQL twin.
 
 Scale design (the part that matters at 100 TB):
   * exact dedup — hash-groupBy, one shuffle on the 128-bit digest; no
@@ -53,7 +53,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from apd_map_reduce_spark.functions.text import null_safe_size
+from apd_map_reduce_spark.functions.text import (
+    TOKENS_SQL,
+    hash60,
+    hash60_sql,
+    null_safe_size,
+    tokenize_normalized,
+)
 from apd_map_reduce_spark.plans.layout import (
     explode_nonnull,
     posexplode_nonnull,
@@ -104,32 +110,6 @@ MAX_SHINGLE_DF = 256
 
 # --- shared building blocks ------------------------------------------------
 
-def hash60(col: Column) -> Column:
-    """First 15 hex chars of md5 → bigint (60 bits, always positive)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _hash60_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
-def normalized_tokens(text_col: str = "text") -> Column:
-    """Reference P1+P2 normalization lifted to arrays (functions/text.py)."""
-    return F.filter(
-        F.transform(
-            F.split(F.col(text_col), "\\s+"),
-            lambda t: F.lower(F.regexp_replace(t, "[^A-Za-z]", "")),
-        ),
-        lambda w: w != "",
-    )
-
-
-_TOKENS_SQL = (
-    "list_filter(list_transform(string_split_regex(text, '\\s+'), "
-    "t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')"
-)
-
-
 def word_shingles(tokens: Column, n: int = 3) -> Column:
     """Word n-gram shingles (space-joined); empty when < n tokens.
 
@@ -162,11 +142,11 @@ def tokenized_docs(docs: DataFrame, keep: tuple = ("doc_id",)) -> DataFrame:
     regexp_replace) runs once per document, not once per reference.
     spread() first so the CPU-bound tokenize stage is never serialized
     by a small scan (plans/layout.py)."""
-    return spread(docs).select(*keep, normalized_tokens().alias("ts"))
+    return spread(docs).select(*keep, tokenize_normalized("text").alias("ts"))
 
 
 _SHINGLES_CTE = f"""
-toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 idx AS (
   SELECT doc_id, ts, unnest(generate_series(1, greatest(len(ts) - 2, 0))) AS i
   FROM toks
@@ -176,7 +156,7 @@ sh AS (
   FROM idx
 ),
 shh AS (
-  SELECT DISTINCT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS sh
+  SELECT DISTINCT doc_id, {hash60_sql('shingle')} AS sh
   FROM sh
 )
 """
@@ -207,12 +187,7 @@ def doc_shingle_hashes(docs: DataFrame) -> DataFrame:
     longs instead of ~20-byte strings (shuffle volume and compare cost
     both drop). Hashing is mirrored in the oracles, so semantics are
     engine-identical even in the (negligible) collision case."""
-    hashed = F.array_distinct(
-        F.transform(
-            word_shingles(F.col("ts")),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-        )
-    )
+    hashed = F.array_distinct(F.transform(word_shingles(F.col("ts")), hash60))
     return explode_nonnull(tokenized_docs(docs), ["doc_id"], hashed, "sh")
 
 
@@ -1471,7 +1446,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     One groupBy(doc) with 60 conditional sums — no bit-level explosion.
     """
     tok = (
-        explode_nonnull(spread(docs), ["doc_id"], normalized_tokens(), "token")
+        explode_nonnull(spread(docs), ["doc_id"], tokenize_normalized("text"), "token")
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("h", hash60(F.col("token")))
@@ -1500,10 +1475,10 @@ def _simhash_oracle_signature_sql() -> str:
     )
     return f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ),
 tc AS (
-  SELECT doc_id, token, COUNT(*) AS cnt, {_hash60_sql('token')} AS h
+  SELECT doc_id, token, COUNT(*) AS cnt, {hash60_sql('token')} AS h
   FROM tok GROUP BY doc_id, token
 ),
 bits AS (
@@ -1690,7 +1665,7 @@ def boilerplate_spans(
 
 
 BOILERPLATE_SPANS_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 idx AS (
   SELECT doc_id, ts,
          unnest(generate_series(1, greatest(len(ts) - {SPAN_TOKENS - 1}, 0))) AS i
@@ -1730,7 +1705,7 @@ def _dup_window_ctes(n: int, min_df: int) -> str:
     """The oracle twin of `_dup_window_relations` (CTEs toks/idx/win/
     dup), shared verbatim by both oracles."""
     span_expr = " || ' ' || ".join(f"ts[i+{j}]" for j in range(n))
-    return f"""toks AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    return f"""toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 idx AS (
   SELECT doc_id, ts,
          unnest(generate_series(1, greatest(len(ts) - {n - 1}, 0))) AS i

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apd_map_reduce_spark.functions.text import WS_COUNT_SQL
 from apd_map_reduce_spark.operators.dedup import (
     _minhash_oracle,
     dedup_exact,
@@ -85,9 +86,9 @@ keep_exact AS (
 ),
 q AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+         {WS_COUNT_SQL} AS n_tokens,
          CAST(len(regexp_extract_all(text, '[A-Za-z]+')) AS DOUBLE)
-           / GREATEST(len(string_split_regex(trim(text), '\\s+')), 1) AS alpha_token_ratio
+           / GREATEST({WS_COUNT_SQL}, 1) AS alpha_token_ratio
   FROM documents
 )
 SELECT d.doc_id, q.n_tokens, q.alpha_token_ratio

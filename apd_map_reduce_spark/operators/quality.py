@@ -25,14 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
-
-from apd_map_reduce_spark.operators.dedup import (
-    _TOKENS_SQL,
-    normalized_tokens,
-    word_shingles,
+from apd_map_reduce_spark.functions.text import (
+    TOKENS_SQL,
+    WS_COUNT_SQL,
+    tokenize_normalized,
+    ws_token_count,
 )
-from apd_map_reduce_spark.functions.text import null_safe_size
+from apd_map_reduce_spark.operators.dedup import word_shingles
+from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -68,7 +68,7 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     """
     # spread() first (dedup-family rule, plans/layout.py): never let a
     # low-split scan serialize the CPU-bound tokenize stage.
-    base = spread(docs).select("doc_id", normalized_tokens().alias("ts"))
+    base = spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
     tok = explode_nonnull(base, ["doc_id"], "ts", "tok")
     tc = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     ta = tc.groupBy("doc_id").agg(
@@ -105,7 +105,7 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
 
 
 REPETITION_ORACLE = f"""
-WITH toksq AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+WITH toksq AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
 tok AS (SELECT doc_id, unnest(ts) AS tok FROM toksq),
 tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM tok GROUP BY 1, 2),
 ta AS (
@@ -153,7 +153,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     Scale: a single narrow projection (regexp counts + integer
     comparisons), whole-stage codegen, no shuffle, prunes to
     (doc_id, text)."""
-    n_tokens = null_safe_size(F.split(F.trim(F.col("text")), "\\s+")).cast("long")
+    n_tokens = ws_token_count("text")
     n_words = F.regexp_count("text", F.lit("[A-Za-z]+")).cast("long")
     n_alpha = F.regexp_count("text", F.lit("[A-Za-z]")).cast("long")
     n_digits = F.regexp_count("text", F.lit("[0-9]")).cast("long")
@@ -192,7 +192,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
 GOPHER_ORACLE = f"""
 WITH c AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+         {WS_COUNT_SQL} AS n_tokens,
          len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
          len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
          len(regexp_extract_all(text, '[0-9]')) AS n_digits,

@@ -37,12 +37,16 @@ arithmetic on identical integer operands is engine-identical).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apd_map_reduce_spark.operators.dedup import hash60, normalized_tokens
+from apd_map_reduce_spark.functions.text import (
+    TOKENS_SQL,
+    hash60,
+    hash60_py,
+    hash60_sql,
+    tokenize_normalized,
+)
 from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table
@@ -62,10 +66,9 @@ DSIR_TARGET_LANG = "en"
 
 def _weight_int(bucket: int) -> int:
     """Deterministic md5-derived integer weight in [-1e6, 1e6] — the
-    same 60-bit md5-prefix family as dedup.hash60 / similarity._planes,
+    same 60-bit md5-prefix family as hash60 / similarity._planes,
     mirrored literally in the oracle SQL."""
-    h = int(hashlib.md5(f"qlw:{bucket}".encode()).hexdigest()[:15], 16)
-    return h % (2 * _W_SCALE + 1) - _W_SCALE
+    return hash60_py(f"qlw:{bucket}") % (2 * _W_SCALE + 1) - _W_SCALE
 
 
 def feature_weights() -> list[tuple[int, int]]:
@@ -78,7 +81,7 @@ def _bucketed_tokens(docs: DataFrame) -> DataFrame:
     hash60(token) % NB_FEATURES (hash60 is non-negative, so % == pmod
     on both engines)."""
     return explode_nonnull(
-        spread(docs), ["doc_id", "lang"], normalized_tokens(), "token"
+        spread(docs), ["doc_id", "lang"], tokenize_normalized("text"), "token"
     ).select(
         "doc_id",
         "lang",
@@ -120,20 +123,19 @@ def quality_logreg(docs: DataFrame) -> DataFrame:
 QUALITY_LOGREG_ORACLE = f"""
 WITH wts AS (
   SELECT b AS bucket,
-         ('0x' || substr(md5('qlw:' || b::VARCHAR), 1, 15))::BIGINT
+         {hash60_sql("'qlw:' || b::VARCHAR")}
            % {2 * _W_SCALE + 1} - {_W_SCALE} AS wint
   FROM (SELECT unnest(range({NB_FEATURES})) AS b)
 ),
 tok AS (
   SELECT doc_id,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> ''))
+         unnest({TOKENS_SQL})
            AS token
   FROM documents
 ),
 bt AS (
   SELECT doc_id,
-         ('0x' || substr(md5(token), 1, 15))::BIGINT % {NB_FEATURES} AS bucket
+         {hash60_sql('token')} % {NB_FEATURES} AS bucket
   FROM tok
 ),
 agg AS (
@@ -215,14 +217,13 @@ def dsir_importance(docs: DataFrame, target_lang: str = DSIR_TARGET_LANG) -> Dat
 DSIR_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, lang,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> ''))
+         unnest({TOKENS_SQL})
            AS token
   FROM documents
 ),
 bt AS (
   SELECT doc_id, lang,
-         ('0x' || substr(md5(token), 1, 15))::BIGINT % {NB_FEATURES} AS bucket
+         {hash60_sql('token')} % {NB_FEATURES} AS bucket
   FROM tok
 ),
 raw AS (SELECT bucket, COUNT(*) AS rc FROM bt GROUP BY bucket),

@@ -18,8 +18,6 @@ engine differences can't flip an ordering.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,6 +26,7 @@ from apd_map_reduce_spark.functions.embeddings import (
     valid_embeddings,
     valid_embeddings_sql,
 )
+from apd_map_reduce_spark.functions.text import hash60_py
 from apd_map_reduce_spark.queries.base import QueryDef, grouped_topk
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -163,7 +162,7 @@ def _planes() -> list[list[float]]:
     for p in range(N_PLANES):
         row = []
         for d in range(DIM):
-            h = int(hashlib.md5(f"plane:{p}:{d}".encode()).hexdigest()[:15], 16)
+            h = hash60_py(f"plane:{p}:{d}")
             row.append(round((h / float(1 << 60)) * 2.0 - 1.0, 6))
         planes.append(row)
     return planes
@@ -367,7 +366,7 @@ def _centroids(k: int = N_CENTROIDS) -> list[list[float]]:
     for c in range(k):
         row = []
         for d in range(DIM):
-            h = int(hashlib.md5(f"centroid:{c}:{d}".encode()).hexdigest()[:15], 16)
+            h = hash60_py(f"centroid:{c}:{d}")
             row.append(round((h / float(1 << 60)) * 2.0 - 1.0, 6))
         cents.append(row)
     return cents

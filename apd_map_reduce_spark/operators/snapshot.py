@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apd_map_reduce_spark.functions.text import hash60, hash60_sql
 from apd_map_reduce_spark.plans.layout import spread_by
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table, table_input_size
@@ -119,9 +120,7 @@ def table_checksum(
         input_files=input_size[1] if input_size else 1,
     )
     rendered = [F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in cols]
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", *rendered)), 1, 15), 16, 10
-    ).cast("long")
+    h = hash60(F.concat_ws("|", *rendered))
     return pruned.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.bit_xor(h).alias("checksum"),
@@ -132,7 +131,7 @@ def _checksum_oracle(table: str, cols: list[str]) -> str:
     rendered = ", ".join(f"COALESCE({c}::VARCHAR, '\\N')" for c in cols)
     return f"""
 SELECT COUNT(*) AS n_rows,
-       bit_xor(('0x' || substr(md5(concat_ws('|', {rendered})), 1, 15))::BIGINT) AS checksum
+       bit_xor({hash60_sql(f"concat_ws('|', {rendered})")}) AS checksum
 FROM {table}
 """
 

@@ -14,8 +14,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from apd_map_reduce_spark.functions.text import null_safe_size
-from apd_map_reduce_spark.operators.dedup import normalized_tokens
+from apd_map_reduce_spark.functions.text import (
+    TOKENS_SQL,
+    WS_COUNT_SQL,
+    hash60,
+    hash60_sql,
+    tokenize_normalized,
+    ws_token_count,
+)
 from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
 from apd_map_reduce_spark.queries.base import QueryDef, ranked_topk
 from apd_map_reduce_spark.sources.tables import load_table
@@ -51,7 +57,7 @@ def token_stats(docs: DataFrame) -> DataFrame:
     # would serialize into one task.
     return spread(docs).select(
         "doc_id",
-        null_safe_size(F.split(F.trim(F.col("text")), "\\s+")).cast("long").alias("n_tokens"),
+        ws_token_count("text").alias("n_tokens"),
         F.regexp_count("text", F.lit(_WORD_RE)).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
         F.regexp_count("text", F.lit("[0-9]")).cast("long").alias("n_digits"),
@@ -71,7 +77,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     extra stage."""
     joined = spread(docs).select(
         "doc_id",
-        null_safe_size(F.split(F.trim(F.col("text")), "\\s+")).cast("long").alias("n_tokens"),
+        ws_token_count("text").alias("n_tokens"),
         F.regexp_count("text", F.lit(_WORD_RE)).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
         F.regexp_count("text", F.lit("[0-9]")).cast("long").alias("n_digits"),
@@ -131,16 +137,7 @@ def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Deterministic content fingerprint: md5 over the normalized token
     stream (lowercase alpha tokens joined by single spaces) — robust to
     case/punctuation/whitespace changes, byte-stable across engines."""
-    normalized = F.array_join(
-        F.filter(
-            F.transform(
-                F.split(F.col("text"), "\\s+"),
-                lambda t: F.lower(F.regexp_replace(t, "[^A-Za-z]", "")),
-            ),
-            lambda w: w != "",
-        ),
-        " ",
-    )
+    normalized = F.array_join(tokenize_normalized("text"), " ")
     return spread(docs).select(
         "doc_id",
         F.md5(normalized).alias("fingerprint"),
@@ -231,14 +228,14 @@ def bpe_token_counts(docs: DataFrame) -> DataFrame:
     training-data budgeting."""
     return spread(docs).select(
         "doc_id",
-        null_safe_size(F.split(F.trim(F.col("text")), "\\s+")).cast("long").alias("n_ws_tokens"),
+        ws_token_count("text").alias("n_ws_tokens"),
         F.regexp_count("text", F.lit(BPE_SPLIT_RE)).cast("long").alias("n_bpe_tokens"),
     )
 
 
 BPE_TOKENS_ORACLE = f"""
 SELECT doc_id,
-       len(string_split_regex(trim(text), '\\s+')) AS n_ws_tokens,
+       {WS_COUNT_SQL} AS n_ws_tokens,
        len(regexp_extract_all(text, '{BPE_SPLIT_RE.replace("'", "''")}')) AS n_bpe_tokens
 FROM documents
 """
@@ -267,7 +264,7 @@ def bpe_merge_pairs(docs: DataFrame, top_n: int = BPE_TOP_PAIRS) -> DataFrame:
     [a-z], so the pair relation tops out at 676 rows; the ranking
     window is over that, not the corpus."""
     vocab = (
-        explode_nonnull(spread(docs), [], normalized_tokens(), "word")
+        explode_nonnull(spread(docs), [], tokenize_normalized("text"), "word")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -293,8 +290,7 @@ def bpe_merge_pairs(docs: DataFrame, top_n: int = BPE_TOP_PAIRS) -> DataFrame:
 
 BPE_MERGE_PAIRS_ORACLE = f"""
 WITH tok AS (
-  SELECT unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-         t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS word
+  SELECT unnest({TOKENS_SQL}) AS word
   FROM documents
 ),
 vocab AS (SELECT word, COUNT(*) AS freq FROM tok GROUP BY word),
@@ -330,20 +326,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     docs sharing fp_hash are near-certain duplicates; Jaccard over the
     sets gives graded similarity.
     """
-    from pyspark.sql.window import Window
-
-    from apd_map_reduce_spark.operators.dedup import hash60
-
-    norm = F.array_join(
-        F.filter(
-            F.transform(
-                F.split(F.col("text"), "\\s+"),
-                lambda t: F.lower(F.regexp_replace(t, "[^A-Za-z]", "")),
-            ),
-            lambda w: w != "",
-        ),
-        " ",
-    )
+    norm = F.array_join(tokenize_normalized("text"), " ")
     base = spread(docs).select("doc_id", norm.alias("t")).filter(
         F.length("t") >= WINNOW_K + WINNOW_W - 1
     )
@@ -380,8 +363,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
 WINNOW_ORACLE = f"""
 WITH norm AS (
   SELECT doc_id,
-         array_to_string(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> ''), ' ') AS t
+         array_to_string({TOKENS_SQL}, ' ') AS t
   FROM documents
 ),
 base AS (SELECT doc_id, t, length(t) - {WINNOW_K - 1} AS n_grams FROM norm
@@ -392,7 +374,7 @@ grams AS (
 ),
 hashed AS (
   SELECT doc_id, n_grams, pos,
-         ('0x' || substr(md5(substr(t, pos, {WINNOW_K})), 1, 15))::BIGINT AS h
+         {hash60_sql(f"substr(t, pos, {WINNOW_K})")} AS h
   FROM grams
 ),
 mins AS (
@@ -415,9 +397,9 @@ def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
 
 
-TOKEN_STATS_ORACLE = """
+TOKEN_STATS_ORACLE = f"""
 SELECT doc_id,
-       len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+       {WS_COUNT_SQL} AS n_tokens,
        len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
        length(text) AS n_chars,
        len(regexp_extract_all(text, '[0-9]')) AS n_digits,
@@ -430,7 +412,7 @@ _EN_PAT = r"(?i)\b(the|and|of|is|a)\b"
 QUALITY_ORACLE = f"""
 WITH s AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+         {WS_COUNT_SQL} AS n_tokens,
          len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
          length(text) AS n_chars,
          len(regexp_extract_all(text, '[0-9]')) AS n_digits,
@@ -467,20 +449,15 @@ SELECT doc_id,
 FROM s
 """
 
-FINGERPRINT_ORACLE = """
+FINGERPRINT_ORACLE = f"""
 WITH norm AS (
   -- DuckDB's array_to_string over an EMPTY list is NULL; Spark's
   -- array_join is ''. A zero-token doc's fingerprint is defined as
   -- md5('') (the empty content), so coalesce — but only for non-null
   -- text (NULL text stays NULL in both engines).
   SELECT doc_id,
-         CASE WHEN text IS NOT NULL THEN COALESCE(
-           array_to_string(
-             list_filter(
-               list_transform(string_split_regex(text, '\\s+'),
-                              t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))),
-               w -> w <> ''),
-             ' '), '') END AS n
+         CASE WHEN text IS NOT NULL THEN COALESCE(array_to_string({TOKENS_SQL}, ' '), '')
+         END AS n
   FROM documents
 )
 SELECT doc_id, md5(n) AS fingerprint, length(n) AS norm_len FROM norm
@@ -495,7 +472,7 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
 
     Scale: token→freq is a broadcast-able aggregate of the corpus
     itself (vocabulary-sized), joined back to the token stream."""
-    tok = explode_nonnull(spread(docs), ["doc_id"], normalized_tokens(), "token")
+    tok = explode_nonnull(spread(docs), ["doc_id"], tokenize_normalized("text"), "token")
     freqs = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     log_dec = F.round(F.log10(F.col("freq").cast("double")), 6).cast("decimal(12,6)")
     return (
@@ -523,7 +500,7 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     Scale: explode -> groupBy(doc, token) with map-side partial
     aggregation, then a per-doc window over the already-shuffled key —
     no second exchange (doc_id is a prefix of the grouping key)."""
-    tok = explode_nonnull(spread(docs), ["doc_id"], normalized_tokens(), "token")
+    tok = explode_nonnull(spread(docs), ["doc_id"], tokenize_normalized("text"), "token")
     per_tok = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("doc_id")
     with_n = per_tok.withColumn("n", F.sum("c").over(w))
@@ -562,7 +539,7 @@ def zipf_fit(docs: DataFrame, top_n: int = ZIPF_TOP_N) -> DataFrame:
 
     Scale: vocabulary-sized aggregate of the token stream, then a
     bounded top-N and a single-row aggregate."""
-    tok = explode_nonnull(spread(docs), [], normalized_tokens(), "word")
+    tok = explode_nonnull(spread(docs), [], tokenize_normalized("text"), "word")
     vocab = tok.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     ranked = ranked_topk(vocab, (F.desc("freq"), F.asc("word")), top_n, "rank")
     d6 = "decimal(12,6)"
@@ -591,8 +568,7 @@ def zipf_fit(docs: DataFrame, top_n: int = ZIPF_TOP_N) -> DataFrame:
 
 ZIPF_ORACLE = f"""
 WITH tok AS (
-  SELECT unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS word
+  SELECT unnest({TOKENS_SQL}) AS word
   FROM documents
 ),
 vocab AS (SELECT word, COUNT(*) AS freq FROM tok GROUP BY word),
@@ -626,11 +602,10 @@ FROM s
 """
 
 
-ENTROPY_ORACLE = """
+ENTROPY_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS token
+         unnest({TOKENS_SQL}) AS token
   FROM documents
 ),
 per_tok AS (
@@ -649,11 +624,10 @@ GROUP BY doc_id
 """
 
 
-UNIGRAM_ORACLE = """
+UNIGRAM_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS token
+         unnest({TOKENS_SQL}) AS token
   FROM documents
 ),
 freqs AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token)
@@ -702,7 +676,7 @@ def perplexity_buckets(docs: DataFrame, n_buckets: int = PPL_BUCKETS) -> DataFra
     per language — the keyed-window scale hazard grouped_topk fixed for
     ANN; this is the aggregation-side analogue."""
     tok = explode_nonnull(
-        spread(docs), ["doc_id", "lang"], normalized_tokens(), "token"
+        spread(docs), ["doc_id", "lang"], tokenize_normalized("text"), "token"
     )
     freqs = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     log_dec = F.round(F.log10(F.col("freq").cast("double")), 6).cast("decimal(12,6)")
@@ -762,8 +736,7 @@ def _ppl_buckets_oracle(n_buckets: int = PPL_BUCKETS) -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id, lang,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS token
+         unnest({TOKENS_SQL}) AS token
   FROM documents
 ),
 freqs AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token),

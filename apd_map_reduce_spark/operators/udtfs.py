@@ -24,46 +24,27 @@ chunkers that CANNOT be expressions (sentence segmenters, model
 tokenizers with merges, format-aware splitters) — same output schema,
 same LATERAL application, swap `eval`.
 
-Tokenizer parity notes (the subtle cross-engine bits):
-  * Spark's `split(text, '\\s+')` is JAVA \\s — ASCII
-    [ \\t\\n\\x0B\\f\\r] only. Python's re \\s is unicode-aware over
-    str, which would MERGE tokens separated by unicode spaces
-    differently, so the UDTF splits on the explicit ASCII class.
-  * `[^A-Za-z]` strip + lower, empty tokens dropped — reference P1/P2
-    (tema1a/src/main.cpp:67-76) exactly as in functions/text.py.
+Tokenizer parity: the UDTF tokenizes with
+`functions.text.tokenize_normalized_py`, the Python twin of the JVM
+tokenizer (Java `\\s` whitespace class, not Python's unicode `\\s`).
 """
 
 from __future__ import annotations
 
 import hashlib
 import itertools
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import udtf
 
+from apd_map_reduce_spark.functions.text import tokenize_normalized_py
 from apd_map_reduce_spark.operators.curation import CHUNK_TOKENS, CHUNKS_ORACLE_SQL
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table
 
-# Java \s (ASCII), NOT Python \s (unicode) — see module docstring.
-_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
-_NON_ALPHA = re.compile("[^A-Za-z]")
-
 CHUNKS_SCHEMA = (
     "doc_id BIGINT, chunk_idx BIGINT, n_chunk_tokens BIGINT, chunk_md5 STRING"
 )
-
-
-def _normalized_tokens_py(text: str) -> list[str]:
-    """Python twin of dedup.normalized_tokens / functions.text — pinned
-    by tests to the JVM expression token-for-token."""
-    out = []
-    for raw in _JAVA_WS.split(text):
-        w = _NON_ALPHA.sub("", raw).lower()
-        if w:
-            out.append(w)
-    return out
 
 
 @udtf(returnType=CHUNKS_SCHEMA)
@@ -75,7 +56,7 @@ class ChunkDocuments:
     def eval(self, doc_id: int, text: str):
         if text is None:
             return
-        ts = _normalized_tokens_py(text)
+        ts = tokenize_normalized_py(text)
         for ci in range(0, len(ts), CHUNK_TOKENS):
             chunk = ts[ci : ci + CHUNK_TOKENS]
             yield (

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apd_map_reduce_spark.functions.text import TOKENS_SQL
 from apd_map_reduce_spark.operators.invindex import inverted_index, words
 from apd_map_reduce_spark.plans.layout import spread
 from apd_map_reduce_spark.queries.base import QueryDef
@@ -37,11 +38,10 @@ def corpus_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INVINDEX_ORACLE = """
+INVINDEX_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS word
+         unnest({TOKENS_SQL}) AS word
   FROM documents
 )
 SELECT word,
@@ -61,11 +61,10 @@ def corpus_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WORD_COUNT_ORACLE = """
+WORD_COUNT_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(list_filter(list_transform(string_split_regex(text, '\\s+'),
-                t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))), w -> w <> '')) AS word
+         unnest({TOKENS_SQL}) AS word
   FROM documents
 )
 SELECT word, COUNT(*) AS cnt FROM toks GROUP BY word

@@ -26,21 +26,16 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    aqe_wide_start: bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session with the engine's standard config.
 
-    ``aqe_wide_start=False`` opts out of the wide AQE
-    ``initialPartitionNum`` (r11 ADVICE): callers that pin
-    ``shuffle_partitions`` for plan-SHAPE assertions, or that disable
-    AQE via ``extra_conf`` (leaving no coalescer to shrink a 256-wide
-    start), get exactly the partition count they asked for. Correctness
-    is unaffected either way (partition-invariance suite). Default
-    resolves from SPARK_GRAFT_AQE_WIDE_START (unset/1 = wide) so
-    same-tree interleaved A/Bs can toggle the config per subprocess
-    without a code edit."""
-    if aqe_wide_start is None:
-        aqe_wide_start = os.environ.get("SPARK_GRAFT_AQE_WIDE_START", "1") != "0"
+    ``SPARK_GRAFT_AQE_WIDE_START=0`` opts out of the wide AQE
+    ``initialPartitionNum``: the initial number is then exactly
+    ``shuffle_partitions`` (for plan-SHAPE assertions, or when AQE is
+    disabled via ``extra_conf``, leaving no coalescer to shrink a
+    256-wide start). Correctness is unaffected either way
+    (partition-invariance suite)."""
+    aqe_wide_start = os.environ.get("SPARK_GRAFT_AQE_WIDE_START", "1") != "0"
     master = master or f"local[{DEFAULT_CPUS}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_CPUS
     builder = (
@@ -102,18 +97,6 @@ def get_spark(
         .config(
             "spark.sql.autoBroadcastJoinThreshold",
             os.environ.get("SPARK_GRAFT_AUTOBCAST", "10485760"),
-        )
-        # Whole-stage-codegen fallback width (measurement dial): the
-        # 72-min MinHash signature aggregate runs FASTER interpreted
-        # than codegen'd (0.755 s vs 1.027 s min-of-3 on the cached
-        # sf0.1 shingle relation — generated update code for 72 agg
-        # buffers JITs poorly); maxFields < 73 forces that one operator
-        # class onto the interpreted path. Default stays Spark's 100 —
-        # the suite-level interleaved A/B was not decisive (see
-        # OPTIMIZATION_r13.md).
-        .config(
-            "spark.sql.codegen.maxFields",
-            os.environ.get("SPARK_GRAFT_CODEGEN_MAXFIELDS", "100"),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -214,7 +214,7 @@ def write_jsonl_shards(
     """
     from pyspark.sql import functions as F
 
-    from apd_map_reduce_spark.operators.dedup import hash60
+    from apd_map_reduce_spark.functions.text import hash60
 
     seeded = F.concat_ws(":", F.lit("jsonl"), F.lit(seed), F.col("doc_id"))
     shard = (hash60(seeded) % n_shards).cast("int")

@@ -46,6 +46,20 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     return spark.createDataFrame(parse_manifest(manifest_path), MANIFEST_SCHEMA)
 
 
+def _tag_file_ids(text: DataFrame, manifest: DataFrame) -> DataFrame:
+    """(file_id, line) from a text-reader DataFrame (`value` column):
+    the manifest side is broadcast (tiny dim), so the tag is a map-side
+    hash join — no shuffle of the corpus itself. `input_file_name()`
+    yields a file:/// URI; it is normalized back to the plain absolute
+    path the manifest holds before the join."""
+    lines = text.select(
+        F.col("value").alias("line"),
+        F.url_decode(F.regexp_replace(F.input_file_name(), "^file:/+", "/")).alias("_src"),
+    )
+    dim = manifest.select("file_id", F.col("path").alias("_src"))
+    return lines.join(F.broadcast(dim), "_src", "inner").select("file_id", "line")
+
+
 def read_corpus_whole(spark: SparkSession, manifest: DataFrame) -> DataFrame:
     """S2 alternative (SURVEY.md §2.1): one row per FILE instead of per
     line — the small-file packing shape (`wholetext`). Downstream
@@ -54,19 +68,9 @@ def read_corpus_whole(spark: SparkSession, manifest: DataFrame) -> DataFrame:
     when the corpus is millions of tiny files: fewer rows, same tokens,
     and the scheduler packs files into splits."""
     paths = [r.path for r in manifest.select("path").collect()]
-    files = (
-        # NB: the kwarg form — .option("wholetext", ...) is silently
-        # ignored by DataFrameReader.text in this Spark version.
-        spark.read.text(paths, wholetext=True)
-        .select(
-            F.col("value").alias("line"),
-            F.url_decode(
-                F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-            ).alias("_src"),
-        )
-    )
-    dim = manifest.select("file_id", F.col("path").alias("_src"))
-    return files.join(F.broadcast(dim), "_src", "inner").select("file_id", "line")
+    # NB: the kwarg form — .option("wholetext", ...) is silently
+    # ignored by DataFrameReader.text in this Spark version.
+    return _tag_file_ids(spark.read.text(paths, wholetext=True), manifest)
 
 
 def read_corpus(
@@ -74,9 +78,8 @@ def read_corpus(
 ) -> DataFrame:
     """Read every manifest file as lines, tagged with its ordinal file_id.
 
-    Returns DataFrame[file_id INT, line STRING]. The manifest side is
-    broadcast (tiny dim) so the tag is a map-side hash join — no shuffle
-    of the corpus itself.
+    Returns DataFrame[file_id INT, line STRING], tagged by
+    `_tag_file_ids` (broadcast join — no shuffle of the corpus).
 
     `paths` (optional): the manifest's path list when the caller already
     has it driver-side (e.g. from `parse_manifest`) — skips the collect
@@ -86,15 +89,4 @@ def read_corpus(
     """
     if paths is None:
         paths = [r.path for r in manifest.select("path").collect()]
-    lines = spark.read.text(paths).select(
-        F.col("value").alias("line"),
-        # Normalize file:/// URI back to a plain absolute path for the join key.
-        F.url_decode(F.regexp_replace(F.input_file_name(), "^file:/+", "/")).alias("_src"),
-    )
-    dim = manifest.select(
-        "file_id", F.col("path").alias("_src")
-    )
-    return (
-        lines.join(F.broadcast(dim), "_src", "inner")
-        .select("file_id", "line")
-    )
+    return _tag_file_ids(spark.read.text(paths), manifest)

@@ -23,12 +23,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apd_map_reduce_spark.functions.text import hash60
+
 
 def _batch_checksum(df: DataFrame, cols: list[str]) -> DataFrame:
     rendered = [F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in cols]
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", *rendered)), 1, 15), 16, 10
-    ).cast("long")
+    h = hash60(F.concat_ws("|", *rendered))
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"), F.bit_xor(h).alias("checksum")
     )

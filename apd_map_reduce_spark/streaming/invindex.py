@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apd_map_reduce_spark.plans.layout import explode_nonnull
-
 from apd_map_reduce_spark.functions.text import tokenize_normalized
-from apd_map_reduce_spark.sources.manifest import read_manifest
+from apd_map_reduce_spark.plans.layout import explode_nonnull
+from apd_map_reduce_spark.sources.manifest import _tag_file_ids, read_manifest
 
 
 def stream_corpus(
@@ -29,19 +28,10 @@ def stream_corpus(
 ) -> DataFrame:
     """Streaming (file_id, line) source: text-file stream tagged with
     manifest ordinals via a stream-static broadcast join."""
-    manifest = read_manifest(spark, manifest_path)
-    lines = (
-        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(corpus_dir)
-        .select(
-            F.col("value").alias("line"),
-            F.url_decode(
-                F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-            ).alias("_src"),
-        )
+    stream = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger).text(
+        corpus_dir
     )
-    dim = manifest.select("file_id", F.col("path").alias("_src"))
-    return lines.join(F.broadcast(dim), "_src", "inner").select("file_id", "line")
+    return _tag_file_ids(stream, read_manifest(spark, manifest_path))
 
 
 def incremental_inverted_index(corpus_stream: DataFrame) -> DataFrame:

@@ -128,7 +128,7 @@ def build_clean_shards(
     from apd_map_reduce_spark.operators.curation import (
         mixture_temperature_rates,
     )
-    from apd_map_reduce_spark.operators.dedup import hash60
+    from apd_map_reduce_spark.functions.text import hash60
 
     surv_src = docs.join(final.select("doc_id"), "doc_id", "left_semi").select(
         "doc_id", "source", "n_chars"

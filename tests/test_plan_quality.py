@@ -165,26 +165,26 @@ def test_unspread_text_cpu_detector_positive(spark):
     the sanctioned spread() shape and digest-only projections."""
     from pyspark.sql import functions as F
 
-    from apd_map_reduce_spark.operators.dedup import normalized_tokens
+    from apd_map_reduce_spark.functions.text import tokenize_normalized
     from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
     from apd_map_reduce_spark.plans.quality import unspread_text_cpu_hazards
 
     docs = load_table(spark, SF_SMOKE, "documents")
 
-    bad_project = docs.select("doc_id", normalized_tokens().alias("ts"))
+    bad_project = docs.select("doc_id", tokenize_normalized("text").alias("ts"))
     hits = unspread_text_cpu_hazards(bad_project)
     assert hits and hits[0][1] == "regexp_replace", hits
 
     bad_generate = docs.select(
-        "doc_id", F.explode(normalized_tokens()).alias("tok")
+        "doc_id", F.explode(tokenize_normalized("text")).alias("tok")
     )
     assert unspread_text_cpu_hazards(bad_generate), "explode form missed"
 
-    good = spread(docs).select("doc_id", normalized_tokens().alias("ts"))
+    good = spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
     assert unspread_text_cpu_hazards(good) == []
 
     good_explode = explode_nonnull(
-        spread(docs), ["doc_id"], normalized_tokens(), "tok"
+        spread(docs), ["doc_id"], tokenize_normalized("text"), "tok"
     )
     assert unspread_text_cpu_hazards(good_explode) == []
 
@@ -203,20 +203,20 @@ def test_unspread_text_cpu_detector_sees_through_cache(spark):
     the sanctioned spread-then-cache shape must stay clean."""
     from pyspark.sql import functions as F
 
-    from apd_map_reduce_spark.operators.dedup import normalized_tokens
+    from apd_map_reduce_spark.functions.text import tokenize_normalized
     from apd_map_reduce_spark.plans.layout import spread
     from apd_map_reduce_spark.plans.quality import unspread_text_cpu_hazards
 
     docs = load_table(spark, SF_SMOKE, "documents")
 
-    bad_cached = docs.select("doc_id", normalized_tokens().alias("ts")).cache()
+    bad_cached = docs.select("doc_id", tokenize_normalized("text").alias("ts")).cache()
     consumer = bad_cached.select("doc_id", F.size("ts").alias("n"))
     try:
         hits = unspread_text_cpu_hazards(consumer)
         assert hits and hits[0][1] == "regexp_replace", hits
 
         good_cached = spread(docs).select(
-            "doc_id", normalized_tokens().alias("ts")
+            "doc_id", tokenize_normalized("text").alias("ts")
         ).cache()
         good_consumer = good_cached.select("doc_id", F.size("ts").alias("n"))
         assert unspread_text_cpu_hazards(good_consumer) == []
@@ -393,7 +393,7 @@ def test_tokenizer_evaluated_once(spark, builder):
     """The single-evaluation gate for the shingle producers: the
     tokenize chain (split + per-token regexp) must appear EXACTLY once
     in the physical plan. Column expressions splice by value, so
-    passing `normalized_tokens()` inline into `word_shingles` (which
+    passing `tokenize_normalized("text")` inline into `word_shingles` (which
     references its input n+2 times) re-tokenizes the document once per
     shingle position — measured 28.4 s → 1.7 s at sf1 on
     text_boilerplate_spans when the `tokenized_docs` projection

@@ -49,7 +49,7 @@ def test_logreg_monotone_in_planted_bucket_weights(spark):
     """Two single-token docs whose tokens hash to the extreme-weight
     buckets: the max-weight doc must outscore the min-weight doc, and
     both scores must equal sigmoid(w) exactly."""
-    from apd_map_reduce_spark.operators.dedup import hash60
+    from apd_map_reduce_spark.functions.text import hash60
 
     # find one probe token per bucket (deterministic scan over a small
     # candidate vocabulary; letters only so P1 normalization keeps them)

@@ -1,5 +1,5 @@
 """UDTF surface: python generator output must match the JVM array path
-(posexplode over normalized_tokens) exactly, including SQL LATERAL."""
+(posexplode over tokenize_normalized) exactly, including SQL LATERAL."""
 
 from __future__ import annotations
 
@@ -9,12 +9,12 @@ from apd_map_reduce_spark.functions.udtf_surface import (
     TokenizePositions,
     register_udtfs,
 )
-from apd_map_reduce_spark.operators.cooccur import normalized_tokens
+from apd_map_reduce_spark.functions.text import tokenize_normalized
 
 
 def _jvm_tokens(docs):
     return docs.select(
-        "doc_id", F.posexplode(normalized_tokens()).alias("pos0", "word")
+        "doc_id", F.posexplode(tokenize_normalized("text")).alias("pos0", "word")
     ).select("doc_id", "word", (F.col("pos0") + 1).cast("int").alias("pos"))
 
 
