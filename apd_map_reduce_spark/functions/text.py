@@ -9,6 +9,7 @@ speaks it in three dialects, each defined here once:
   contract            Spark Column            DuckDB SQL     Python
   normalized tokens   tokenize_normalized     TOKENS_SQL     tokenize_normalized_py
   whitespace tokens   ws_token_count          WS_COUNT_SQL   —
+  punctuation class   PUNCT                   PUNCT_SQL      —
   60-bit md5 hash     hash60                  hash60_sql     hash60_py
 
 The Spark forms are JVM-side Column expressions inside whole-stage
@@ -40,6 +41,9 @@ NON_ALPHA = "[^A-Za-z]"
 WHITESPACE = "\\s+"  # Java regex: \s is already the ASCII isspace class
 WHITESPACE_SQL = "[ \\t\\n\\v\\f\\r]+"  # RE2 spelling of the same class
 JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")  # Python spelling of the same class
+# One punctuation character: not ASCII alphanumeric, not whitespace.
+PUNCT = "[^A-Za-z0-9\\s]"  # Java regex
+PUNCT_SQL = "[^A-Za-z0-9 \\t\\n\\v\\f\\r]"  # RE2 spelling of the same class
 _NON_ALPHA_RE = re.compile(NON_ALPHA)
 
 

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from apd_map_reduce_spark.functions.text import (
+    PUNCT,
+    PUNCT_SQL,
     TOKENS_SQL,
     WS_COUNT_SQL,
     tokenize_normalized,
@@ -157,7 +159,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     n_words = F.regexp_count("text", F.lit("[A-Za-z]+")).cast("long")
     n_alpha = F.regexp_count("text", F.lit("[A-Za-z]")).cast("long")
     n_digits = F.regexp_count("text", F.lit("[0-9]")).cast("long")
-    n_punct = F.regexp_count("text", F.lit("[^A-Za-z0-9\\s]")).cast("long")
+    n_punct = F.regexp_count("text", F.lit(PUNCT)).cast("long")
     n_stop = F.regexp_count("text", F.lit(_EN_STOP_PAT)).cast("long")
     counts = spread(docs).select(
         "doc_id",
@@ -196,7 +198,7 @@ WITH c AS (
          len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
          len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
          len(regexp_extract_all(text, '[0-9]')) AS n_digits,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
+         len(regexp_extract_all(text, '{PUNCT_SQL}')) AS n_punct,
          len(regexp_extract_all(text, '{_EN_STOP_PAT}')) AS n_stop
   FROM documents
 )

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apd_map_reduce_spark.functions.text import (
+    PUNCT,
+    PUNCT_SQL,
     TOKENS_SQL,
     WS_COUNT_SQL,
     hash60,
@@ -61,7 +63,7 @@ def token_stats(docs: DataFrame) -> DataFrame:
         F.regexp_count("text", F.lit(_WORD_RE)).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
         F.regexp_count("text", F.lit("[0-9]")).cast("long").alias("n_digits"),
-        F.regexp_count("text", F.lit("[^A-Za-z0-9\\s]")).cast("long").alias("n_punct"),
+        F.regexp_count("text", F.lit(PUNCT)).cast("long").alias("n_punct"),
     )
 
 
@@ -81,7 +83,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
         F.regexp_count("text", F.lit(_WORD_RE)).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
         F.regexp_count("text", F.lit("[0-9]")).cast("long").alias("n_digits"),
-        F.regexp_count("text", F.lit("[^A-Za-z0-9\\s]")).cast("long").alias("n_punct"),
+        F.regexp_count("text", F.lit(PUNCT)).cast("long").alias("n_punct"),
         _marker_count("text", LANG_MARKERS["en"]).alias("n_stopwords"),
     )
     n_tokens = F.greatest(F.col("n_tokens"), F.lit(1))
@@ -219,7 +221,9 @@ SELECT doc_id, {case} AS pred_lang, {greatest} AS trigram_hits FROM s
 # GPT-2-style pre-tokenizer shape, ASCII-anchored for cross-engine
 # parity (contractions | space-prefixed letter runs | digit runs |
 # punctuation runs). Real BPE merges happen on top of this split.
-BPE_SPLIT_RE = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+"
+_BPE_WORDS = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?"
+BPE_SPLIT_RE = _BPE_WORDS + PUNCT + "+"
+BPE_SPLIT_SQL = _BPE_WORDS + PUNCT_SQL + "+"
 
 
 def bpe_token_counts(docs: DataFrame) -> DataFrame:
@@ -236,7 +240,7 @@ def bpe_token_counts(docs: DataFrame) -> DataFrame:
 BPE_TOKENS_ORACLE = f"""
 SELECT doc_id,
        {WS_COUNT_SQL} AS n_ws_tokens,
-       len(regexp_extract_all(text, '{BPE_SPLIT_RE.replace("'", "''")}')) AS n_bpe_tokens
+       len(regexp_extract_all(text, '{BPE_SPLIT_SQL.replace("'", "''")}')) AS n_bpe_tokens
 FROM documents
 """
 
@@ -403,7 +407,7 @@ SELECT doc_id,
        len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
        length(text) AS n_chars,
        len(regexp_extract_all(text, '[0-9]')) AS n_digits,
-       len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct
+       len(regexp_extract_all(text, '{PUNCT_SQL}')) AS n_punct
 FROM documents
 """
 
@@ -416,7 +420,7 @@ WITH s AS (
          len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
          length(text) AS n_chars,
          len(regexp_extract_all(text, '[0-9]')) AS n_digits,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
+         len(regexp_extract_all(text, '{PUNCT_SQL}')) AS n_punct,
          len(regexp_extract_all(text, '{_EN_PAT}')) AS n_stopwords
   FROM documents
 )

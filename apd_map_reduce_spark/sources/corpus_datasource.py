@@ -39,9 +39,10 @@ The same format also streams: `spark.readStream.format("corpus")
 reference's growth model — N on line 1 grows as paths are appended),
 with the stream offset = number of manifest entries ingested. Each
 micro-batch reads exactly the newly appended files, each file exactly
-once with its ordinal identity — the source-side half of the
-incremental inverted index (streaming/invindex.py), replacing the
-file-listing + tag-back join with manifest positions.
+once with its ordinal identity. `inverted_index(spark.readStream
+.format("corpus").load(manifest))` (operators/invindex.py) is the
+streaming flagship: files appended to the manifest after the query
+starts are indexed under their own ordinals.
 
 Options:
   * path (positional via `.load(path)`): the manifest file.

@@ -12,12 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_text(spark: SparkSession, path: str | list[str], whole_file: bool = False) -> DataFrame:
-    """Line-per-row text (reference S2 granularity is handled by
-    tokenization downstream, not the reader)."""
-    return spark.read.option("wholetext", str(whole_file).lower()).text(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str | list[str],

@@ -53,14 +53,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # events.ts is parquet TIMESTAMP(NANOS); with
-        # spark.sql.legacy.parquet.nanosAsLong it arrives as nanos since
-        # epoch. Truncate to µs — same as DuckDB's TIMESTAMP_NS→TIMESTAMP.
-        from pyspark.sql import functions as F
+    return events_ts_micros(df) if name == "events" else df
 
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+
+def events_ts_micros(events: DataFrame) -> DataFrame:
+    """events.ts as a µs timestamp. When the file is parquet
+    TIMESTAMP(NANOS), spark.sql.legacy.parquet.nanosAsLong delivers it
+    as bigint nanos since epoch; truncate to µs — same as DuckDB's
+    TIMESTAMP_NS→TIMESTAMP. Other inputs pass through unchanged."""
+    if dict(events.dtypes).get("ts") != "bigint":
+        return events
+    from pyspark.sql import functions as F
+
+    return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

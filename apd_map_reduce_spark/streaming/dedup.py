@@ -29,6 +29,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from apd_map_reduce_spark.streaming.windows import _hourly_counts
+
 
 def dedup_stream(
     events: DataFrame,
@@ -74,21 +76,5 @@ def dedup_then_hourly(
     "redefining watermark is disallowed" (the second declaration would
     let the window agg see a different lateness horizon than the dedup
     state it consumes)."""
-    from pyspark.sql import functions as F
-
-    from apd_map_reduce_spark.queries.base import money
-
     deduped = dedup_stream(events, keys=keys, event_time=event_time, watermark=watermark)
-    return (
-        deduped.groupBy(F.window(event_time, "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money(F.sum(F.col("value").cast("decimal(18,6)"))).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _hourly_counts(deduped, event_time)

@@ -11,22 +11,14 @@ event_type) rows whose count changed, and the declared watermark
 actually evicts expired windows from Spark state (in ``complete`` mode
 it would not — state and per-batch output would grow with total window
 count forever). The serving store keeps raw counts per window so it
-can re-rank from changed rows alone; ``prune_store`` drops windows the
-caller knows are final, mirroring the watermark eviction on the
-serving side.
+can re-rank from changed rows alone.
 
-Two sinks, same stream:
-
-* `streaming_topk_event_types` — in-memory dict store. TEST/DEV ONLY:
-  `_upsert` collects each micro-batch to the driver and keeps the whole
-  serving state in driver memory. Bounded per batch by update-mode, but
-  not a production shape.
-* `streaming_topk_to_parquet` — the production shape: foreachBatch
-  MERGEs changed rows into a parquet store partitioned by hour
-  (read-affected-partitions → anti-join → union → dynamic partition
-  overwrite rewrites only those partitions, executor-side, no driver
-  materialization). On a Delta/Iceberg table the same callback is a
-  one-statement MERGE INTO.
+One sink: `streaming_topk_to_parquet` — foreachBatch MERGEs changed
+rows into a parquet store partitioned by hour
+(read-affected-partitions → anti-join → union → dynamic partition
+overwrite rewrites only those partitions, executor-side, no driver
+materialization); `topk_from_store` is the serving query. On a
+Delta/Iceberg table the same callback is a one-statement MERGE INTO.
 """
 
 from __future__ import annotations
@@ -35,42 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from apd_map_reduce_spark.streaming.windows import _hourly_counts
+
 TOP_K = 3
-
-# window_start -> {event_type: n_events} — raw counts, the upsert target.
-_COUNT_STORE: dict[str, dict[str, int]] = {}
-
-
-def clear_store() -> None:
-    _COUNT_STORE.clear()
-
-
-def snapshot_store() -> dict[str, list[tuple[str, int]]]:
-    """Top-k view over the maintained counts (what a serving query reads)."""
-    return {
-        hour: sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:TOP_K]
-        for hour, counts in _COUNT_STORE.items()
-    }
-
-
-def prune_store(before_hour: str) -> None:
-    """Drop windows that start before `before_hour` ("yyyy-MM-dd HH:mm:ss").
-
-    Serving-side twin of the watermark: once a window can no longer
-    receive updates, its counts are dead weight. Lexicographic compare
-    is chronological for this timestamp format.
-    """
-    for hour in [h for h in _COUNT_STORE if h < before_hour]:
-        del _COUNT_STORE[hour]
-
-
-def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-    # Update mode: only changed (hour, event_type) rows arrive — bounded
-    # by the batch's own update footprint, not total history. The
-    # collect() makes this sink TEST/DEV ONLY (driver-side store);
-    # `parquet_merge_sink` below is the distributed equivalent.
-    for r in batch_df.collect():
-        _COUNT_STORE.setdefault(r.hour, {})[r.event_type] = r.n_events
 
 
 def parquet_merge_sink(store_path: str):
@@ -87,6 +46,9 @@ def parquet_merge_sink(store_path: str):
     any sink that needs it)."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        # batch_df is read three times below; materialize it once so the
+        # stateful aggregation behind it runs once per micro-batch.
+        batch_df = batch_df.localCheckpoint()
         spark = batch_df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -122,40 +84,15 @@ def topk_from_store(spark: SparkSession, store_path: str, k: int = TOP_K) -> Dat
     )
 
 
-def _hourly_counts(events: DataFrame, watermark: str) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def streaming_topk_event_types(events: DataFrame, watermark: str = "2 hours"):
-    """Returns a started StreamingQuery maintaining the per-hour top-k
-    event types in the in-memory serving store (TEST/DEV sink — see
-    module docstring). Caller awaits termination."""
-    return (
-        _hourly_counts(events, watermark)
-        .writeStream.foreachBatch(_upsert)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_topk_to_parquet(
     events: DataFrame, store_path: str, watermark: str = "2 hours"
 ):
-    """Same stream, production-shaped sink: MERGE changed rows into a
-    parquet store partitioned by hour; serve with `topk_from_store`.
-    Returns a started StreamingQuery; caller awaits termination."""
+    """MERGE the changed per-hour event_type counts into a parquet store
+    partitioned by hour; serve with `topk_from_store`. Returns a
+    started StreamingQuery; caller awaits termination."""
+    counts = _hourly_counts(events.withWatermark("ts", watermark))
     return (
-        _hourly_counts(events, watermark)
+        counts.select("hour", "event_type", "n_events")
         .writeStream.foreachBatch(parquet_merge_sink(store_path))
         .outputMode("update")
         .trigger(availableNow=True)

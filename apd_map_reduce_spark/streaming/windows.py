@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from apd_map_reduce_spark.queries.base import money
+from apd_map_reduce_spark.sources.tables import events_ts_micros
 
 
 def events_stream_schema(spark: SparkSession, sample_parquet: str) -> StructType:
@@ -37,18 +38,15 @@ def read_events_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
     )
-    if dict(df.dtypes).get("ts") == "bigint":
-        # Same nanos→µs normalization as sources/tables.py.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return events_ts_micros(df)
 
 
-def hourly_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling 1-hour windows per event_type; late data beyond the
-    watermark is dropped (state is bounded by watermark horizon)."""
+def _hourly_counts(events: DataFrame, event_time: str = "ts") -> DataFrame:
+    """Tumbling 1-hour windows per event_type. Declares no watermark:
+    each caller declares its own once, upstream of every stateful
+    operator, because Spark rejects a redefined watermark."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+        events.groupBy(F.window(event_time, "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             money(F.sum(F.col("value").cast("decimal(18,6)"))).alias("sum_value"),
@@ -60,6 +58,12 @@ def hourly_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFr
             "sum_value",
         )
     )
+
+
+def hourly_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Tumbling 1-hour windows per event_type; late data beyond the
+    watermark is dropped (state is bounded by watermark horizon)."""
+    return _hourly_counts(events.withWatermark("ts", watermark))
 
 
 def sliding_user_activity(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -78,44 +82,3 @@ def sliding_user_activity(events: DataFrame, watermark: str = "2 hours") -> Data
             "n_events",
         )
     )
-
-
-def run_to_memory(
-    stream_df: DataFrame, table_name: str, output_mode: str = "append"
-) -> None:
-    """Drain an availableNow stream into an in-memory sink (test/dev).
-
-    `output_mode` must match the plan: "append" (the default) is the
-    only mode valid for non-aggregating streams and for chained
-    stateful operators, and it lets the watermark actually evict state;
-    pass "complete" explicitly only for a single aggregation you want
-    re-emitted in full each batch.
-
-    Append-mode caveat for aggregations: a window is emitted only once
-    the final watermark passes it, so under availableNow the TAIL
-    windows (those the last watermark hasn't closed) are absent from
-    the sink — e.g. draining `hourly_event_counts` in append mode
-    yields every hour except the last `watermark` horizon. That is
-    correct streaming semantics, not data loss; use "complete" when a
-    test needs every window materialized. An unwatermarked aggregation
-    cannot run in append mode at all (raises below with a clearer
-    message than Spark's AnalysisException).
-    """
-    if output_mode == "append" and stream_df.isStreaming:
-        has_agg = "Aggregate" in stream_df._jdf.queryExecution().logical().toString()
-        has_watermark = "EventTimeWatermark" in stream_df._jdf.queryExecution().logical().toString()
-        if has_agg and not has_watermark:
-            raise ValueError(
-                "append-mode drain of a streaming aggregation requires a "
-                "watermark (withWatermark before groupBy); without one no "
-                "window is ever final and Spark rejects the plan. Pass "
-                "output_mode='complete' or add a watermark."
-            )
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

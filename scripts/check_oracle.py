@@ -115,41 +115,9 @@ def check_bounds(name: str, spark_pdf: pd.DataFrame, bounds_pdf: pd.DataFrame) -
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    tail_after = None
-    if "--tail-after" in args and args.index("--tail-after") == len(args) - 1:
-        print("--tail-after requires a query name", file=sys.stderr)
-        return 2
-    if "--tail-after" in args:
-        # Driver-window complement mode (VERDICT r3 #3): the external
-        # harness checks roughly the first 50 registry queries in
-        # declaration order, so everything after its last-checked name
-        # only ever gets selfcheck evidence. `--tail-after NAME` selects
-        # every query AFTER the named one in declaration order — run
-        # with CHECK_ORACLE_JSON to produce the committed
-        # SELFCHECK_TAIL_r{N}.json artifact covering exactly that tail
-        # under the exact driver protocol (rows+schema+hash).
-        i = args.index("--tail-after")
-        tail_after = args[i + 1]
-        del args[i : i + 2]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    if tail_after is not None:
-        if only:
-            print("--tail-after and explicit query names are exclusive", file=sys.stderr)
-            return 2
-        names = [q.name for q in ALL_QUERIES]
-        if tail_after not in names:
-            print(f"unknown --tail-after query {tail_after!r}", file=sys.stderr)
-            return 2
-        only = set(names[names.index(tail_after) + 1 :])
-        if not only:
-            # An empty set would read as "no filter" in the loop below
-            # and silently run (and record) the FULL suite under a
-            # tail-artifact label.
-            print(f"{tail_after} is the last registry query; empty tail", file=sys.stderr)
-            return 2
-        print(f"tail mode: {len(only)} queries after {tail_after}")
     spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:

@@ -5,7 +5,8 @@ Structured Streaming queries cannot sit in the registry's DuckDB gate
 pytest-only. This script promotes them to the same evidence grade as
 the batch registry: each streaming behavior is drained with
 trigger=availableNow over the real sf tables, and its result is
-compared rows+schema+values (the driver protocol) against a twin —
+compared by check_oracle.py's `compare` (rows, schema, dtypes,
+values: the driver protocol) against a twin —
 either the equivalent BATCH query (same engine, independent plan:
 batch has no state store, no watermark, no micro-batching) or the
 registry's DuckDB oracle SQL (independent engine).
@@ -22,8 +23,11 @@ Behaviors covered:
   * streaming_topk_parquet_merge   vs batch window top-k
   * streaming_stream_stream_join   vs the same interval join, batch plan
   * streaming_dim_enrichment       vs the same broadcast join, batch plan
-  * streaming_inverted_index       vs the reference-flagship batch index
-                                   (cross-micro-batch collect_set state)
+  * streaming_corpus_datasource_index
+                                   vs the reference-flagship batch index
+                                   (format("corpus") manifest-log stream
+                                   grown mid-query; cross-micro-batch
+                                   collect_set state)
 
 Usage: python scripts/check_streaming_twins.py [sf_dir]
 Set STREAMING_TWINS_JSON=<path> to dump the machine-readable summary
@@ -50,40 +54,17 @@ from apd_map_reduce_spark.operators.invindex import inverted_index  # noqa: E402
 from apd_map_reduce_spark.session import get_spark  # noqa: E402
 from apd_map_reduce_spark.sources.manifest import read_corpus, read_manifest  # noqa: E402
 from apd_map_reduce_spark.sources.tables import load_table  # noqa: E402
-from apd_map_reduce_spark.streaming.invindex import (  # noqa: E402
-    incremental_inverted_index,
-    stream_corpus,
-)
+from scripts.check_oracle import compare as oracle_compare  # noqa: E402
 
 
-def canonical(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), kind="mergesort", na_position="first")
-    return df.reset_index(drop=True)
-
-
-def compare(spark_pdf: pd.DataFrame, twin_pdf: pd.DataFrame) -> dict:
-    rec = {
-        "stream_rows": len(spark_pdf),
+def compare(stream_pdf: pd.DataFrame, twin_pdf: pd.DataFrame) -> dict:
+    problems = oracle_compare("twin", stream_pdf, twin_pdf)
+    return {
+        "stream_rows": len(stream_pdf),
         "twin_rows": len(twin_pdf),
-        "rows_match": len(spark_pdf) == len(twin_pdf),
-        "schema_match": sorted(spark_pdf.columns) == sorted(twin_pdf.columns),
-        "hash_match": False,
+        "hash_match": not problems,
+        "problems": problems,
     }
-    if not (rec["rows_match"] and rec["schema_match"]):
-        return rec
-    s, o = canonical(spark_pdf), canonical(twin_pdf)
-    for col in s.columns:
-        sv, ov = s[col], o[col]
-        if sv.dtype.kind == "f" or ov.dtype.kind == "f":
-            sv, ov = sv.astype("float64"), ov.astype("float64")
-            if not (((sv == ov) | (sv.isna() & ov.isna())).all()):
-                return rec
-        else:
-            if not ((sv.map(str) == ov.map(str)) | (sv.isna() & ov.isna())).all():
-                return rec
-    rec["hash_match"] = True
-    return rec
 
 
 def drain_to_memory(stream_df, name: str, mode: str):
@@ -344,13 +325,19 @@ def main() -> int:
         "twin": "batch: same broadcast left join, batch plan",
     }
 
-    # 9. The reference flagship, streaming: text files arrive 7 per
-    #    micro-batch, the index is a streaming collect_set aggregation
-    #    whose partial sets MERGE across batches in the state store —
-    #    the drained complete-mode index must equal the batch
-    #    inverted_index over the identical corpus+manifest. file_ids
-    #    are joined to a string because raw array columns are not
-    #    canonicalizable by the generic comparator.
+    # 9. The reference flagship, streaming: the batch inverted_index
+    #    over the CUSTOM Python stream source (format('corpus'):
+    #    manifest-as-log offsets, one partition per file), whose partial
+    #    sets MERGE across micro-batches in the state store. The drained
+    #    complete-mode index must equal the batch index over the
+    #    identical corpus+manifest. file_ids are joined to a string
+    #    because raw array columns are not canonicalizable by the
+    #    generic comparator. processAllAvailable drain: availableNow is
+    #    a JVM-source capability the Python wrapper does not declare.
+    #    To genuinely exercise multi-batch offset planning (the first
+    #    batch of a query instance is unthrottled by protocol), the
+    #    manifest starts at half the corpus and grows mid-query: the
+    #    remaining 20 files arrive throttled 7 per micro-batch.
     corpus_dir = os.path.join(tmp, "corpus_txt")
     os.makedirs(corpus_dir)
     doc_rows = (
@@ -379,35 +366,8 @@ def main() -> int:
             "df",
         )
 
-    drain_to_memory(
-        ids_csv(
-            incremental_inverted_index(
-                stream_corpus(
-                    spark, corpus_dir, manifest_path, max_files_per_trigger=7
-                )
-            )
-        ),
-        "tw_invindex",
-        "complete",
-    )
     batch_idx = inverted_index(read_corpus(spark, read_manifest(spark, manifest_path)))
-    results["streaming_inverted_index"] = {
-        **compare(
-            spark.table("tw_invindex").toPandas(), ids_csv(batch_idx).toPandas()
-        ),
-        "twin": "batch: reference-flagship inverted_index over the same corpus",
-    }
 
-    # 10. The same flagship index fed from the CUSTOM Python stream
-    #     source (format('corpus'): manifest-as-log offsets, one
-    #     partition per file) instead of the file-listing source —
-    #     proving the source swap is result-transparent through the
-    #     full aggregation. processAllAvailable drain: availableNow is
-    #     a JVM-source capability the Python wrapper does not declare.
-    #     To genuinely exercise multi-batch offset planning (the first
-    #     batch of a query instance is unthrottled by protocol), the
-    #     manifest starts at half the corpus and grows mid-query: the
-    #     remaining 20 files arrive throttled 7 per micro-batch.
     from apd_map_reduce_spark.sources.corpus_datasource import (
         register_corpus_source,
     )
@@ -428,7 +388,7 @@ def main() -> int:
     _write_manifest_atomic(len(paths) // 2)
     q = (
         ids_csv(
-            incremental_inverted_index(
+            inverted_index(
                 spark.readStream.format("corpus")
                 .option("maxFilesPerTrigger", "7")
                 .load(grow_manifest)
@@ -464,6 +424,8 @@ def main() -> int:
             f"{status}  {name}: stream={rec['stream_rows']} twin={rec['twin_rows']} "
             f"hash={rec['hash_match']}"
         )
+        for problem in rec["problems"] + rec.get("duckdb", {}).get("problems", []):
+            print(f"      {problem}")
     out = os.environ.get("STREAMING_TWINS_JSON")
     if out:
         with open(out, "w", encoding="utf-8") as fh:

@@ -1,7 +1,7 @@
 """Streaming half of format('corpus'): the manifest as an append-only
 log. Exactly-once per file, ordinal identity preserved, growth picked
-up across micro-batches, and the flagship incremental index unchanged
-when fed from the custom source instead of the file-listing source."""
+up across micro-batches, and the flagship batch index unchanged when
+run over the stream, including files that arrive after it starts."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import os
 from apd_map_reduce_spark.operators.invindex import inverted_index
 from apd_map_reduce_spark.sources.corpus_datasource import register_corpus_source
 from apd_map_reduce_spark.sources.manifest import read_corpus, read_manifest
-from apd_map_reduce_spark.streaming.invindex import incremental_inverted_index
 
 
 def _grow(manifest, n, paths):
@@ -192,31 +191,61 @@ def test_streaming_ingest_example_end_to_end(spark, tmp_path):
         sys.argv = old_argv
 
 
-def test_incremental_index_over_custom_source(spark, small_corpus_dir):
-    manifest_path = os.path.join(small_corpus_dir, "manifest.txt")
-    idx = incremental_inverted_index(
-        _stream(spark, manifest_path, maxFilesPerTrigger="1")
-    )
-    q = (
-        idx.writeStream.format("memory")
-        .queryName("corpus_ds_index")
+def _index_query(spark, manifest, name, **options):
+    """The batch inverted_index over the manifest-log stream, drained
+    in complete mode to a memory table."""
+    return (
+        inverted_index(_stream(spark, str(manifest), **options))
+        .writeStream.format("memory")
+        .queryName(name)
         .outputMode("complete")
         .start()
     )
+
+
+def _index_table(spark, name):
+    return {r.word: (tuple(r.file_ids), r.df) for r in spark.table(name).collect()}
+
+
+def test_incremental_index_over_custom_source(spark, small_corpus_dir):
+    """The batch inverted_index over the manifest-log stream equals the
+    batch index over the same manifest."""
+    manifest_path = os.path.join(small_corpus_dir, "manifest.txt")
+    q = _index_query(spark, manifest_path, "corpus_ds_index", maxFilesPerTrigger="1")
     try:
         q.processAllAvailable()
-        got = {
-            r.word: (tuple(r.file_ids), r.df)
-            for r in spark.table("corpus_ds_index").collect()
-        }
+        got = _index_table(spark, "corpus_ds_index")
     finally:
         q.stop()
-    manifest = read_manifest(spark, manifest_path)
     batch = {
         r.word: (tuple(r.file_ids), r.df)
-        for r in inverted_index(read_corpus(spark, manifest)).collect()
+        for r in inverted_index(
+            read_corpus(spark, read_manifest(spark, manifest_path))
+        ).collect()
     }
     assert got == batch
+
+
+def test_incremental_index_picks_up_late_files(spark, tmp_path):
+    """A file written and appended to the manifest after the query
+    starts is indexed under its own ordinal, not dropped."""
+    files = [tmp_path / f"f{i}.txt" for i in range(1, 4)]
+    paths = [str(f) for f in files]
+    files[0].write_text("alpha beta\n")
+    files[1].write_text("beta gamma\n")
+    manifest = tmp_path / "manifest.txt"
+    _grow(manifest, 2, paths)
+    q = _index_query(spark, manifest, "corpus_ds_late")
+    try:
+        q.processAllAvailable()
+        files[2].write_text("alpha delta\n")
+        _grow(manifest, 3, paths)
+        q.processAllAvailable()
+        got = _index_table(spark, "corpus_ds_late")
+    finally:
+        q.stop()
+    assert got["alpha"] == ((1, 3), 2)
+    assert got["delta"] == ((3,), 1)
 
 
 def test_latest_offset_monotone_under_manifest_shrink(tmp_path):

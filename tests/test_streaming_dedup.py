@@ -24,7 +24,7 @@ def duplicated_events_dir(tmp_path_factory):
     return str(d)
 
 
-def _run_to_memory(df, name):
+def _drain_to_memory(df, name):
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -40,7 +40,7 @@ def test_watermark_dedup_collapses_replay(spark, duplicated_events_dir):
         spark, os.path.join(duplicated_events_dir, "drop_a.parquet")
     )
     stream = read_events_stream(spark, duplicated_events_dir, schema)
-    _run_to_memory(dedup_stream(stream), "dedup_wm")
+    _drain_to_memory(dedup_stream(stream), "dedup_wm")
     got = spark.table("dedup_wm")
     n_batch = spark.read.parquet(os.path.join(SF_SMOKE, "events.parquet")).count()
     assert got.count() == n_batch
@@ -55,7 +55,7 @@ def test_exact_dedup_matches_watermark_dedup_on_bounded_replay(
         spark, os.path.join(duplicated_events_dir, "drop_a.parquet")
     )
     stream = read_events_stream(spark, duplicated_events_dir, schema)
-    _run_to_memory(dedup_stream_exact(stream), "dedup_exact_stream")
+    _drain_to_memory(dedup_stream_exact(stream), "dedup_exact_stream")
     n_batch = spark.read.parquet(os.path.join(SF_SMOKE, "events.parquet")).count()
     assert spark.table("dedup_exact_stream").count() == n_batch
 
@@ -71,7 +71,7 @@ def test_dedup_then_hourly_chained_stateful_ops(spark, duplicated_events_dir):
         spark, os.path.join(duplicated_events_dir, "drop_a.parquet")
     )
     stream = read_events_stream(spark, duplicated_events_dir, schema)
-    _run_to_memory(dedup_then_hourly(stream), "dedup_hourly")
+    _drain_to_memory(dedup_then_hourly(stream), "dedup_hourly")
     got = {
         (r.hour, r.event_type): (r.n_events, r.sum_value)
         for r in spark.table("dedup_hourly").collect()

@@ -11,9 +11,8 @@ from pyspark.sql.window import Window
 from apd_map_reduce_spark.queries.relational import events_hourly
 from apd_map_reduce_spark.streaming.topk import (
     TOP_K,
-    clear_store,
-    snapshot_store,
-    streaming_topk_event_types,
+    streaming_topk_to_parquet,
+    topk_from_store,
 )
 from apd_map_reduce_spark.streaming.windows import (
     events_stream_schema,
@@ -23,6 +22,16 @@ from apd_map_reduce_spark.streaming.windows import (
 from .conftest import SF_SMOKE
 
 
+def _served_topk(spark, store) -> dict[str, list[tuple[str, int]]]:
+    """hour -> [(event_type, n_events)] in rank order, as served."""
+    got: dict[str, list[tuple[str, int]]] = {}
+    for r in topk_from_store(spark, store).orderBy(
+        "hour", F.desc("n_events"), "event_type"
+    ).collect():
+        got.setdefault(r.hour, []).append((r.event_type, r.n_events))
+    return got
+
+
 def test_streaming_topk_matches_batch(spark, tmp_path):
     d = str(tmp_path / "ev")
     os.makedirs(d)
@@ -30,10 +39,10 @@ def test_streaming_topk_matches_batch(spark, tmp_path):
     stream = read_events_stream(
         spark, d, events_stream_schema(spark, os.path.join(d, "events.parquet"))
     )
-    clear_store()
-    q = streaming_topk_event_types(stream)
+    store = str(tmp_path / "store")
+    q = streaming_topk_to_parquet(stream, store)
     q.awaitTermination()
-    got = snapshot_store()
+    got = _served_topk(spark, store)
     assert got
 
     w = Window.partitionBy("hour").orderBy(F.desc("n_events"), F.asc("event_type"))
@@ -93,8 +102,8 @@ def test_streaming_topk_state_is_bounded_by_watermark(spark, tmp_path):
         os.utime(dst, (1700000000 + i * 100, 1700000000 + i * 100))
 
     stream = read_events_stream(spark, d + "/in", schema, max_files_per_trigger=1)
-    clear_store()
-    q = streaming_topk_event_types(stream, watermark="2 hours")
+    store = str(tmp_path / "store")
+    q = streaming_topk_to_parquet(stream, store, watermark="2 hours")
     q.awaitTermination()
 
     progresses = [p for p in q.recentProgress if p["stateOperators"]]
@@ -106,15 +115,9 @@ def test_streaming_topk_state_is_bounded_by_watermark(spark, tmp_path):
     )
 
     # Serving store still has every window's top-k (it is the sink, not state)
-    got = snapshot_store()
+    got = _served_topk(spark, store)
     assert len(got) == 8
     assert all(v == [("click", 2), ("view", 2)] for v in got.values())
-
-    # prune_store drops finalized windows from the serving side too
-    from apd_map_reduce_spark.streaming.topk import prune_store
-
-    prune_store("2024-01-01 20:00:00")
-    assert len(snapshot_store()) == 4
 
 
 def test_streaming_topk_parquet_merge_sink_matches_batch(spark, tmp_path):
@@ -122,11 +125,6 @@ def test_streaming_topk_parquet_merge_sink_matches_batch(spark, tmp_path):
     hour-partitioned parquet store) must serve the same top-k as the
     batch ranking, across multiple micro-batches (so the MERGE path
     that reads+rewrites affected partitions actually executes)."""
-    from apd_map_reduce_spark.streaming.topk import (
-        streaming_topk_to_parquet,
-        topk_from_store,
-    )
-
     from apd_map_reduce_spark.sources.tables import load_table
 
     # Split the events into two time-ordered files → two micro-batches,
