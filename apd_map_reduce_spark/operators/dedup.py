@@ -560,11 +560,13 @@ def minhash_signatures(
     (Measured dead end: pre-projecting the shared `sh % 2^31`
     subexpression before the aggs is NOT a win — 2.25 s vs 2.09 s
     min-of-3 at sf0.1 — whole-stage codegen already eliminates the
-    common subexpression; the projection only adds a copy.)"""
+    common subexpression; the projection only adds a copy.)
+
+    Each aggregate is built from one SQL string: one Py4J call instead
+    of one per Column node, for the same plan."""
     sh = sh if sh is not None else doc_shingle_hashes(docs)
-    x31 = F.col("sh") % F.lit(2147483648)
     aggs = [
-        F.min((F.lit(a) * x31 + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{seed}")
+        F.expr(f"min(({a} * (sh % 2147483648) + {b}) % {MINHASH_PRIME}) AS h{seed}")
         for seed, (a, b) in enumerate(_mh_params(n_perm))
     ]
     return sh.groupBy("doc_id").agg(*aggs)
@@ -602,23 +604,18 @@ def band_relation(
     oracle's md5-of-tuple equality is the same predicate), but the
     struct skips bands x (concat_ws + md5) per doc and shuffles 3
     longs (~24 bytes) instead of a 32-char string — measured at sf0.1
-    on the full LSH query: 5.17 s vs 5.37 s min-of-3, identical pairs."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.struct(
-                    *[
-                        F.col(f"h{band * rows + j}").alias(f"k{j}")
-                        for j in range(rows)
-                    ]
-                ).alias("band_hash"),
-            )
-            for band in range(bands)
-        ]
+    on the full LSH query: 5.17 s vs 5.37 s min-of-3, identical pairs.
+
+    The struct array is built as one SQL string (one Py4J call, not one
+    per Column node); the plan is the same `CreateNamedStruct` tree."""
+    band_structs = ", ".join(
+        f"named_struct('band', {band}, 'band_hash', named_struct("
+        + ", ".join(f"'k{j}', h{band * rows + j}" for j in range(rows))
+        + "))"
+        for band in range(bands)
     )
-    return sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
+    return sig.selectExpr("doc_id", f"explode(array({band_structs})) AS b").selectExpr(
+        "doc_id", "b.band", "b.band_hash"
     )
 
 
@@ -1444,6 +1441,8 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     """60-bit SimHash per doc: token-frequency-weighted bit majority.
 
     One groupBy(doc) with 60 conditional sums — no bit-level explosion.
+    The sums and the bit assembly are SQL strings: one Py4J call each,
+    not one per Column node, for the same plan.
     """
     tok = (
         explode_nonnull(spread(docs), ["doc_id"], tokenize_normalized("text"), "token")
@@ -1452,18 +1451,13 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
         .withColumn("h", hash60(F.col("token")))
     )
     bit_sums = [
-        F.sum(
-            F.col("cnt")
-            * (F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) * 2 - 1)
-        ).alias(f"b{i}")
+        F.expr(f"sum(cnt * ((shiftright(h, {i}) & 1) * 2 - 1)) AS b{i}")
         for i in range(SIMHASH_BITS)
     ]
-    agg = tok.groupBy("doc_id").agg(*bit_sums)
-    sim = None
-    for i in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        sim = term if sim is None else sim + term
-    return agg.select("doc_id", sim.alias("simhash"))
+    sim = " + ".join(
+        f"CASE WHEN b{i} > 0 THEN {1 << i}L ELSE 0L END" for i in range(SIMHASH_BITS)
+    )
+    return tok.groupBy("doc_id").agg(*bit_sums).selectExpr("doc_id", f"{sim} AS simhash")
 
 
 def _simhash_oracle_signature_sql() -> str:

@@ -15,7 +15,8 @@ grouping (connected components) is the iterative refinement a real
 pipeline might add and is documented as out of scope here.
 
 `materialize_clean_snapshot` writes the surviving rows as partitioned
-parquet — the publishable dataset snapshot.
+parquet — the publishable dataset snapshot — and counts them with an
+observation on that write, so the DAG runs once.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from apd_map_reduce_spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from apd_map_reduce_spark.operators.textstats import quality_score
+from apd_map_reduce_spark.plans.observe import observed
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -114,8 +116,13 @@ PIPELINE_QUERIES = [
 
 def materialize_clean_snapshot(docs: DataFrame, out_path: str) -> int:
     """Write the publishable snapshot (full rows of keepers) as
-    parquet partitioned by lang; returns surviving row count."""
+    parquet partitioned by lang; returns surviving row count.
+
+    The count is observed on the write itself: a `count()` afterwards
+    would re-run the whole exact → LSH → quality DAG."""
     keepers = clean_corpus(docs).select("doc_id")
-    snapshot = docs.join(keepers, "doc_id", "left_semi")
+    snapshot, obs = observed(
+        docs.join(keepers, "doc_id", "left_semi"), "snapshot", n=F.count(F.lit(1))
+    )
     snapshot.write.mode("overwrite").partitionBy("lang").parquet(out_path)
-    return snapshot.count()
+    return obs.get["n"]

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import re
+import threading
+
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from apd_map_reduce_spark.operators.pipeline import (
@@ -52,6 +57,102 @@ def test_snapshot_roundtrip(spark, tmp_path):
     assert set(back.columns) == set(docs.columns)
     keep = {r.doc_id for r in clean_corpus(docs).select("doc_id").collect()}
     assert {r.doc_id for r in back.select("doc_id").collect()} == keep
+
+
+def test_snapshot_runs_lsh_once(spark, tmp_path):
+    # The count rides the write as an observation: exactly one SQL
+    # execution holds the (band, band_hash) self-join, and none is a
+    # count() that would re-run the exact -> LSH -> quality DAG.
+    docs = load_table(spark, SF_SMOKE, "documents")
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    materialize_clean_snapshot(docs, str(tmp_path / "snap"))
+    bus.waitUntilEmpty()
+    execs = store.executionsList(before, store.executionsCount() - before)
+    execs = [execs.apply(i) for i in range(execs.size())]
+    band_join = re.compile(
+        r"Left keys \[2\]: \[band#\d+, band_hash#\d+\]\n"
+        r"Right keys \[2\]: \[band#\d+, band_hash#\d+\]"
+    )
+    lsh = [e for e in execs if band_join.search(e.physicalPlanDescription())]
+    assert len(lsh) == 1, [e.description() for e in execs]
+    assert not [e for e in execs if e.description().startswith("count at")]
+
+
+@pytest.mark.parametrize(
+    "degrade",
+    [
+        pytest.param(lambda d: d.withColumn("text", F.lit("a b")), id="all_low_quality"),
+        pytest.param(lambda d: d.filter(F.lit(False)), id="empty"),
+    ],
+)
+def test_snapshot_observed_count_degenerate(spark, tmp_path, degrade):
+    # Nothing survives: the observation must still complete (AQE can
+    # prune the empty relation at runtime) rather than leave
+    # Observation.get waiting forever.
+    docs = degrade(load_table(spark, SF_SMOKE, "documents"))
+    out = str(tmp_path / "snap")
+    result = []
+    t = threading.Thread(
+        target=lambda: result.append(materialize_clean_snapshot(docs, out)), daemon=True
+    )
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "materialize_clean_snapshot blocked on its observation"
+    assert result == [0]
+
+
+def test_signature_and_bands_match_oracle_ctes(spark):
+    # Every h* value of the signature and every band of band_relation
+    # equals the DuckDB `sig` / `bands` CTEs (EXCEPT both ways), not
+    # only the final LSH pairs.
+    from apd_map_reduce_spark.operators.dedup import (
+        _SHINGLES_CTE,
+        LSH_BANDS,
+        LSH_ROWS,
+        MAX_SHINGLE_DF,
+        _sig_band_ctes,
+        band_relation,
+        doc_shingle_hashes,
+        minhash_signatures,
+        stop_shingle_filter,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    sig = minhash_signatures(docs, sh=stop_shingle_filter(doc_shingle_hashes(docs)))
+    bands = band_relation(sig).selectExpr(
+        "doc_id",
+        "band",
+        "md5(concat_ws(',', "
+        + ", ".join(f"CAST(band_hash.k{j} AS STRING)" for j in range(LSH_ROWS))
+        + ")) AS band_hash",
+    )
+    spark_sig = sig.toPandas()
+    spark_bands = bands.toPandas()
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF_SMOKE}/documents.parquet'")
+    ctes = f"""WITH {_SHINGLES_CTE},
+shf AS (
+  SELECT doc_id, sh FROM shh
+  WHERE sh NOT IN (SELECT sh FROM shh GROUP BY sh HAVING COUNT(*) > {MAX_SHINGLE_DF})
+),
+{_sig_band_ctes(LSH_BANDS, LSH_ROWS)}"""
+    cols = ", ".join(spark_sig.columns)
+    assert len(spark_sig.columns) == 1 + LSH_BANDS * LSH_ROWS
+    assert len(spark_sig) > 0 and len(spark_bands) == LSH_BANDS * len(spark_sig)
+    for rel, frame, sel in [
+        ("sig", spark_sig, cols),
+        ("bands", spark_bands, "doc_id, band, band_hash"),
+    ]:
+        con.register("spark_rel", frame)
+        for q in [
+            f"{ctes} SELECT {sel} FROM spark_rel EXCEPT SELECT {sel} FROM {rel}",
+            f"{ctes} SELECT {sel} FROM {rel} EXCEPT SELECT {sel} FROM spark_rel",
+        ]:
+            assert con.execute(q).fetchall() == [], rel
 
 
 def test_dedup_incremental_neardup_finds_planted_overlap(spark):
