@@ -34,6 +34,8 @@ Scale design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -217,84 +219,6 @@ FROM hits WHERE len(hs) > 0
 """
 
 
-def positional_index(docs: DataFrame) -> DataFrame:
-    """Positional inverted index: (word, n_postings, postings) with
-    postings = "doc:pos,doc:pos,..." sorted by (doc_id, pos), 1-based
-    positions over the normalized token sequence — the reference's
-    word->{file_id} index extended with in-document positions."""
-    tok = posexplode_nonnull(
-        _tokens_rel(docs), ["doc_id"], "ts", "pos0", "word"
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
-    posting = F.array_sort(F.collect_list(F.struct("doc_id", "pos")))
-    return tok.groupBy("word").agg(
-        F.count(F.lit(1)).alias("n_postings"),
-        F.array_join(
-            F.transform(
-                posting,
-                lambda s: F.concat_ws(":", s["doc_id"], s["pos"]),
-            ),
-            ",",
-        ).alias("postings"),
-    )
-
-
-_POSITIONAL_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
-idx AS (
-  SELECT doc_id, ts, unnest(generate_series(1, len(ts))) AS i FROM toks
-),
-tok AS (SELECT doc_id, i AS pos, ts[i] AS word FROM idx)
-SELECT word, COUNT(*) AS n_postings,
-       string_agg(doc_id::VARCHAR || ':' || pos::VARCHAR, ','
-                  ORDER BY doc_id, pos) AS postings
-FROM tok GROUP BY word
-"""
-
-
-def delta_postings(docs: DataFrame) -> DataFrame:
-    """Gap-encoded inverted index: (word, df, gaps) where gaps is the
-    CSV of successive doc-id deltas (first entry = raw doc id). Gap
-    encoding is the classic posting-list compression step — deltas are
-    small, so a varint/bit-packed layout stores them in a fraction of
-    the raw-id width; this emits the delta stream itself, which IS the
-    compressed representation modulo byte packing.
-
-    Shape: one distinct (word, doc_id) relation, a per-word lag window
-    for the deltas (sort only within each word's postings), one keyed
-    aggregation. No arrays of the whole corpus, no global sort."""
-    from pyspark.sql.window import Window
-
-    ids = explode_nonnull(
-        _tokens_rel(docs), ["doc_id"], F.array_distinct("ts"), "word"
-    ).distinct()
-    w = Window.partitionBy("word").orderBy("doc_id")
-    g = ids.withColumn(
-        "gap", F.coalesce(F.col("doc_id") - F.lag("doc_id", 1).over(w), F.col("doc_id"))
-    )
-    posting = F.array_sort(F.collect_list(F.struct("doc_id", "gap")))
-    return g.groupBy("word").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.array_join(
-            F.transform(posting, lambda s: s["gap"].cast("string")), ","
-        ).alias("gaps"),
-    )
-
-
-_DELTA_POSTINGS_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
-ids AS (SELECT DISTINCT doc_id, unnest(ts) AS word FROM toks),
-g AS (
-  SELECT word, doc_id,
-         COALESCE(doc_id - lag(doc_id) OVER (PARTITION BY word ORDER BY doc_id),
-                  doc_id) AS gap
-  FROM ids
-)
-SELECT word, COUNT(*)::BIGINT AS df,
-       string_agg(gap::VARCHAR, ',' ORDER BY doc_id) AS gaps
-FROM g GROUP BY word
-"""
-
-
 POSTING_SHARD_BLOCK = 128  # docs per posting shard (doc-partitioned index)
 
 
@@ -326,6 +250,123 @@ def _shard(col: str = "doc_id", block: int = POSTING_SHARD_BLOCK) -> Column:
     )
 
 
+def _posting_keys(block: int | None) -> tuple[list[Column], list[str], str]:
+    """(shard select columns, extra group keys, count-name suffix) for
+    one posting builder: none for the whole-list index, or shard_id =
+    doc_id // block with the per-shard `_part` counts."""
+    if block is None:
+        return [], [], ""
+    return [_shard(block=block).alias("shard_id")], ["shard_id"], "_part"
+
+
+def _postings_sql(block: int | None) -> tuple[str, str, str, str]:
+    """Oracle twin of `_posting_keys`: (shard select item, window
+    partition suffix, group-key suffix, count-name suffix)."""
+    if block is None:
+        return "", "", "", ""
+    return f", doc_id // {block} AS shard_id", f", doc_id // {block}", ", shard_id", "_part"
+
+
+def _positional_postings(docs: DataFrame, block: int | None) -> DataFrame:
+    """(word[, shard_id], n_postings[_part], postings) — the one
+    positional-posting builder behind `positional_index` (block None)
+    and `sharded_positional_index`."""
+    shard, keys, suffix = _posting_keys(block)
+    tok = posexplode_nonnull(
+        _tokens_rel(docs), ["doc_id"], "ts", "pos0", "word"
+    ).select("doc_id", *shard, (F.col("pos0") + 1).alias("pos"), "word")
+    posting = F.array_sort(F.collect_list(F.struct("doc_id", "pos")))
+    return tok.groupBy("word", *keys).agg(
+        F.count(F.lit(1)).alias(f"n_postings{suffix}"),
+        F.array_join(
+            F.transform(
+                posting,
+                lambda s: F.concat_ws(":", s["doc_id"], s["pos"]),
+            ),
+            ",",
+        ).alias("postings"),
+    )
+
+
+def _positional_oracle(block: int | None = None) -> str:
+    shard, _, key, suffix = _postings_sql(block)
+    return f"""
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
+idx AS (
+  SELECT doc_id, ts, unnest(generate_series(1, len(ts))) AS i FROM toks
+),
+tok AS (SELECT doc_id{shard}, i AS pos, ts[i] AS word FROM idx)
+SELECT word{key}, COUNT(*) AS n_postings{suffix},
+       string_agg(doc_id::VARCHAR || ':' || pos::VARCHAR, ','
+                  ORDER BY doc_id, pos) AS postings
+FROM tok GROUP BY word{key}
+"""
+
+
+def _gap_postings(docs: DataFrame, block: int | None) -> DataFrame:
+    """(word[, shard_id], df[_part], gaps) — the one gap-encoded
+    posting builder behind `delta_postings` (block None) and
+    `sharded_delta_postings`; the lag window partitions by the same
+    keys as the aggregation, so a shard's stream restarts from its
+    first raw doc id."""
+    from pyspark.sql.window import Window
+
+    shard, keys, suffix = _posting_keys(block)
+    ids = explode_nonnull(
+        _tokens_rel(docs), ["doc_id"], F.array_distinct("ts"), "word"
+    ).distinct().select("*", *shard)
+    w = Window.partitionBy("word", *keys).orderBy("doc_id")
+    g = ids.withColumn(
+        "gap", F.coalesce(F.col("doc_id") - F.lag("doc_id", 1).over(w), F.col("doc_id"))
+    )
+    posting = F.array_sort(F.collect_list(F.struct("doc_id", "gap")))
+    return g.groupBy("word", *keys).agg(
+        F.count(F.lit(1)).cast("long").alias(f"df{suffix}"),
+        F.array_join(
+            F.transform(posting, lambda s: s["gap"].cast("string")), ","
+        ).alias("gaps"),
+    )
+
+
+def _delta_oracle(block: int | None = None) -> str:
+    shard, part, key, suffix = _postings_sql(block)
+    return f"""
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
+ids AS (SELECT DISTINCT doc_id, unnest(ts) AS word FROM toks),
+g AS (
+  SELECT word, doc_id{shard},
+         COALESCE(doc_id - lag(doc_id) OVER (PARTITION BY word{part} ORDER BY doc_id),
+                  doc_id) AS gap
+  FROM ids
+)
+SELECT word{key}, COUNT(*)::BIGINT AS df{suffix},
+       string_agg(gap::VARCHAR, ',' ORDER BY doc_id) AS gaps
+FROM g GROUP BY word{key}
+"""
+
+
+def positional_index(docs: DataFrame) -> DataFrame:
+    """Positional inverted index: (word, n_postings, postings) with
+    postings = "doc:pos,doc:pos,..." sorted by (doc_id, pos), 1-based
+    positions over the normalized token sequence — the reference's
+    word->{file_id} index extended with in-document positions."""
+    return _positional_postings(docs, None)
+
+
+def delta_postings(docs: DataFrame) -> DataFrame:
+    """Gap-encoded inverted index: (word, df, gaps) where gaps is the
+    CSV of successive doc-id deltas (first entry = raw doc id). Gap
+    encoding is the classic posting-list compression step — deltas are
+    small, so a varint/bit-packed layout stores them in a fraction of
+    the raw-id width; this emits the delta stream itself, which IS the
+    compressed representation modulo byte packing.
+
+    Shape: one distinct (word, doc_id) relation, a per-word lag window
+    for the deltas (sort only within each word's postings), one keyed
+    aggregation. No arrays of the whole corpus, no global sort."""
+    return _gap_postings(docs, None)
+
+
 def sharded_positional_index(
     docs: DataFrame, block: int = POSTING_SHARD_BLOCK
 ) -> DataFrame:
@@ -341,42 +382,7 @@ def sharded_positional_index(
 
     Same posting format and (doc_id, pos) order as `positional_index`;
     the unsharded variant stays registered as the truth/debug tool."""
-    tok = posexplode_nonnull(
-        _tokens_rel(docs), ["doc_id"], "ts", "pos0", "word"
-    ).select(
-        "doc_id",
-        _shard(block=block).alias("shard_id"),
-        (F.col("pos0") + 1).alias("pos"),
-        "word",
-    )
-    posting = F.array_sort(F.collect_list(F.struct("doc_id", "pos")))
-    return tok.groupBy("word", "shard_id").agg(
-        F.count(F.lit(1)).alias("n_postings_part"),
-        F.array_join(
-            F.transform(
-                posting,
-                lambda s: F.concat_ws(":", s["doc_id"], s["pos"]),
-            ),
-            ",",
-        ).alias("postings"),
-    )
-
-
-def _sharded_positional_oracle(block: int = POSTING_SHARD_BLOCK) -> str:
-    return f"""
-WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
-idx AS (
-  SELECT doc_id, ts, unnest(generate_series(1, len(ts))) AS i FROM toks
-),
-tok AS (
-  SELECT doc_id, doc_id // {block} AS shard_id, i AS pos, ts[i] AS word
-  FROM idx
-)
-SELECT word, shard_id, COUNT(*) AS n_postings_part,
-       string_agg(doc_id::VARCHAR || ':' || pos::VARCHAR, ','
-                  ORDER BY doc_id, pos) AS postings
-FROM tok GROUP BY word, shard_id
-"""
+    return _positional_postings(docs, block)
 
 
 def sharded_delta_postings(
@@ -393,40 +399,7 @@ def sharded_delta_postings(
     Full-list equivalence: concatenating a word's shards in shard_id
     order and cumulative-summing within each shard reproduces exactly
     the doc ids of `delta_postings`."""
-    from pyspark.sql.window import Window
-
-    ids = explode_nonnull(
-        _tokens_rel(docs), ["doc_id"], F.array_distinct("ts"), "word"
-    ).distinct().withColumn("shard_id", _shard(block=block))
-    w = Window.partitionBy("word", "shard_id").orderBy("doc_id")
-    g = ids.withColumn(
-        "gap",
-        F.coalesce(F.col("doc_id") - F.lag("doc_id", 1).over(w), F.col("doc_id")),
-    )
-    posting = F.array_sort(F.collect_list(F.struct("doc_id", "gap")))
-    return g.groupBy("word", "shard_id").agg(
-        F.count(F.lit(1)).cast("long").alias("df_part"),
-        F.array_join(
-            F.transform(posting, lambda s: s["gap"].cast("string")), ","
-        ).alias("gaps"),
-    )
-
-
-def _sharded_delta_oracle(block: int = POSTING_SHARD_BLOCK) -> str:
-    return f"""
-WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
-ids AS (SELECT DISTINCT doc_id, unnest(ts) AS word FROM toks),
-g AS (
-  SELECT word, doc_id, doc_id // {block} AS shard_id,
-         COALESCE(doc_id - lag(doc_id) OVER (PARTITION BY word, doc_id // {block}
-                                             ORDER BY doc_id),
-                  doc_id) AS gap
-  FROM ids
-)
-SELECT word, shard_id, COUNT(*)::BIGINT AS df_part,
-       string_agg(gap::VARCHAR, ',' ORDER BY doc_id) AS gaps
-FROM g GROUP BY word, shard_id
-"""
+    return _gap_postings(docs, block)
 
 
 def tfidf_top_terms(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
@@ -494,29 +467,19 @@ BM25_B = 0.75
 BM25_TOP_K = 10
 
 
-def bm25_search(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY, k: int = BM25_TOP_K) -> DataFrame:
-    """BM25 top-k retrieval for a fixed query term set — the ranking
-    function production corpus search runs over the inverted index the
-    reference builds (tema1a/src/main.cpp word→{file_id}; this adds tf,
-    doc-length normalization, and the Robertson/Sparck-Jones idf).
+def _bm25_term_scores(
+    docs: DataFrame, keep_terms: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, Column]:
+    """The BM25 term-score core shared by `bm25_search` and
+    `bm25_multi_search`: (tf ⋈ df × totals, part) where `part` is the
+    rounded per-(doc, term) score over that relation's columns and
+    `keep_terms(tok)` is the operator's own query-term filter on the
+    exploded (doc_id, dl, term) token stream.
 
-    Determinism: idf and the per-term partial score are each rounded to
-    6 decimals, per-doc totals are summed as exact decimals, and every
-    float literal is an explicit DOUBLE in both engines (DuckDB parses
-    bare `2.2` as DECIMAL, which would change the arithmetic). All
-    divisions are single double ops on identical operands, so the
-    ranking keys are bit-equal cross-engine.
-
-    Scale: the term filter lands right after the tokenizer, so only
-    postings for the |Q| query terms survive to the shuffle — tf is
-    O(docs-containing-a-query-term), df and the (N, total_tokens)
-    scalars are broadcast, and the final top-k is a TakeOrderedAndProject
-    over the scored docs (per-task k-row heap — safe even when a query
-    term is a stop word and the scored relation is corpus-sized). The
-    corpus is tokenized TWICE (once for the
-    (N, total_tokens) scalars, once for the postings path) — in a
-    standing deployment those corpus statistics live in the index
-    metadata and only the postings pass remains."""
+    The corpus is tokenized TWICE (once for the (n_docs, total_tokens)
+    scalars, once for the postings path) — in a standing deployment
+    those corpus statistics live in the index metadata and only the
+    postings pass remains."""
     base = spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
     # total_tokens: null_safe_size so a NULL-text doc contributes
     # nothing (non-ANSI size(NULL) is -1; the oracle's SUM skips NULL).
@@ -524,9 +487,9 @@ def bm25_search(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY, k: int = B
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(null_safe_size(F.col("ts"))).alias("total_tokens"),
     )
-    tok = explode_nonnull(
-        base, ["doc_id", F.size("ts").alias("dl")], "ts", "term"
-    ).filter(F.col("term").isin(list(terms)))
+    tok = keep_terms(
+        explode_nonnull(base, ["doc_id", F.size("ts").alias("dl")], "ts", "term")
+    )
     # tf is consumed twice (df derivation + the scored join input) and
     # sits downstream of the tokenize+explode pass — cache it (2-4
     # narrow columns, bounded by docs-matching-a-query-term) so the
@@ -556,14 +519,63 @@ def bm25_search(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY, k: int = B
         ),
         6,
     ).cast("decimal(12,6)")
-    scored = (
-        tf.join(F.broadcast(dfr), "term")
-        .crossJoin(F.broadcast(totals))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.sum(part).cast("double").alias("score"),
-        )
+    return tf.join(F.broadcast(dfr), "term").crossJoin(F.broadcast(totals)), part
+
+
+def _bm25_parts_sql(term_set: str, keys: str) -> str:
+    """Oracle twin of `_bm25_term_scores`: the CTEs `toks` through
+    `parts` (`keys`, `part`), keeping tf rows whose term is IN
+    `term_set`."""
+    k1 = BM25_K1
+    b = BM25_B
+    return f"""toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
+totals AS (SELECT COUNT(*) AS n_docs, SUM(len(ts)) AS total_tokens FROM toks),
+tok AS (
+  SELECT doc_id, len(ts) AS dl, unnest(ts) AS term FROM toks
+),
+tf AS (
+  SELECT doc_id, dl, term, COUNT(*) AS tf FROM tok
+  WHERE term IN ({term_set}) GROUP BY doc_id, dl, term
+),
+dfr AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+parts AS (
+  SELECT {keys},
+         CAST(ROUND(
+           ROUND(ln(((n_docs - df)::DOUBLE + 0.5::DOUBLE) / (df::DOUBLE + 0.5::DOUBLE) + 1.0::DOUBLE), 6)
+           * ((tf::DOUBLE * {k1 + 1.0!r}::DOUBLE)
+              / (tf::DOUBLE + {k1!r}::DOUBLE *
+                 ({1.0 - b!r}::DOUBLE + {b!r}::DOUBLE *
+                  ROUND((dl * n_docs)::DOUBLE / total_tokens::DOUBLE, 6)))),
+         6) AS DECIMAL(12,6)) AS part
+  FROM tf JOIN dfr ON tf.term = dfr.term CROSS JOIN totals
+),"""
+
+
+def bm25_search(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY, k: int = BM25_TOP_K) -> DataFrame:
+    """BM25 top-k retrieval for a fixed query term set — the ranking
+    function production corpus search runs over the inverted index the
+    reference builds (tema1a/src/main.cpp word→{file_id}; this adds tf,
+    doc-length normalization, and the Robertson/Sparck-Jones idf).
+
+    Determinism: idf and the per-term partial score are each rounded to
+    6 decimals, per-doc totals are summed as exact decimals, and every
+    float literal is an explicit DOUBLE in both engines (DuckDB parses
+    bare `2.2` as DECIMAL, which would change the arithmetic). All
+    divisions are single double ops on identical operands, so the
+    ranking keys are bit-equal cross-engine.
+
+    Scale: the term filter lands right after the tokenizer, so only
+    postings for the |Q| query terms survive to the shuffle — tf is
+    O(docs-containing-a-query-term), df and the (N, total_tokens)
+    scalars are broadcast, and the final top-k is a TakeOrderedAndProject
+    over the scored docs (per-task k-row heap — safe even when a query
+    term is a stop word and the scored relation is corpus-sized)."""
+    joined, part = _bm25_term_scores(
+        docs, lambda tok: tok.filter(F.col("term").isin(list(terms)))
+    )
+    scored = joined.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_terms_matched"),
+        F.sum(part).cast("double").alias("score"),
     )
     # Global top-k via TakeOrderedAndProject (per-task bounded heap) —
     # no unpartitioned window ever sees the scored relation, which is
@@ -575,30 +587,8 @@ def bm25_search(docs: DataFrame, terms: tuple[str, ...] = BM25_QUERY, k: int = B
 
 def _bm25_oracle(terms: tuple[str, ...] = BM25_QUERY, k: int = BM25_TOP_K) -> str:
     term_list = ", ".join(f"'{t}'" for t in terms)
-    k1 = BM25_K1
-    b = BM25_B
     return f"""
-WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
-totals AS (SELECT COUNT(*) AS n_docs, SUM(len(ts)) AS total_tokens FROM toks),
-tok AS (
-  SELECT doc_id, len(ts) AS dl, unnest(ts) AS term FROM toks
-),
-tf AS (
-  SELECT doc_id, dl, term, COUNT(*) AS tf FROM tok
-  WHERE term IN ({term_list}) GROUP BY doc_id, dl, term
-),
-dfr AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-parts AS (
-  SELECT tf.doc_id,
-         CAST(ROUND(
-           ROUND(ln(((n_docs - df)::DOUBLE + 0.5::DOUBLE) / (df::DOUBLE + 0.5::DOUBLE) + 1.0::DOUBLE), 6)
-           * ((tf::DOUBLE * {k1 + 1.0!r}::DOUBLE)
-              / (tf::DOUBLE + {k1!r}::DOUBLE *
-                 ({1.0 - b!r}::DOUBLE + {b!r}::DOUBLE *
-                  ROUND((dl * n_docs)::DOUBLE / total_tokens::DOUBLE, 6)))),
-         6) AS DECIMAL(12,6)) AS part
-  FROM tf JOIN dfr ON tf.term = dfr.term CROSS JOIN totals
-),
+WITH {_bm25_parts_sql(term_list, "tf.doc_id")}
 scored AS (
   SELECT doc_id, COUNT(*) AS n_terms_matched, SUM(part)::DOUBLE AS score
   FROM parts GROUP BY doc_id
@@ -628,11 +618,11 @@ def bm25_multi_search(
     dim (query_id LONG, term STRING); the result is the per-query top-k
     (query_id, rank, doc_id, n_terms_matched, score).
 
-    Scoring is identical to `bm25_search` (same idf/tf/length
-    normalization, same rounding ladder), and per-term df depends only
-    on the corpus, so a doc's score for a query equals its
-    `bm25_search` score for the same term set — asserted in tests.
-    Repeated (query_id, term) rows are deduplicated (query = term SET).
+    Scoring is identical to `bm25_search` (the same term-score core),
+    and per-term df depends only on the corpus, so a doc's score for a
+    query equals its `bm25_search` score for the same term set —
+    asserted in tests. Repeated (query_id, term) rows are deduplicated
+    (query = term SET).
 
     Scale: the query relation is a classic broadcast dim. The corpus
     tokenizer output is semi-joined against the DISTINCT term set
@@ -649,46 +639,12 @@ def bm25_multi_search(
     identical to the single-window form because (score DESC, doc_id
     ASC) is a total order per query."""
     qset = queries.select("query_id", "term").distinct()
-    base = spread(docs).select("doc_id", tokenize_normalized("text").alias("ts"))
-    # total_tokens: null_safe_size so a NULL-text doc contributes
-    # nothing (non-ANSI size(NULL) is -1; the oracle's SUM skips NULL).
-    totals = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(null_safe_size(F.col("ts"))).alias("total_tokens"),
-    )
     qterms = qset.select("term").distinct()
-    tok = explode_nonnull(
-        base, ["doc_id", F.size("ts").alias("dl")], "ts", "term"
-    ).join(F.broadcast(qterms), "term")
-    # cached for the same two-consumer reason as bm25_search
-    tf = tok.groupBy("doc_id", "dl", "term").agg(F.count(F.lit(1)).alias("tf")).cache()
-    dfr = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.round(
-        F.log(
-            ((F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5))
-            / (F.col("df").cast("double") + F.lit(0.5))
-            + F.lit(1.0)
-        ),
-        6,
+    joined, part = _bm25_term_scores(
+        docs, lambda tok: tok.join(F.broadcast(qterms), "term")
     )
-    lr = F.round(
-        (F.col("dl") * F.col("n_docs")).cast("double")
-        / F.col("total_tokens").cast("double"),
-        6,
-    )
-    tfd = F.col("tf").cast("double")
-    part = F.round(
-        idf
-        * (
-            (tfd * F.lit(BM25_K1 + 1.0))
-            / (tfd + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * lr))
-        ),
-        6,
-    ).cast("decimal(12,6)")
     scored = (
-        tf.join(F.broadcast(dfr), "term")
-        .crossJoin(F.broadcast(totals))
-        .withColumn("part", part)
+        joined.withColumn("part", part)
         .join(F.broadcast(qset), "term")
         .groupBy("query_id", "doc_id")
         .agg(
@@ -717,34 +673,12 @@ def _bm25_multi_oracle(
     k: int = BM25_TOP_K,
 ) -> str:
     values = ", ".join(f"({qid}, '{t}')" for qid, t in query_set)
-    k1 = BM25_K1
-    b = BM25_B
     return f"""
 WITH qset AS (
   SELECT DISTINCT query_id::BIGINT AS query_id, term
   FROM (VALUES {values}) q(query_id, term)
 ),
-toks AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
-totals AS (SELECT COUNT(*) AS n_docs, SUM(len(ts)) AS total_tokens FROM toks),
-tok AS (
-  SELECT doc_id, len(ts) AS dl, unnest(ts) AS term FROM toks
-),
-tf AS (
-  SELECT doc_id, dl, term, COUNT(*) AS tf FROM tok
-  WHERE term IN (SELECT term FROM qset) GROUP BY doc_id, dl, term
-),
-dfr AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-parts AS (
-  SELECT tf.doc_id, tf.term,
-         CAST(ROUND(
-           ROUND(ln(((n_docs - df)::DOUBLE + 0.5::DOUBLE) / (df::DOUBLE + 0.5::DOUBLE) + 1.0::DOUBLE), 6)
-           * ((tf::DOUBLE * {k1 + 1.0!r}::DOUBLE)
-              / (tf::DOUBLE + {k1!r}::DOUBLE *
-                 ({1.0 - b!r}::DOUBLE + {b!r}::DOUBLE *
-                  ROUND((dl * n_docs)::DOUBLE / total_tokens::DOUBLE, 6)))),
-         6) AS DECIMAL(12,6)) AS part
-  FROM tf JOIN dfr ON tf.term = dfr.term CROSS JOIN totals
-),
+{_bm25_parts_sql("SELECT term FROM qset", "tf.doc_id, tf.term")}
 scored AS (
   SELECT q.query_id, p.doc_id, COUNT(*) AS n_terms_matched,
          SUM(p.part)::DOUBLE AS score
@@ -828,18 +762,18 @@ def _docs(spark, sf_dir):
 COOCCUR_QUERIES = [
     QueryDef("text_cooccurrence_pmi", lambda s, d: cooccurrence_pmi(_docs(s, d)), _PMI_ORACLE),
     QueryDef("text_phrase_search", lambda s, d: phrase_search(_docs(s, d)), _phrase_oracle()),
-    QueryDef("text_positional_index", lambda s, d: positional_index(_docs(s, d)), _POSITIONAL_ORACLE),
+    QueryDef("text_positional_index", lambda s, d: positional_index(_docs(s, d)), _positional_oracle()),
     QueryDef("text_tfidf_top_terms", lambda s, d: tfidf_top_terms(_docs(s, d)), _TFIDF_ORACLE),
-    QueryDef("text_postings_delta", lambda s, d: delta_postings(_docs(s, d)), _DELTA_POSTINGS_ORACLE),
+    QueryDef("text_postings_delta", lambda s, d: delta_postings(_docs(s, d)), _delta_oracle()),
     QueryDef(
         "text_positional_index_sharded",
         lambda s, d: sharded_positional_index(_docs(s, d)),
-        _sharded_positional_oracle(),
+        _positional_oracle(POSTING_SHARD_BLOCK),
     ),
     QueryDef(
         "text_postings_delta_sharded",
         lambda s, d: sharded_delta_postings(_docs(s, d)),
-        _sharded_delta_oracle(),
+        _delta_oracle(POSTING_SHARD_BLOCK),
     ),
     QueryDef("text_bigram_logprob", lambda s, d: bigram_logprob(_docs(s, d)), _BIGRAM_ORACLE),
     QueryDef("text_bm25_search", lambda s, d: bm25_search(_docs(s, d)), _bm25_oracle()),

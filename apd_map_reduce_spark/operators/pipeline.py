@@ -40,18 +40,10 @@ MIN_TOKENS = 5
 MIN_ALPHA_RATIO = 0.5
 
 
-def clean_corpus(docs: DataFrame, near_pairs: DataFrame | None = None) -> DataFrame:
+def clean_corpus(docs: DataFrame) -> DataFrame:
     """Surviving documents after exact-dup, near-dup, quality filters.
 
     Returns DataFrame[doc_id, n_tokens, alpha_token_ratio] of keepers.
-
-    `near_pairs` (optional): a precomputed near-duplicate pair relation
-    with columns (doc_a, doc_b, jaccard) at threshold
-    NEAR_DUP_THRESHOLD — pass it when the pipeline already ran LSH
-    (e.g. a prior `minhash_lsh_pairs` stage whose output is persisted),
-    so the capstone doesn't re-pay shingling + banding + verification.
-    The registered benchmark entry deliberately does NOT pass it: the
-    bench charges each entry its full standalone cost.
     """
     # One digest aggregation feeds BOTH the exact-dup filter and the
     # LSH path's exact-dup pre-grouping (cached: two consumers).
@@ -59,10 +51,9 @@ def clean_corpus(docs: DataFrame, near_pairs: DataFrame | None = None) -> DataFr
     keep_exact = clusters.select(F.col("keep_doc_id").alias("doc_id"))
     survivors = docs.join(keep_exact, "doc_id", "left_semi")
 
-    if near_pairs is None:
-        near_pairs = minhash_lsh_pairs(
-            docs, threshold=NEAR_DUP_THRESHOLD, clusters=clusters
-        )
+    near_pairs = minhash_lsh_pairs(
+        docs, threshold=NEAR_DUP_THRESHOLD, clusters=clusters
+    )
     drop_b = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = survivors.join(drop_b, "doc_id", "left_anti")
 

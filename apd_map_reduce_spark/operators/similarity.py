@@ -1,15 +1,20 @@
 """Similarity search over embedding columns (driver mandate).
 
-Two paths, matching the 100 TB guidance:
-  * brute-force cosine top-k — the correctness baseline. Query set is
-    broadcast; the corpus side streams through one scan; per-query
-    top-k is a window row_number (no global collect). O(|Q| x N) work,
-    embarrassingly parallel — right answer when |Q| is small.
+Every cosine top-k is one probe-then-rank kernel (`_probe_topk`, oracle
+twin `_probe_topk_sql`): the query set is broadcast, the corpus side
+streams through one scan, a candidate screen restricts the pairs, and
+the per-query top-k is the two-stage `grouped_topk` (no global
+collect). The screens, matching the 100 TB guidance:
+  * none — brute-force cosine top-k, the correctness baseline.
+    O(|Q| x N) work, embarrassingly parallel — right answer when |Q|
+    is small.
   * random-hyperplane LSH buckets — the scale path: 8 deterministic
     md5-derived hyperplanes → 8-bit bucket; candidates restricted to
     the query's bucket (expected N/256 per probe), then exact cosine +
     top-k within the bucket. Planes are literal constants, so the
     DuckDB oracle embeds the same planes — full value parity.
+  * IVF lists — each query probes its N_PROBE nearest of N_CENTROIDS
+    md5-derived centroid lists.
 
 Determinism: dot products fold left-to-right over double-cast arrays in
 both engines; cosine is rounded to 6 decimals BEFORE ranking so ulp-level
@@ -103,22 +108,37 @@ def _cos6(q_vec: str, c_vec: str, q_norm: str, c_norm: str, dim: int = DIM) -> C
     )
 
 
-def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
-    """Exact top-k cosine neighbors for each probe vector."""
-    base = unit_rel(embeddings)
+def _probe_topk(
+    base: DataFrame,
+    n_queries: int,
+    k: int,
+    q_cols: tuple[Column, ...] = (),
+    c_cols: tuple[Column, ...] = (),
+    block: Column | None = None,
+) -> DataFrame:
+    """The probe-then-rank kernel every cosine top-k shares: query side
+    = `base` rows with vec_id < n_queries (broadcast), corpus side =
+    all of `base`, joined on `block` (the candidate screen's predicate
+    over the extra `q_cols`/`c_cols`; None = exact, every pair) and
+    neighbor_id != query_id, scored by `_cos6`, ranked per query.
+    `base` is a `unit_rel` relation plus whatever the screen reads."""
     queries = base.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_dv"),
         F.col("nrm").alias("q_n"),
+        *q_cols,
     )
     corpus = base.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_dv"),
         F.col("nrm").alias("c_n"),
+        *c_cols,
     )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos6("q_dv", "c_dv", "q_n", "c_n"))
+    cond = F.col("neighbor_id") != F.col("query_id")
+    if block is not None:
+        cond = block & cond
+    scored = corpus.join(F.broadcast(queries), cond).withColumn(
+        "cos_sim", _cos6("q_dv", "c_dv", "q_n", "c_n")
     )
     # two-stage per-query rank (grouped_topk): a query's candidate set
     # is corpus-scale, so it must never rank through one task
@@ -132,16 +152,15 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_
     ).select("query_id", "rnk", "neighbor_id", "cos_sim")
 
 
-def _cosine_oracle(k: int = TOP_K) -> str:
-    return f"""
-WITH vemb AS (SELECT * FROM embeddings WHERE {_EMB_GUARD}),
-q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q_emb FROM vemb WHERE vec_id < {N_QUERIES}),
-c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS c_emb FROM vemb),
-scored AS (
+def _probe_topk_sql(k: int, block: str = "") -> str:
+    """Oracle twin of `_probe_topk`'s join-score-rank tail over CTEs
+    q(query_id, q_emb, ...) and c(neighbor_id, c_emb, ...); `block` is
+    the screen's join predicate, prefixed to the self-pair exclusion."""
+    return f"""scored AS (
   SELECT query_id, neighbor_id,
          ROUND(list_dot_product(q_emb, c_emb)
                / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 6) AS cos_sim
-  FROM q JOIN c ON neighbor_id <> query_id
+  FROM q JOIN c ON {block + " AND " if block else ""}neighbor_id <> query_id
 ),
 ranked AS (
   SELECT query_id, neighbor_id, cos_sim,
@@ -152,20 +171,36 @@ SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {k}
 """
 
 
+def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
+    """Exact top-k cosine neighbors for each probe vector."""
+    return _probe_topk(unit_rel(embeddings), n_queries, k)
+
+
+def _cosine_oracle(k: int = TOP_K) -> str:
+    return f"""
+WITH vemb AS (SELECT * FROM embeddings WHERE {_EMB_GUARD}),
+q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q_emb FROM vemb WHERE vec_id < {N_QUERIES}),
+c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS c_emb FROM vemb),
+{_probe_topk_sql(k)}"""
+
+
 COSINE_TOPK_ORACLE = _cosine_oracle()
 
 
+def _md5_vectors(tag: str, n: int) -> list[list[float]]:
+    """n deterministic pseudo-random DIM-vectors in [-1, 1] from md5 —
+    reproducible in SQL as literals (no RNG dependency in either
+    engine). Row i depends only on (tag, i), so the family is
+    prefix-stable: _md5_vectors(t, n)[:j] == _md5_vectors(t, j)."""
+    return [
+        [round((hash60_py(f"{tag}:{i}:{d}") / float(1 << 60)) * 2.0 - 1.0, 6) for d in range(DIM)]
+        for i in range(n)
+    ]
+
+
 def _planes() -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes from md5 — reproducible
-    in SQL as literals (no RNG dependency in either engine)."""
-    planes = []
-    for p in range(N_PLANES):
-        row = []
-        for d in range(DIM):
-            h = hash60_py(f"plane:{p}:{d}")
-            row.append(round((h / float(1 << 60)) * 2.0 - 1.0, 6))
-        planes.append(row)
-    return planes
+    """Deterministic pseudo-random LSH hyperplanes."""
+    return _md5_vectors("plane", N_PLANES)
 
 
 def _bucket_expr(emb: Column) -> Column:
@@ -186,70 +221,42 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = 3) 
     with_bucket = unit_rel(embeddings).withColumn(
         "bucket", _bucket_expr(F.col("embedding"))
     )
-    queries = with_bucket.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_dv"),
-        F.col("nrm").alias("q_n"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    corpus = with_bucket.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_dv"),
-        F.col("nrm").alias("c_n"),
-        F.col("bucket").alias("c_bucket"),
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("c_bucket") == F.col("q_bucket"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .withColumn("cos_sim", _cos6("q_dv", "c_dv", "q_n", "c_n"))
-    )
-    # two-stage per-query rank (grouped_topk): a query's candidate set
-    # is corpus-scale, so it must never rank through one task
-    return grouped_topk(
-        scored,
-        ["query_id"],
-        (F.desc("cos_sim"), F.asc("neighbor_id")),
+    return _probe_topk(
+        with_bucket,
+        n_queries,
         k,
-        salt_on="neighbor_id",
-        rank_name="rnk",
-    ).select("query_id", "rnk", "neighbor_id", "cos_sim")
+        q_cols=(F.col("bucket").alias("q_bucket"),),
+        c_cols=(F.col("bucket").alias("c_bucket"),),
+        block=F.col("c_bucket") == F.col("q_bucket"),
+    )
 
 
-def _lsh_oracle() -> str:
-    planes = _planes()
+def _bucket_sql() -> str:
+    """CTEs plane_t and b(vec_id, emb, bucket): the DuckDB twin of
+    `_bucket_expr` over the guarded embeddings, shared by the LSH
+    top-k and near-dup oracles."""
     plane_literals = ", ".join(
-        "[" + ", ".join(f"{v!r}" for v in row) + "]" for row in planes
+        "[" + ", ".join(f"{v!r}" for v in row) + "]" for row in _planes()
     )
     bucket_sql = " + ".join(
         f"(CASE WHEN list_dot_product(planes[{p + 1}], emb) > 0 THEN {1 << p} ELSE 0 END)"
         for p in range(N_PLANES)
     )
-    return f"""
-WITH plane_t AS (SELECT [{plane_literals}]::DOUBLE[][] AS planes),
+    return f"""plane_t AS (SELECT [{plane_literals}]::DOUBLE[][] AS planes),
 b AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb,
          {bucket_sql} AS bucket
   FROM embeddings, plane_t
   WHERE {_EMB_GUARD}
-),
+)"""
+
+
+def _lsh_oracle(k: int = 3) -> str:
+    return f"""
+WITH {_bucket_sql()},
 q AS (SELECT vec_id AS query_id, emb AS q_emb, bucket AS q_bucket FROM b WHERE vec_id < {N_QUERIES}),
 c AS (SELECT vec_id AS neighbor_id, emb AS c_emb, bucket AS c_bucket FROM b),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(q_emb, c_emb)
-               / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 6) AS cos_sim
-  FROM q JOIN c ON c_bucket = q_bucket AND neighbor_id <> query_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM scored
-)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= 3
-"""
+{_probe_topk_sql(k, "c_bucket = q_bucket")}"""
 
 
 def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -288,21 +295,8 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95) -> DataF
 
 
 def _near_dup_oracle(threshold: float = 0.95) -> str:
-    planes = _planes()
-    plane_literals = ", ".join(
-        "[" + ", ".join(f"{v!r}" for v in row) + "]" for row in planes
-    )
-    bucket_sql = " + ".join(
-        f"(CASE WHEN list_dot_product(planes[{p + 1}], emb) > 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(N_PLANES)
-    )
     return f"""
-WITH plane_t AS (SELECT [{plane_literals}]::DOUBLE[][] AS planes),
-b AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb, {bucket_sql} AS bucket
-  FROM embeddings, plane_t
-  WHERE {_EMB_GUARD}
-)
+WITH {_bucket_sql()}
 SELECT a.vec_id AS id_a, c.vec_id AS id_b,
        ROUND(list_dot_product(a.emb, c.emb)
              / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(c.emb, c.emb))), 6) AS cos_sim
@@ -362,14 +356,7 @@ def _centroids(k: int = N_CENTROIDS) -> list[list[float]]:
     nprobe lists → exact rerank) is identical. The family is prefix-
     stable: _centroids(K)[:j] == _centroids(j), so growing K refines
     the partition without moving existing centroids."""
-    cents = []
-    for c in range(k):
-        row = []
-        for d in range(DIM):
-            h = hash60_py(f"centroid:{c}:{d}")
-            row.append(round((h / float(1 << 60)) * 2.0 - 1.0, 6))
-        cents.append(row)
-    return cents
+    return _md5_vectors("centroid", k)
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -417,39 +404,14 @@ def ivf_ann_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = 3) 
     # still carry the narrow float array + norm.
     based = unit_rel(embeddings).withColumn("_dv", _dvec("embedding"))
     ranking = _centroid_ranking(F.col("_dv"))
-    corpus = based.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_dv"),
-        F.col("nrm").alias("c_n"),
-        F.element_at(ranking, 1).alias("list_id"),
-    )
-    queries = (
-        based.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_dv"),
-            F.col("nrm").alias("q_n"),
-            F.explode(F.slice(ranking, 1, N_PROBE)).alias("probe_list"),
-        )
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("list_id") == F.col("probe_list"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .withColumn("cos_sim", _cos6("q_dv", "c_dv", "q_n", "c_n"))
-    )
-    # two-stage per-query rank (grouped_topk): a query's candidate set
-    # is corpus-scale, so it must never rank through one task
-    return grouped_topk(
-        scored,
-        ["query_id"],
-        (F.desc("cos_sim"), F.asc("neighbor_id")),
+    return _probe_topk(
+        based,
+        n_queries,
         k,
-        salt_on="neighbor_id",
-        rank_name="rnk",
-    ).select("query_id", "rnk", "neighbor_id", "cos_sim")
+        q_cols=(F.explode(F.slice(ranking, 1, N_PROBE)).alias("probe_list"),),
+        c_cols=(F.element_at(ranking, 1).alias("list_id"),),
+        block=F.col("list_id") == F.col("probe_list"),
+    )
 
 
 def _ivf_oracle(k: int = 3) -> str:
@@ -472,19 +434,7 @@ q AS (
   SELECT vec_id AS query_id, emb AS q_emb, unnest(ranking[1:{N_PROBE}]) AS probe_list
   FROM b WHERE vec_id < {N_QUERIES}
 ),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(q_emb, c_emb)
-               / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 6) AS cos_sim
-  FROM q JOIN c ON list_id = probe_list AND neighbor_id <> query_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM scored
-)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {k}
-"""
+{_probe_topk_sql(k, "list_id = probe_list")}"""
 
 
 def ivf_recall_audit(
@@ -566,8 +516,7 @@ def _ivf_recall_oracle(k: int = 3) -> str:
 
 
 def _lsh_recall_ann_oracle(k: int = 3) -> str:
-    assert k == 3, "_lsh_oracle ranks a fixed k=3"
-    return _ann_recall_oracle(_lsh_oracle(), k)
+    return _ann_recall_oracle(_lsh_oracle(k), k)
 
 
 def _ann_recall_oracle(approx_sql: str, k: int) -> str:

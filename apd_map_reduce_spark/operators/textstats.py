@@ -47,24 +47,26 @@ def _marker_count(text_col: str, words: list[str]) -> F.Column:
     return F.regexp_count(F.col(text_col), F.lit(pattern))
 
 
-def token_stats(docs: DataFrame) -> DataFrame:
-    """Per-doc token/char counts — integer-exact features.
-
-    n_tokens = whitespace tokens; n_words = alphabetic runs (a BPE-ish
-    pre-tokenization proxy); plus punctuation/digit counts.
-    """
-    # All counts cast to long — DuckDB len()/length() are BIGINT and the
-    # driver compares schemas, not just values. spread() first (dedup-
-    # family rule): the regexp counts are per-row CPU a low-split scan
-    # would serialize into one task.
-    return spread(docs).select(
-        "doc_id",
+def _count_features() -> list[F.Column]:
+    """The integer-exact per-doc counts over `text`: n_tokens =
+    whitespace tokens; n_words = alphabetic runs (a BPE-ish
+    pre-tokenization proxy); n_chars; digit and punctuation counts.
+    All cast to long — DuckDB len()/length() are BIGINT and the driver
+    compares schemas, not just values."""
+    return [
         ws_token_count("text").alias("n_tokens"),
         F.regexp_count("text", F.lit(_WORD_RE)).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
         F.regexp_count("text", F.lit("[0-9]")).cast("long").alias("n_digits"),
         F.regexp_count("text", F.lit(PUNCT)).cast("long").alias("n_punct"),
-    )
+    ]
+
+
+def token_stats(docs: DataFrame) -> DataFrame:
+    """Per-doc token/char counts — integer-exact features."""
+    # spread() first (dedup-family rule): the regexp counts are per-row
+    # CPU a low-split scan would serialize into one task.
+    return spread(docs).select("doc_id", *_count_features())
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -79,11 +81,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     extra stage."""
     joined = spread(docs).select(
         "doc_id",
-        ws_token_count("text").alias("n_tokens"),
-        F.regexp_count("text", F.lit(_WORD_RE)).cast("long").alias("n_words"),
-        F.length("text").cast("long").alias("n_chars"),
-        F.regexp_count("text", F.lit("[0-9]")).cast("long").alias("n_digits"),
-        F.regexp_count("text", F.lit(PUNCT)).cast("long").alias("n_punct"),
+        *_count_features(),
         _marker_count("text", LANG_MARKERS["en"]).alias("n_stopwords"),
     )
     n_tokens = F.greatest(F.col("n_tokens"), F.lit(1))
@@ -99,21 +97,18 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_id(docs: DataFrame) -> DataFrame:
-    """Marker-lexicon language guess; ties broken by language code ASC
-    (deterministic). Emits the guess and the winning marker count."""
+def _lang_argmax(docs: DataFrame, scores: dict[str, F.Column], hits: str) -> DataFrame:
+    """(doc_id, pred_lang, <hits>): the argmax of the per-language
+    `scores` (lang -> count Column over `text`) by (score DESC,
+    lang ASC) — the one argmax both language-ID heuristics share."""
     scored = spread(docs).select(
         "doc_id",
         F.col("text").isNotNull().alias("_has_text"),
-        *[
-            _marker_count("text", ws).alias(f"score_{lang}")
-            for lang, ws in LANG_MARKERS.items()
-        ],
+        *[c.alias(f"score_{lang}") for lang, c in scores.items()],
     )
     # argmax by (score DESC, lang ASC): array_sort ascending on
     # (score, -lang_rank) structs, take the last element — max score,
     # and among score ties the alphabetically-first language.
-    langs = sorted(LANG_MARKERS)
     pairs = F.array(
         *[
             F.struct(
@@ -121,7 +116,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
                 F.lit(-rank).alias("neg_rank"),
                 F.lit(la).alias("lang"),
             )
-            for rank, la in enumerate(langs)
+            for rank, la in enumerate(sorted(scores))
         ]
     )
     best = F.element_at(F.array_sort(pairs), -1)
@@ -131,7 +126,33 @@ def lang_id(docs: DataFrame) -> DataFrame:
     return scored.select(
         "doc_id",
         F.when(F.col("_has_text"), best["lang"]).alias("pred_lang"),
-        F.when(F.col("_has_text"), best["score"]).cast("long").alias("marker_hits"),
+        F.when(F.col("_has_text"), best["score"]).cast("long").alias(hits),
+    )
+
+
+def _lang_argmax_sql(scores: dict[str, str], hits: str) -> str:
+    """Oracle twin of `_lang_argmax` (lang -> count SQL). CASE x WHEN
+    picks the FIRST matching branch, so listing branches in lang-code
+    ASC order implements the (score DESC, lang ASC) tie-break."""
+    langs = sorted(scores)
+    greatest = "GREATEST(" + ", ".join(f"score_{la}" for la in langs) + ")"
+    ladder = " ".join(f"WHEN score_{la} THEN '{la}'" for la in langs)
+    score_sql = ",\n    ".join(f"{sql} AS score_{la}" for la, sql in scores.items())
+    return f"""
+WITH s AS (SELECT doc_id,
+    {score_sql}
+  FROM documents)
+SELECT doc_id, CASE {greatest} {ladder} END AS pred_lang, {greatest} AS {hits} FROM s
+"""
+
+
+def lang_id(docs: DataFrame) -> DataFrame:
+    """Marker-lexicon language guess; ties broken by language code ASC
+    (deterministic). Emits the guess and the winning marker count."""
+    return _lang_argmax(
+        docs,
+        {lang: _marker_count("text", ws) for lang, ws in LANG_MARKERS.items()},
+        "marker_hits",
     )
 
 
@@ -162,60 +183,33 @@ def lang_id_ngram(docs: DataFrame) -> DataFrame:
     """Char-trigram-profile language guess (complement to the
     stopword-marker `lang_id`); same deterministic argmax machinery."""
     lowered = F.lower(F.col("text"))
-    scored = spread(docs).select(
-        "doc_id",
-        F.col("text").isNotNull().alias("_has_text"),
-        *[
-            sum(
+    return _lang_argmax(
+        docs,
+        {
+            lang: sum(
                 (F.length(lowered) - F.length(F.replace(lowered, F.lit(tri), F.lit(""))))
                 / F.lit(3)
                 for tri in tris
-            ).cast("long").alias(f"score_{lang}")
+            ).cast("long")
             for lang, tris in TRIGRAM_PROFILES.items()
-        ],
-    )
-    langs = sorted(TRIGRAM_PROFILES)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.col(f"score_{la}").alias("score"),
-                F.lit(-rank).alias("neg_rank"),
-                F.lit(la).alias("lang"),
-            )
-            for rank, la in enumerate(langs)
-        ]
-    )
-    best = F.element_at(F.array_sort(pairs), -1)
-    # NULL text → NULL prediction (same contract as lang_id).
-    return scored.select(
-        "doc_id",
-        F.when(F.col("_has_text"), best["lang"]).alias("pred_lang"),
-        F.when(F.col("_has_text"), best["score"]).cast("long").alias("trigram_hits"),
+        },
+        "trigram_hits",
     )
 
 
 def _lang_ngram_oracle() -> str:
-    score_sql = ",\n    ".join(
-        "CAST(("
-        + " + ".join(
-            f"(length(lower(text)) - length(replace(lower(text), '{tri}', ''))) / 3"
-            for tri in tris
-        )
-        + f") AS BIGINT) AS score_{lang}"
-        for lang, tris in TRIGRAM_PROFILES.items()
+    return _lang_argmax_sql(
+        {
+            lang: "CAST(("
+            + " + ".join(
+                f"(length(lower(text)) - length(replace(lower(text), '{tri}', ''))) / 3"
+                for tri in tris
+            )
+            + ") AS BIGINT)"
+            for lang, tris in TRIGRAM_PROFILES.items()
+        },
+        "trigram_hits",
     )
-    langs = sorted(TRIGRAM_PROFILES)
-    case = "CASE GREATEST(" + ", ".join(f"score_{la}" for la in langs) + ")"
-    for la in langs:
-        case += f" WHEN score_{la} THEN '{la}'"
-    case += " END"
-    greatest = "GREATEST(" + ", ".join(f"score_{la}" for la in langs) + ")"
-    return f"""
-WITH s AS (SELECT doc_id,
-    {score_sql}
-  FROM documents)
-SELECT doc_id, {case} AS pred_lang, {greatest} AS trigram_hits FROM s
-"""
 
 
 # GPT-2-style pre-tokenizer shape, ASCII-anchored for cross-engine
@@ -432,26 +426,13 @@ SELECT doc_id, n_tokens, n_chars,
 FROM s
 """
 
-_LANG_SCORE_SQL = ",\n".join(
-    "len(regexp_extract_all(text, '(?i)\\b(" + "|".join(ws) + ")\\b')) AS score_" + la
-    for la, ws in LANG_MARKERS.items()
+LANG_ID_ORACLE = _lang_argmax_sql(
+    {
+        la: "len(regexp_extract_all(text, '(?i)\\b(" + "|".join(ws) + ")\\b'))"
+        for la, ws in LANG_MARKERS.items()
+    },
+    "marker_hits",
 )
-
-_LANG_CASE = """
-CASE GREATEST(score_en, score_fr, score_de, score_es)
-  WHEN score_de THEN 'de' WHEN score_en THEN 'en'
-  WHEN score_es THEN 'es' WHEN score_fr THEN 'fr' END
-"""
-# NOTE: CASE x WHEN picks the FIRST matching branch, so listing branches
-# in lang-code ASC order implements the (score DESC, lang ASC) tie-break.
-
-LANG_ID_ORACLE = f"""
-WITH s AS (SELECT doc_id, {_LANG_SCORE_SQL} FROM documents)
-SELECT doc_id,
-       {_LANG_CASE} AS pred_lang,
-       GREATEST(score_en, score_fr, score_de, score_es) AS marker_hits
-FROM s
-"""
 
 FINGERPRINT_ORACLE = f"""
 WITH norm AS (

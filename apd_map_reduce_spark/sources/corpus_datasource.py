@@ -47,7 +47,9 @@ starts are indexed under their own ordinals.
 Options:
   * path (positional via `.load(path)`): the manifest file.
   * wholetext ("true"/"false", default false): one row per FILE
-    instead of per line — same pairing as `read_corpus_whole`.
+    instead of per line — the small-file packing shape; whitespace
+    tokenization is line-agnostic, so the index is the same as in
+    line mode.
   * maxFilesPerTrigger (streaming only, default unbounded): cap on
     manifest entries admitted per micro-batch, effective from the
     second batch of a query instance (see CorpusStreamReader).

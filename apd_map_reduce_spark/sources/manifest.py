@@ -30,6 +30,8 @@ def parse_manifest(manifest_path: str) -> list[tuple[int, str]]:
     base = os.path.dirname(os.path.abspath(manifest_path))
     with open(manifest_path, encoding="utf-8") as fh:
         lines = [ln.strip() for ln in fh if ln.strip()]
+    if not lines:
+        return []  # empty/blank file: no entries, same as a count of 0
     n = int(lines[0])
     paths = lines[1 : n + 1]
     return [
@@ -58,19 +60,6 @@ def _tag_file_ids(text: DataFrame, manifest: DataFrame) -> DataFrame:
     )
     dim = manifest.select("file_id", F.col("path").alias("_src"))
     return lines.join(F.broadcast(dim), "_src", "inner").select("file_id", "line")
-
-
-def read_corpus_whole(spark: SparkSession, manifest: DataFrame) -> DataFrame:
-    """S2 alternative (SURVEY.md §2.1): one row per FILE instead of per
-    line — the small-file packing shape (`wholetext`). Downstream
-    whitespace tokenization is line-agnostic, so inverted-index results
-    are identical to the line reader (tests assert it). Prefer this
-    when the corpus is millions of tiny files: fewer rows, same tokens,
-    and the scheduler packs files into splits."""
-    paths = [r.path for r in manifest.select("path").collect()]
-    # NB: the kwarg form — .option("wholetext", ...) is silently
-    # ignored by DataFrameReader.text in this Spark version.
-    return _tag_file_ids(spark.read.text(paths, wholetext=True), manifest)
 
 
 def read_corpus(

@@ -43,6 +43,25 @@ def test_cli_matches_golden(small_corpus_dir, tmp_path):
             assert [ln.rstrip("\n") for ln in fh if ln.strip()] == want
 
 
+def test_cli_empty_manifest_writes_empty_letter_files(tmp_path):
+    """An empty manifest file holds no entries, like one whose count
+    line is 0: the CLI succeeds and writes all 26 letter files, empty."""
+    manifest = tmp_path / "manifest.txt"
+    manifest.write_text("")
+    out = tmp_path / "cli_out"
+    res = subprocess.run(
+        [sys.executable, "-m", "apd_map_reduce_spark", "1", "1", str(manifest), "--out", str(out)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    files = sorted(os.listdir(out))
+    assert files == [f"{chr(c)}.txt" for c in range(ord("a"), ord("z") + 1)]
+    assert all(os.path.getsize(out / f) == 0 for f in files)
+
+
 def test_cli_rejects_bad_args():
     res = subprocess.run(
         [sys.executable, "-m", "apd_map_reduce_spark", "0", "2", "nope.txt"],

@@ -355,10 +355,13 @@ def test_sharded_postings_reconstruct_full_lists(spark):
     """Doc-partitioned postings are lossless: per word, concatenating
     shards in shard_id order and cumulative-summing each shard's gap
     stream must reproduce exactly the doc ids of the unsharded
-    delta_postings — and shard sizes must respect the block bound."""
+    delta_postings, the positional shards concatenated in shard_id
+    order must equal the unsharded positional_index posting string —
+    and shard sizes must respect the block bound."""
     from apd_map_reduce_spark.operators.cooccur import (
         POSTING_SHARD_BLOCK,
         delta_postings,
+        positional_index,
         sharded_delta_postings,
         sharded_positional_index,
     )
@@ -392,7 +395,19 @@ def test_sharded_postings_reconstruct_full_lists(spark):
     assert rebuilt == full
 
     # positional shards: per-(word, shard) posting covers ≤ block docs
+    pos_shards: dict[str, list[tuple[int, str, int]]] = {}
     for r in sharded_positional_index(docs).collect():
         ids = {int(p.split(":")[0]) for p in r.postings.split(",")}
         assert len(ids) <= POSTING_SHARD_BLOCK
         assert all(i // POSTING_SHARD_BLOCK == r.shard_id for i in ids)
+        pos_shards.setdefault(r.word, []).append(
+            (r.shard_id, r.postings, r.n_postings_part)
+        )
+    pos_full = {
+        r.word: (r.n_postings, r.postings) for r in positional_index(docs).collect()
+    }
+    pos_rebuilt = {
+        w: (sum(n for _, _, n in parts), ",".join(p for _, p, _ in sorted(parts)))
+        for w, parts in pos_shards.items()
+    }
+    assert pos_rebuilt == pos_full

@@ -278,3 +278,25 @@ def test_latest_offset_monotone_under_manifest_shrink(tmp_path):
     paths.append(str(p4))
     manifest.write_text("4\n" + "\n".join(paths) + "\n")
     assert reader.latestOffset() == {"index": 4}
+
+
+def test_latest_offset_holds_when_manifest_emptied(tmp_path):
+    """A manifest emptied mid-rewrite (zero bytes, or only blank lines)
+    parses as no entries, so the monotonic clamp holds the offset
+    instead of the poll raising."""
+    from apd_map_reduce_spark.sources.corpus_datasource import CorpusStreamReader
+
+    paths = []
+    for i in range(2):
+        p = tmp_path / f"f{i}.txt"
+        p.write_text("word\n")
+        paths.append(str(p))
+    manifest = tmp_path / "manifest.txt"
+    manifest.write_text("2\n" + "\n".join(paths) + "\n")
+
+    reader = CorpusStreamReader({"path": str(manifest)})
+    assert reader.latestOffset() == {"index": 2}
+    manifest.write_text("")
+    assert reader.latestOffset() == {"index": 2}
+    manifest.write_text("\n  \n")
+    assert reader.latestOffset() == {"index": 2}

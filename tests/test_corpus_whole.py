@@ -1,30 +1,8 @@
-"""Whole-file corpus reader equivalence + compressed sink size check."""
+"""Compressed parquet sink: zstd output is smaller than uncompressed."""
 
 from __future__ import annotations
 
 import os
-
-from apd_map_reduce_spark.operators.invindex import inverted_index
-from apd_map_reduce_spark.sources.manifest import (
-    read_corpus,
-    read_corpus_whole,
-    read_manifest,
-)
-
-
-def test_whole_file_reader_same_index(spark, small_corpus_dir):
-    manifest = read_manifest(spark, os.path.join(small_corpus_dir, "manifest.txt"))
-    by_line = sorted(
-        (r.word, tuple(r.file_ids), r.df)
-        for r in inverted_index(read_corpus(spark, manifest)).collect()
-    )
-    by_file = sorted(
-        (r.word, tuple(r.file_ids), r.df)
-        for r in inverted_index(read_corpus_whole(spark, manifest)).collect()
-    )
-    assert by_file == by_line
-    # whole mode yields exactly one row per manifest file
-    assert read_corpus_whole(spark, manifest).count() == 3
 
 
 def test_zstd_sink_smaller_than_uncompressed(spark, tmp_path):

@@ -104,3 +104,15 @@ def test_approx_distinct_within_accuracy_of_exact(spark):
     for etype, a in approx.items():
         e = exact[etype]
         assert abs(a - e) / e < 0.05, f"{etype}: approx={a} exact={e}"
+
+
+def test_lsh_ann_topk_k_matches_oracle(spark, duck):
+    """`k` reaches the LSH ANN oracle's rank cut: at k=5 both engines
+    return the same per-bucket top-5, not a top-3."""
+    from apd_map_reduce_spark.operators.similarity import _emb, _lsh_oracle, lsh_ann_topk
+
+    spark_pdf = lsh_ann_topk(_emb(spark, SF_SMOKE), k=5).toPandas()
+    oracle_pdf = duck.execute(_lsh_oracle(k=5)).df()
+    assert (spark_pdf["rnk"] > 3).any(), "fixture has no bucket deep enough to tell k=5 from k=3"
+    problems = compare("ann_lsh_topk_k5", spark_pdf, oracle_pdf)
+    assert not problems, f"ann_lsh_topk k=5: {problems}"

@@ -34,20 +34,6 @@ def test_clean_corpus_drops_planted_duplicates(spark):
     assert 0 in keep, "canonical copy (min id) must survive"
 
 
-def test_clean_corpus_accepts_precomputed_pairs(spark):
-    # The reuse path a real pipeline takes: LSH pairs computed once
-    # upstream (and persisted), handed to the capstone — must be
-    # result-identical to the self-computing path.
-    from apd_map_reduce_spark.operators.dedup import minhash_lsh_pairs
-    from apd_map_reduce_spark.operators.pipeline import NEAR_DUP_THRESHOLD
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=NEAR_DUP_THRESHOLD)
-    self_computed = {tuple(r) for r in clean_corpus(docs).collect()}
-    reused = {tuple(r) for r in clean_corpus(docs, near_pairs=pairs).collect()}
-    assert reused == self_computed
-
-
 def test_snapshot_roundtrip(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE, "documents")
     out = str(tmp_path / "snap")
