@@ -55,43 +55,15 @@ def query_main(argv: list[str]) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
-    argv = sys.argv[1:] if argv is None else argv
-    if argv and argv[0] == "query":
-        return query_main(argv[1:])
-    parser = argparse.ArgumentParser(
-        prog="python -m apd_map_reduce_spark",
-        description="Inverted-index pipeline, reference-compatible CLI",
-    )
-    parser.add_argument("mappers", type=int, help="mapper parallelism (M)")
-    parser.add_argument("reducers", type=int, help="reducer parallelism (R)")
-    parser.add_argument("manifest", help="manifest file: first line N, then N paths")
-    parser.add_argument("--out", default="output", help="output dir for <letter>.txt files")
-    parser.add_argument(
-        "--warmup",
-        action="store_true",
-        help="run the full pipeline once (temp output) before timing, so "
-        "pipeline_s measures warm execution, not Catalyst/codegen "
-        "compilation — the same warm protocol bench.py uses",
-    )
-    args = parser.parse_args(argv)
-    if args.mappers < 1 or args.reducers < 1:
-        parser.error("M and R must be >= 1")
-
-    from apd_map_reduce_spark.operators.invindex import inverted_index, write_letter_files
+def session_for(mappers: int, reducers: int):
+    """The Spark session the reference's M/R knobs map onto: M+R local
+    cores, R shuffle partitions, and scan splits that shrink with M."""
     from apd_map_reduce_spark.session import get_spark
-    from apd_map_reduce_spark.sources.manifest import (
-        MANIFEST_SCHEMA,
-        parse_manifest,
-        read_corpus,
-    )
-
-    import time
 
     spark = get_spark(
         app_name="apd-invindex-cli",
-        master=f"local[{args.mappers + args.reducers}]",
-        shuffle_partitions=max(args.reducers, 1),
+        master=f"local[{mappers + reducers}]",
+        shuffle_partitions=max(reducers, 1),
         extra_conf={
             # The manifest enumerates exact file paths, so there is
             # nothing to discover — but a path list longer than the
@@ -108,61 +80,52 @@ def main(argv: list[str] | None = None) -> int:
             # across the map stage, exactly what the reference's M
             # controls. 96m/M keeps the sequential config at its
             # fastest coarse packing while giving M=4 ~4x the splits.
-            "spark.sql.files.maxPartitionBytes": f"{max(96 // args.mappers, 16)}m",
+            "spark.sql.files.maxPartitionBytes": f"{max(96 // mappers, 16)}m",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    def run_pipeline(out_dir: str) -> None:
-        rows = parse_manifest(args.manifest)
-        manifest = spark.createDataFrame(rows, MANIFEST_SCHEMA)
-        corpus = read_corpus(spark, manifest, paths=[p for _, p in rows])
-        # inverted_index, NOT ranked_index: write_letter_files imposes
-        # the full sink ordering itself (sortWithinPartitions on letter,
-        # df DESC, word ASC), so the global orderBy would only add a
-        # range-sampling job + an extra sort exchange that the letter
-        # repartition immediately destroys. Output is byte-identical
-        # either way (goldens diff-verified); the ranked relation
-        # remains the library API for consumers who want the globally
-        # ordered DataFrame.
-        write_letter_files(inverted_index(corpus), out_dir)
 
-    if args.warmup:
-        # Warm-vs-warm protocol (SURVEY.md §6.3): the reference binary
-        # was compiled at build time, so its `time -p` never measures
-        # compilation — ours would, because Catalyst planning and
-        # whole-stage-codegen JIT happen on first execution inside the
-        # fresh process. One untimed full run (temp output) compiles
-        # everything — exactly bench.py's warmup pass; the timed run
-        # then measures pipeline execution, like the reference's. Every
-        # config, the sequential baseline included, gets the identical
-        # warmup, so speedup ratios compare like with like.
-        import shutil
-        import tempfile
+def index_for(spark, manifest_path: str):
+    """The inverted index of the manifest's corpus, ready for
+    `write_letter_files` — inverted_index, NOT ranked_index: the sink
+    imposes the full ordering itself (sortWithinPartitions on letter,
+    df DESC, word ASC), so a global orderBy would only add a
+    range-sampling job and a sort exchange that the letter repartition
+    immediately destroys. Output is byte-identical either way."""
+    from apd_map_reduce_spark.operators.invindex import inverted_index
+    from apd_map_reduce_spark.sources.manifest import (
+        MANIFEST_SCHEMA,
+        parse_manifest,
+        read_corpus,
+    )
 
-        warm_dir = tempfile.mkdtemp(prefix="apd_warmup_")
-        try:
-            run_pipeline(warm_dir)
-        finally:
-            shutil.rmtree(warm_dir, ignore_errors=True)
-        # Min-of-2 timed passes (warm runs swing ±0.3 s on a ~2 s
-        # pipeline — enough to flip a speedup gate on a single sample;
-        # same damping rationale as bench.py's min-of-3). Identical
-        # treatment for every config, sequential baseline included.
-        t0 = time.time()
-        run_pipeline(args.out)
-        first = time.time() - t0
-        t1 = time.time()
-        run_pipeline(args.out)
-        pipeline_s = min(first, time.time() - t1)
-    else:
-        t0 = time.time()
-        run_pipeline(args.out)
-        pipeline_s = time.time() - t0
-    # pipeline-only time (excl. JVM/session startup) — the reference's
-    # `time -p` includes startup, but its startup is milliseconds; ours
-    # is ~14 s of JVM, so the checker reports both (SURVEY.md §6.3).
-    print(f"pipeline_s: {pipeline_s:.2f}")
+    rows = parse_manifest(manifest_path)
+    manifest = spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    return inverted_index(read_corpus(spark, manifest, paths=[p for _, p in rows]))
+
+
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv and argv[0] == "query":
+        return query_main(argv[1:])
+    parser = argparse.ArgumentParser(
+        prog="python -m apd_map_reduce_spark",
+        description="Inverted-index pipeline, reference-compatible CLI",
+    )
+    parser.add_argument("mappers", type=int, help="mapper parallelism (M)")
+    parser.add_argument("reducers", type=int, help="reducer parallelism (R)")
+    parser.add_argument("manifest", help="manifest file: first line N, then N paths")
+    parser.add_argument("--out", default="output", help="output dir for <letter>.txt files")
+    args = parser.parse_args(argv)
+    if args.mappers < 1 or args.reducers < 1:
+        parser.error("M and R must be >= 1")
+
+    from apd_map_reduce_spark.operators.invindex import write_letter_files
+
+    spark = session_for(args.mappers, args.reducers)
+    write_letter_files(index_for(spark, args.manifest), args.out)
     print(f"wrote 26 letter files to {args.out}")
     return 0
 

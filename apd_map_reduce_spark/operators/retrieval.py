@@ -51,7 +51,7 @@ from apd_map_reduce_spark.functions.embeddings import (
     valid_embeddings_sql,
 )
 
-from apd_map_reduce_spark.operators.similarity import _cos6, unit_rel
+from apd_map_reduce_spark.operators.similarity import _cos6, _cos_sql, unit_rel
 from apd_map_reduce_spark.queries.base import QueryDef, ranked_topk
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -145,8 +145,7 @@ c AS (SELECT vec_id AS doc_id, embedding::DOUBLE[] AS c_emb FROM embeddings
       WHERE {_EMB_GUARD} AND vec_id <> {probe_vec_id}),
 cos AS (
   SELECT doc_id,
-         ROUND(list_dot_product(q_emb, c_emb)
-               / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 6) AS cos_sim
+         {_cos_sql("q_emb", "c_emb")} AS cos_sim
   FROM c CROSS JOIN q
 ),
 sem AS (

@@ -108,6 +108,14 @@ def _cos6(q_vec: str, c_vec: str, q_norm: str, c_norm: str, dim: int = DIM) -> C
     )
 
 
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of `_cos6`: round(cos, 6) of two DOUBLE[] exprs."""
+    return (
+        f"ROUND(list_dot_product({a}, {b}) / "
+        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
+    )
+
+
 def _probe_topk(
     base: DataFrame,
     n_queries: int,
@@ -158,8 +166,7 @@ def _probe_topk_sql(k: int, block: str = "") -> str:
     the screen's join predicate, prefixed to the self-pair exclusion."""
     return f"""scored AS (
   SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(q_emb, c_emb)
-               / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 6) AS cos_sim
+         {_cos_sql("q_emb", "c_emb")} AS cos_sim
   FROM q JOIN c ON {block + " AND " if block else ""}neighbor_id <> query_id
 ),
 ranked AS (
@@ -298,11 +305,9 @@ def _near_dup_oracle(threshold: float = 0.95) -> str:
     return f"""
 WITH {_bucket_sql()}
 SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-       ROUND(list_dot_product(a.emb, c.emb)
-             / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(c.emb, c.emb))), 6) AS cos_sim
+       {_cos_sql("a.emb", "c.emb")} AS cos_sim
 FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-WHERE ROUND(list_dot_product(a.emb, c.emb)
-            / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(c.emb, c.emb))), 6) >= {threshold}
+WHERE {_cos_sql("a.emb", "c.emb")} >= {threshold}
 """
 
 
@@ -706,9 +711,7 @@ b AS (
 pruned AS (
   SELECT DISTINCT y.vec_id
   FROM b x JOIN b y ON x.cluster_id = y.cluster_id AND x.vec_id < y.vec_id
-  WHERE ROUND(list_dot_product(x.emb, y.emb)
-              / (sqrt(list_dot_product(x.emb, x.emb)) * sqrt(list_dot_product(y.emb, y.emb))), 6)
-        >= {threshold}
+  WHERE {_cos_sql("x.emb", "y.emb")} >= {threshold}
 )
 SELECT b.vec_id, b.cluster_id, (b.vec_id IN (SELECT vec_id FROM pruned)) AS pruned
 FROM b

@@ -62,6 +62,14 @@ def _count_features() -> list[F.Column]:
     ]
 
 
+# DuckDB twin of `_count_features()`: the same five counts, same names.
+_COUNT_FEATURES_SQL = f"""{WS_COUNT_SQL} AS n_tokens,
+       len(regexp_extract_all(text, '{_WORD_RE}')) AS n_words,
+       length(text) AS n_chars,
+       len(regexp_extract_all(text, '[0-9]')) AS n_digits,
+       len(regexp_extract_all(text, '{PUNCT_SQL}')) AS n_punct"""
+
+
 def token_stats(docs: DataFrame) -> DataFrame:
     """Per-doc token/char counts — integer-exact features."""
     # spread() first (dedup-family rule): the regexp counts are per-row
@@ -397,11 +405,7 @@ def _docs(spark, sf_dir):
 
 TOKEN_STATS_ORACLE = f"""
 SELECT doc_id,
-       {WS_COUNT_SQL} AS n_tokens,
-       len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
-       length(text) AS n_chars,
-       len(regexp_extract_all(text, '[0-9]')) AS n_digits,
-       len(regexp_extract_all(text, '{PUNCT_SQL}')) AS n_punct
+       {_COUNT_FEATURES_SQL}
 FROM documents
 """
 
@@ -410,12 +414,8 @@ _EN_PAT = r"(?i)\b(the|and|of|is|a)\b"
 QUALITY_ORACLE = f"""
 WITH s AS (
   SELECT doc_id,
-         {WS_COUNT_SQL} AS n_tokens,
-         len(regexp_extract_all(text, '[A-Za-z]+')) AS n_words,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[0-9]')) AS n_digits,
-         len(regexp_extract_all(text, '{PUNCT_SQL}')) AS n_punct,
-         len(regexp_extract_all(text, '{_EN_PAT}')) AS n_stopwords
+       {_COUNT_FEATURES_SQL},
+       len(regexp_extract_all(text, '{_EN_PAT}')) AS n_stopwords
   FROM documents
 )
 SELECT doc_id, n_tokens, n_chars,

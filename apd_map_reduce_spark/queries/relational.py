@@ -26,6 +26,7 @@ from apd_map_reduce_spark.queries.base import (
 )
 from apd_map_reduce_spark.plans.layout import spread_by
 from apd_map_reduce_spark.sources.tables import load_table, table_input_size
+from apd_map_reduce_spark.streaming.joins import click_purchase_attribution
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -181,9 +182,9 @@ def q5_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decade. Where the boundary falls is the estimator's call: at
     # sf10 (13.6 MB customer file) the column-pruned estimate is still
     # under the default 10 MB threshold and the plan keeps the
-    # broadcast (plans/r12/q5_supplier_volume_sf10_after.txt); at
-    # sf100 (136 MB) it switches to the shuffled join
-    # (plans/r12/*_sf100_*.txt). A cluster deployment sizes
+    # broadcast (records/plans/r12/q5_supplier_volume_sf10_after.txt);
+    # at sf100 (136 MB) it switches to the shuffled join
+    # (records/plans/r12/*_sf100_*.txt). A cluster deployment sizes
     # spark.sql.autoBroadcastJoinThreshold to its executor memory to
     # move that boundary; the decision stays data-driven either way.
     return (
@@ -1824,29 +1825,10 @@ def events_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval/range join: purchases matched to same-user clicks in the
     preceding 30 minutes. Scale: equality key (user_id) carries the
     shuffle; the range predicate filters within the hash bucket —
-    Spark's range-join shape without a cross product."""
-    e = _t(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
-    )
+    Spark's range-join shape without a cross product. The builder is
+    the streaming one; on a batch plan the optimizer drops its
+    watermarks, so the twin definition cannot drift from this query."""
+    return click_purchase_attribution(_t(spark, sf_dir, "events"))
 
 
 CLICK_ATTRIBUTION_ORACLE = """

@@ -8,7 +8,7 @@ score by min (noise only ever adds time).
 
     python scripts/ab_interleave.py --ref e439249 \
         --queries corpus_clean_snapshot,dedup_minhash_lsh \
-        --passes 5 --out AB_r10.json
+        --passes 5 --out ab.json
 
 Rather than shadow-importing one old module into the live session
 (which would have to assert every shared timed-path symbol is

@@ -8,9 +8,9 @@ float drift is a FAIL; near-miss diagnostics are printed to debug).
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
 Set CHECK_ORACLE_JSON=<path> to also dump a machine-readable summary
-(one record per query: status, rows, timings) — committed per round as
-SELFCHECK_r{N}.json so the full-registry result is auditable even when
-the external harness samples a subset.
+(one record per query: status, rows, timings), so the full-registry
+result is auditable even when an external harness samples a subset
+(past rounds' dumps: records/SELFCHECK_r*.json).
 """
 
 from __future__ import annotations

@@ -2,10 +2,11 @@
 current registry window closes it.
 
 The external correctness gate hashes the first 50 registry entries each
-round and records them in CORRECTNESS_r{NN}.json. The registry rotates
-that window per round (registry.ROUND) so the gate is cumulative, and
-hoists the current round's new queries (registry._NEW_IN_ROUND) into
-the window. This script recomputes, from the
+round and records them in CORRECTNESS_r{NN}.json — read here from the
+root, where a driver writes them, and from records/, where past rounds
+live. The registry rotates that window per round (registry.ROUND) so
+the gate is cumulative, and hoists the current round's new queries
+(registry._NEW_IN_ROUND) into the window. This script recomputes, from the
 committed artifacts alone, (a) which queries have never appeared in any
 driver window and (b) whether the CURRENT window covers all of them —
 so a query left outside every window is caught, not trusted away.
@@ -31,7 +32,9 @@ from apd_map_reduce_spark import registry  # noqa: E402
 def driver_hashed_names() -> set[str]:
     """Union of query names across all committed driver windows."""
     seen: set[str] = set()
-    for path in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
+    for path in sorted(
+        p for d in (REPO, REPO / "records") for p in glob.glob(str(d / "CORRECTNESS_r*.json"))
+    ):
         data = json.loads(Path(path).read_text())
         if isinstance(data, dict):
             seen.update(k for k in data if k not in ("summary", "meta", "sf"))

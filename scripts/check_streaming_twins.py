@@ -30,13 +30,10 @@ Behaviors covered:
                                    collect_set state)
 
 Usage: python scripts/check_streaming_twins.py [sf_dir]
-Set STREAMING_TWINS_JSON=<path> to dump the machine-readable summary
-(committed per round as STREAMING_TWINS_r{N}.json).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -98,30 +95,7 @@ def main() -> int:
             r = r.option("maxFilesPerTrigger", str(max_files))
         return r.parquet(src)
 
-    # Each twin record is stamped with the wall-clock of its whole
-    # section (stream drain + batch/oracle twin + compare) so runs at
-    # different sf tiers yield growth factors per twin, not just a
-    # suite total. Section wall is drain-dominated; the batch twin
-    # shares the decade's growth, so the factor is a fair ceiling on
-    # the streaming side's own growth.
-    import time as _time
-
-    class _TimedResults(dict):
-        # Instance attribute (not class-level): stamped at construction
-        # — i.e. immediately before section 1 starts — so the first
-        # twin's "sec" doesn't absorb unrelated setup, and a second
-        # instance gets its own clock.
-        def __init__(self):
-            super().__init__()
-            self._last = _time.time()
-
-        def __setitem__(self, key, value):
-            now = _time.time()
-            value = {**value, "sec": round(now - self._last, 3)}
-            self._last = now
-            super().__setitem__(key, value)
-
-    results: dict[str, dict] = _TimedResults()
+    results: dict[str, dict] = {}
 
     # 1. Tumbling hourly counts: complete-mode drain == batch twin ==
     #    DuckDB oracle.
@@ -426,11 +400,6 @@ def main() -> int:
         )
         for problem in rec["problems"] + rec.get("duckdb", {}).get("problems", []):
             print(f"      {problem}")
-    out = os.environ.get("STREAMING_TWINS_JSON")
-    if out:
-        with open(out, "w", encoding="utf-8") as fh:
-            json.dump(results, fh, indent=1, default=str)
-        print(f"wrote {out}")
     print("ALL PASS" if n_fail == 0 else f"{n_fail} FAILURES")
     return 1 if n_fail else 0
 

@@ -1,12 +1,11 @@
-"""r10 verdict directive #4: split the cold-flagship number.
+"""Split a cold flagship run into its phases.
 
-BENCH cold flagship = one fresh python process running the flagship
-query end-to-end. r10 measured 20.8 s vs r9's 14.0 s (+48%) and could
-not say which phase moved — box noise was plausible but unproven for
-COLD (the warm A/B harness doesn't cover process startup). This
-script runs N fresh child processes, each stamping monotonic times at
-the four phase boundaries, and reports per-phase min/median — min
-scoring because box noise is one-sided (box-noise-protocol memory):
+The bench's cold flagship number is one fresh python process running
+the flagship query end-to-end; on its own it cannot say which phase
+moved. This script runs N fresh child processes (scripts/timing.py's
+`fresh`), each stamping monotonic times at the phase boundaries, and
+reports per-phase min/median (`timing.stats`) — min scoring because
+box noise is one-sided:
 
   imports   — `import apd_map_reduce_spark.registry` + `__spark_entry__`
               (the full ~25-operator-module surface the registry pulls
@@ -22,6 +21,7 @@ loading behind registry.queries(); if `session`/`first_run` dominate,
 the number is a JVM/runtime floor no repo change removes.
 
 Usage: python scripts/cold_split.py [out_json] [--reps 5]
+Prints the per-phase stats; out_json, if given, also gets every run.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from scripts.timing import fresh  # noqa: E402
+from scripts.timing import fresh, stats  # noqa: E402
 
 CHILD_SRC = r"""
 import json, sys, time
@@ -64,7 +64,7 @@ def main() -> int:
         i = args.index("--reps")
         reps = int(args[i + 1])
         del args[i : i + 2]
-    out_path = Path(args[0]) if args else REPO / "COLD_SPLIT_r11.json"
+    out_path = args[0] if args else None
 
     runs = []
     for _ in range(reps):
@@ -76,23 +76,12 @@ def main() -> int:
         runs.append(rec)
         print(rec, flush=True)
 
-    def stat(key):
-        vals = sorted(r[key] for r in runs)
-        return {"min": vals[0], "med": vals[len(vals) // 2]}
-
-    payload = {
-        "directive": "r10 verdict #4: cold flagship phase split",
-        "protocol": (
-            f"{reps} fresh child processes, monotonic stamps at phase "
-            "boundaries; min + median per phase (one-sided box noise)"
-        ),
-        "phases": {k: stat(k) for k in
-                   ("imports", "session", "first_run", "total", "interp_boot")},
-        "runs": runs,
-    }
-    with open(out_path, "w", encoding="utf-8") as fh:
-        json.dump(payload, fh, indent=1)
-    print(f"wrote {out_path}")
+    phases = ("imports", "session", "first_run", "total", "interp_boot")
+    payload = {"phases": {k: stats([r[k] for r in runs]) for k in phases}, "runs": runs}
+    print(json.dumps(payload["phases"]))
+    if out_path:
+        Path(out_path).write_text(json.dumps(payload, indent=1), encoding="utf-8")
+        print(f"wrote {out_path}")
     return 0
 
 

@@ -10,9 +10,9 @@ during construction; the dumped plan is the returned DataFrame's —
 checkpointed roots included — which is exactly the lineage claim.
 
 Writes OUTDIR/<query>_<SUFFIX>.txt for each bench headline query —
-the optimization-round evidence files (plans/r12/): a judge who cannot
-run Spark reads these to verify plan-shape claims (Exchange count,
-join strategy, PushedFilters/ReadSchema, no BatchEvalPython).
+plan-shape evidence (records/plans/r12/ holds past rounds' dumps): a
+reader who cannot run Spark checks plan-shape claims there (Exchange
+count, join strategy, PushedFilters/ReadSchema, no BatchEvalPython).
 
 REPO_ROOT (optional) lets the same script run against a checked-out
 historical tree (git worktree) to produce the _before files; the

@@ -1,25 +1,26 @@
 """The reference checker, ported (SURVEY.md §3.2-3.3): run the engine
-CLI over the reference's 355-file corpus under the checker's 9 (M,R)
-configs, diff every letter file against the goldens, and score speedups
-with the checker's thresholds.
+CLI's pipeline over the reference's 355-file corpus under the checker's
+9 (M,R) configs, diff every letter file against the goldens, and score
+speedups with the checker's thresholds.
 
 Differences from checker.sh, documented: one warm JVM would be unfair
-to the sequential baseline, so each config runs a fresh process (like the
-reference); wall_s INCLUDES JVM+session startup AND, since round 4,
-three pipeline executions (the --warmup pass + 2 timed passes), so it
-is NOT comparable to r1-r3 wall_s or to the reference's single-run
-`time -p` — it exists only as a same-artifact sanity bound.
-pipeline_s is the min of 2 timed passes AFTER an in-process warmup
-pass (--warmup), because the reference binary was compiled at build
-time while Catalyst/codegen compile on first execution — warm-vs-warm
-is the honest execution comparison (SURVEY.md §6.3) — and because a
-single ~2 s sample swings ±0.3 s, enough to flip a gate. Every config,
-sequential baseline included, gets the identical warmup + min-of-2.
-Speedup gates are scored on pipeline_s.
+to the sequential baseline, so each config runs a fresh process (like
+the reference), timed by scripts/timing.py. Inside it, `time_runs`
+times the CLI's own session and pipeline (`__main__.session_for` /
+`index_for`) into the real letter sink: one untimed pass, because the
+reference binary was compiled at build time while Catalyst/codegen
+compile on first execution — warm-vs-warm is the honest execution
+comparison (SURVEY.md §6.3) — then 2 timed passes, because a single
+~2 s sample swings ±0.3 s, enough to flip a gate. pipeline_s is the
+min of those 2 samples, and speedup gates are scored on it. wall_s is
+the whole process (JVM + session startup + all 3 passes), so it is
+NOT comparable to the reference's single-run `time -p` — it exists
+only as a same-artifact sanity bound.
 
 Usage: python scripts/run_reference_checker.py [manifest] [golden_dir]
        [--repeat N] [--block B]
 Prints one JSON line with per-config wall time, correctness, speedups.
+`--child M R MANIFEST OUT` is the internal per-config entry point.
 
 Noise protocol (r7): gate rates from SINGLE sweeps measure the box's
 neighbors as much as the code — r6's medians ran ~20% above r5's for
@@ -36,14 +37,18 @@ independent verdicts' spread.
 from __future__ import annotations
 
 import json
+import os
 import shutil
-import subprocess
 import sys
 import tempfile
-import time
+from functools import partial
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from scripts.timing import RESULT, fresh, time_runs  # noqa: E402
+
 MANIFEST = "/root/reference/tema1a/checker/test.txt"
 GOLDEN = "/root/reference/tema1a/checker/test_out"
 CONFIGS = [(1, 1), (1, 2), (1, 4), (2, 1), (2, 2), (2, 4), (4, 1), (4, 2), (4, 4)]
@@ -66,24 +71,42 @@ def diff_outputs(out_dir: str, golden_dir: str) -> bool:
     return True
 
 
+def _child(m: int, r: int, manifest: str, out: str) -> None:
+    """One config's process: 1 untimed + 2 timed CLI pipelines into
+    `out`, printed as `RESULT {"samples": [...]}`."""
+    from apd_map_reduce_spark.__main__ import index_for, session_for
+    from apd_map_reduce_spark.operators.invindex import write_letter_files
+
+    spark = session_for(m, r)
+    samples = time_runs(
+        spark,
+        partial(index_for, spark, manifest),
+        runs=2,
+        sink=partial(write_letter_files, out_dir=out),
+    )
+    print(RESULT + json.dumps({"samples": samples}), flush=True)
+
+
 def run_config(m: int, r: int, manifest: str, golden: str) -> dict:
     out = tempfile.mkdtemp(prefix=f"chk_m{m}r{r}_")
-    t0 = time.time()
-    proc = subprocess.run(
-        [sys.executable, "-m", "apd_map_reduce_spark", str(m), str(r), manifest, "--out", out, "--warmup"],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=str(REPO),
-    )
-    wall = time.time() - t0
-    ok = proc.returncode == 0 and diff_outputs(out, golden)
+    argv = [sys.executable, str(Path(__file__).resolve()), "--child",
+            str(m), str(r), os.path.abspath(manifest), out]
+    try:
+        res, wall = fresh(argv)
+    except RuntimeError as exc:  # the child died: report, keep sweeping
+        print(exc, file=sys.stderr)
+        res, wall = {"samples": []}, None
+    ok = wall is not None and diff_outputs(out, golden)
     shutil.rmtree(out, ignore_errors=True)
-    pipeline = None
-    for line in proc.stdout.splitlines():
-        if line.startswith("pipeline_s:"):
-            pipeline = float(line.split(":")[1])
-    return {"m": m, "r": r, "wall_s": round(wall, 2), "pipeline_s": pipeline, "correct": ok}
+    samples = res["samples"]
+    return {
+        "m": m,
+        "r": r,
+        "wall_s": wall,
+        "pipeline_s": min(samples) if samples else None,
+        "samples": samples,
+        "correct": ok,
+    }
 
 
 def score(results: list[dict]) -> dict:
@@ -91,14 +114,14 @@ def score(results: list[dict]) -> dict:
     for x in results:
         key = (x["m"], x["r"])
         if key in THRESHOLDS:
-            full, partial = THRESHOLDS[key]
-            sp = seq["wall_s"] / x["wall_s"]
-            x["speedup_wall"] = round(sp, 2)
+            full, part = THRESHOLDS[key]
+            if x["wall_s"] and seq["wall_s"]:
+                x["speedup_wall"] = round(seq["wall_s"] / x["wall_s"], 2)
             if x.get("pipeline_s") and seq.get("pipeline_s"):
                 spp = seq["pipeline_s"] / x["pipeline_s"]
                 x["speedup_pipeline"] = round(spp, 2)
                 x["gate"] = (
-                    "full" if spp >= full else ("partial" if spp >= partial else "FAIL")
+                    "full" if spp >= full else ("partial" if spp >= part else "FAIL")
                 )
     n_correct = sum(1 for x in results if x["correct"])
     return {
@@ -110,6 +133,9 @@ def score(results: list[dict]) -> dict:
 
 def main() -> None:
     args = list(sys.argv[1:])
+    if args[:1] == ["--child"]:
+        _child(int(args[1]), int(args[2]), args[3], args[4])
+        return
     repeat = 1
     block = 4
     if "--block" in args:
@@ -178,9 +204,9 @@ def main() -> None:
                     gates.append("ABSENT")
                     continue
                 spp = min(seq_vals) / min(cfg_vals)
-                full, partial = THRESHOLDS[(m, r)]
+                full, part = THRESHOLDS[(m, r)]
                 gates.append(
-                    "full" if spp >= full else ("partial" if spp >= partial else "FAIL")
+                    "full" if spp >= full else ("partial" if spp >= part else "FAIL")
                 )
             block_gates[f"m{m}r{r}"] = gates
         out = {

@@ -2,7 +2,9 @@
 
 Protocol of record (SURVEY.md §6.3, BASELINE.md): `warm` untimed runs,
 then `runs` timed runs on a monotonic clock. Every run executes the
-query's complete physical plan into Spark's noop sink, and the SQL
+query's complete physical plan into a sink — Spark's noop sink unless
+the harness times a real one (the reference checker's letter files) —
+and the SQL
 relation cache is cleared after each run so no run reads an earlier
 run's caches. Scoring is min (box noise only ever adds time) with the
 median alongside to expose spread.
@@ -51,14 +53,15 @@ def time_runs(
     build: Callable[[], DataFrame],
     runs: int,
     warm: int = 1,
+    sink: Callable[[DataFrame], None] = noop,
 ) -> list[float]:
-    """`warm` untimed then `runs` timed noop runs of `build()`; returns
+    """`warm` untimed then `runs` timed runs of `sink(build())`; returns
     the timed wall seconds (query construction included). The cache is
     cleared after every run, warm ones too."""
     samples: list[float] = []
     for i in range(warm + runs):
         t0 = time.monotonic()
-        noop(build())
+        sink(build())
         dt = time.monotonic() - t0
         spark.catalog.clearCache()
         if i >= warm:

@@ -16,6 +16,9 @@ from apd_map_reduce_spark.sources.tables import load_table
 from .conftest import SF_SMOKE
 from .test_invindex import GOLDEN_SMALL
 
+# The tree under test, wherever it is checked out.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_cli_matches_golden(small_corpus_dir, tmp_path):
     """`python -m apd_map_reduce_spark 2 2 manifest` — the reference
@@ -35,7 +38,7 @@ def test_cli_matches_golden(small_corpus_dir, tmp_path):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert res.returncode == 0, res.stderr[-2000:]
     for ch, want in GOLDEN_SMALL.items():
@@ -54,7 +57,7 @@ def test_cli_empty_manifest_writes_empty_letter_files(tmp_path):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        cwd=ROOT,
     )
     assert res.returncode == 0, res.stderr[-2000:]
     files = sorted(os.listdir(out))
@@ -68,7 +71,7 @@ def test_cli_rejects_bad_args():
         capture_output=True,
         text=True,
         timeout=120,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert res.returncode != 0
     assert "M and R must be >= 1" in res.stderr

@@ -25,6 +25,9 @@ def test_time_runs_counts_and_releases_cache(spark):
     samples = time_runs(spark, build, runs=3, warm=2)
     assert len(calls) == 5
     assert len(samples) == 3 and all(s > 0 for s in samples)
+    sunk = []
+    assert len(time_runs(spark, build, runs=1, sink=sunk.append)) == 1
+    assert len(sunk) == 2  # warm runs go to the sink too
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
