@@ -90,19 +90,20 @@ def session_for(mappers: int, reducers: int):
 def index_for(spark, manifest_path: str):
     """The inverted index of the manifest's corpus, ready for
     `write_letter_files` — inverted_index, NOT ranked_index: the sink
-    imposes the full ordering itself (sortWithinPartitions on letter,
-    df DESC, word ASC), so a global orderBy would only add a
-    range-sampling job and a sort exchange that the letter repartition
-    immediately destroys. Output is byte-identical either way."""
+    sorts the collected rows on the driver (letter, df DESC, word ASC),
+    so a global orderBy would only add a range-sampling job and a sort
+    exchange. Output is byte-identical either way. The manifest is
+    parsed once and its paths reused, so no job reads it back."""
     from apd_map_reduce_spark.operators.invindex import inverted_index
     from apd_map_reduce_spark.sources.manifest import (
         MANIFEST_SCHEMA,
         parse_manifest,
         read_corpus,
     )
+    from apd_map_reduce_spark.sources.tables import local_frame
 
     rows = parse_manifest(manifest_path)
-    manifest = spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    manifest = local_frame(spark, rows, MANIFEST_SCHEMA)
     return inverted_index(read_corpus(spark, manifest, paths=[p for _, p in rows]))
 
 

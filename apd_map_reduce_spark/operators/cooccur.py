@@ -50,7 +50,7 @@ from apd_map_reduce_spark.plans.layout import (
     spread,
 )
 from apd_map_reduce_spark.queries.base import QueryDef, grouped_topk, ranked_topk
-from apd_map_reduce_spark.sources.tables import load_table
+from apd_map_reduce_spark.sources.tables import load_table, local_frame
 
 COOCCUR_WINDOW = 2  # pair tokens with the next 1..W positions
 MIN_PAIR_COUNT = 5  # drop noise pairs (and bound PMI output size)
@@ -662,9 +662,7 @@ def bm25_multi_search(
 
 
 def _bm25_multi_docs(spark, sf_dir):
-    queries = spark.createDataFrame(
-        list(BM25_MULTI_QUERY_SET), "query_id LONG, term STRING"
-    )
+    queries = local_frame(spark, BM25_MULTI_QUERY_SET, "query_id LONG, term STRING")
     return bm25_multi_search(_docs(spark, sf_dir), queries)
 
 

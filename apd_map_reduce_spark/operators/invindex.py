@@ -15,22 +15,22 @@ Semantic contract (bit-exact vs the reference goldens):
 Physical plan (what Catalyst produces, verified via .explain):
 FileScan text → Generate(explode) → Project/Filter →
 ObjectHashAggregate(partial collect_set) → Exchange(hash by word) →
-ObjectHashAggregate(final) → Sort → sink. The partial aggregation IS
-the reference's per-mapper `map<word,set<int>>` combiner
-(`tema1a/src/main.cpp:101-103`); the exchange IS its barrier+fetch
-(`main.cpp:111-135`). Zero custom planning code.
+ObjectHashAggregate(final) → Arrow collect → driver-side sort → letter
+files. The partial aggregation IS the reference's per-mapper
+`map<word,set<int>>` combiner (`tema1a/src/main.cpp:101-103`); the
+exchange IS its barrier+fetch (`main.cpp:111-135`). Zero custom
+planning code.
 
 Scale posture: the only global operation is the shuffle keyed by word
 (high cardinality → even distribution; no skew risk akin to the
-reference's 26-letter cap, SURVEY.md §6.3). The final per-letter sort
-is done WITHIN letter partitions (repartition('letter') +
-sortWithinPartitions), so no single-node global sort exists at 100 TB.
+reference's 26-letter cap, SURVEY.md §6.3). The letter-file sink
+collects the formatted index to the driver, because the reference's
+contract is 26 local files; partitioned outputs stay in `sinks.py`.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -97,56 +97,29 @@ def format_rows(index: DataFrame) -> DataFrame:
 
 
 def write_letter_files(index: DataFrame, out_dir: str) -> None:
-    """Partitioned text sink: one `<letter>.txt` per letter a-z, rows
+    """The reference sink: one `<letter>.txt` per letter a-z, rows
     ordered (df DESC, word ASC) within each file; empty letters write
-    empty files (superset behavior — SURVEY.md §5.2 decision).
+    empty files (superset behavior — SURVEY.md §5.2 decision). A row
+    whose word does not start with a-z has no file and is not written.
 
-    Spark-first layout: repartition by letter (26 tasks, one output
-    partition each) + sortWithinPartitions — equivalent to the global
-    sort because each file holds exactly one letter. At 100 TB you
-    would keep `partitionBy('letter')` directories of part-files; the
-    single-file-per-letter concat reproduces the reference's exact sink
-    contract for the golden diff. (A driver-side toLocalIterator sink
-    was tried and measured SLOWER — the global orderBy exchange plus
-    serialized partition fetch costs more than the 26-task write.)
+    One Arrow collect of the formatted rows, then one driver-side sort
+    on (letter, df DESC, word ASC) and one write per file: no exchange,
+    no part files, every output byte written once. Words are `[a-z]+`
+    (functions/text.py), so Arrow's byte order is Spark's string order.
+    The driver holds the output once, capped by
+    `spark.driver.maxResultSize`; partitioned part-file outputs at
+    100 TB are `sinks.py`'s job, the reference's contract is 26 files.
     """
-    formatted = format_rows(index)
-    tmp = out_dir.rstrip("/") + ".__spark_tmp__"
-    (
-        # Lead with `letter`: the partitioned-file writer requires its
-        # input sorted by partition columns and would otherwise insert
-        # its own (unstable) sort, clobbering the (df, word) order.
-        # Explicit 26 partitions — the sink's natural key count, NOT
-        # spark.sql.shuffle.partitions: the CLI sets shuffle.partitions
-        # = R for the word aggregation, and letting the sink inherit
-        # R=1/R=2 serialized the letter writes behind 1-2 tasks. Hash
-        # partitioning 26 keys into 26 buckets collides (≈17 occupied
-        # partitions, some tasks writing 2-3 letters), so this is NOT
-        # strictly one-task-per-letter — but it still beats R tasks at
-        # every (M,R) incl. sequential, and the collision-free
-        # alternative (repartitionByRange(26, "letter")) was measured
-        # SLOWER at both local[2]R1 (3.14 vs 3.00 min-of-4) and
-        # local[6]R2 (1.81 vs 1.56): its range-boundary sampling job
-        # costs more than the imbalance it removes at this scale.
-        # Each letter still lands wholly in one partition either way,
-        # so output bytes are identical (A/B diffed).
-        formatted.repartition(26, "letter")
-        .sortWithinPartitions(F.asc("letter"), F.desc("df"), F.asc("word"))
-        .select("letter", "text_line")
-        .write.mode("overwrite")
-        .partitionBy("letter")
-        .text(tmp)
+    import pyarrow.compute as pc
+
+    table = format_rows(index).toArrow()
+    table = table.take(
+        pc.sort_indices(
+            table, [("letter", "ascending"), ("df", "descending"), ("word", "ascending")]
+        )
     )
     os.makedirs(out_dir, exist_ok=True)
     for ch in ALPHABET:
-        target = os.path.join(out_dir, f"{ch}.txt")
-        part_dir = os.path.join(tmp, f"letter={ch}")
-        with open(target, "w", encoding="utf-8") as out:
-            if os.path.isdir(part_dir):
-                parts = sorted(
-                    f for f in os.listdir(part_dir) if f.startswith("part-")
-                )
-                for p in parts:
-                    with open(os.path.join(part_dir, p), encoding="utf-8") as fh:
-                        shutil.copyfileobj(fh, out)
-    shutil.rmtree(tmp, ignore_errors=True)
+        lines = table["text_line"].filter(pc.equal(table["letter"], ch))
+        with open(os.path.join(out_dir, f"{ch}.txt"), "w", encoding="utf-8") as out:
+            out.writelines(f"{line}\n" for line in lines.to_pylist())

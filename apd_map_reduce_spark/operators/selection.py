@@ -49,7 +49,7 @@ from apd_map_reduce_spark.functions.text import (
 )
 from apd_map_reduce_spark.plans.layout import explode_nonnull, spread
 from apd_map_reduce_spark.queries.base import QueryDef
-from apd_map_reduce_spark.sources.tables import load_table
+from apd_map_reduce_spark.sources.tables import load_table, local_frame
 
 # Feature-space size for the hashing trick. 64 keeps the model dim
 # oracle-printable; real classifiers use 2^18+ — ONLY the broadcast
@@ -103,7 +103,7 @@ def quality_logreg(docs: DataFrame) -> DataFrame:
     Plan: scan → explode → broadcast-join the NB_FEATURES-row model →
     per-doc hash aggregate. One shuffle (doc_id, uniform)."""
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(feature_weights(), "bucket LONG, wint LONG")
+    wdf = local_frame(spark, feature_weights(), "bucket LONG, wint LONG")
     scored = _bucketed_tokens(docs).join(F.broadcast(wdf), "bucket")
     agg = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),

@@ -9,8 +9,10 @@ Reference semantics (SURVEY.md §2.1):
 
 Spark gives no stable file ordinal for free, so the ordinal contract is
 made explicit: the manifest is numbered driver-side (it is tiny — a list
-of paths), broadcast, and joined to `input_file_name()`. At 100 TB the
-manifest is still only O(file count) rows, so the broadcast join holds.
+of paths), handed to Spark as an Arrow local relation (no job, no
+Python worker), and broadcast-joined to `input_file_name()`. At 100 TB
+the manifest is still only O(file count) rows, so the broadcast join
+holds.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from apd_map_reduce_spark.sources.tables import local_frame
 
 MANIFEST_SCHEMA = "file_id INT, path STRING"
 
@@ -43,9 +47,10 @@ def parse_manifest(manifest_path: str) -> list[tuple[int, str]]:
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     """Parse the reference manifest format: line 1 = N, then N paths.
 
-    Returns DataFrame[file_id INT (1-based ordinal), path STRING (absolute)].
+    Returns DataFrame[file_id INT (1-based ordinal), path STRING (absolute)]
+    over a `LocalRelation`.
     """
-    return spark.createDataFrame(parse_manifest(manifest_path), MANIFEST_SCHEMA)
+    return local_frame(spark, parse_manifest(manifest_path), MANIFEST_SCHEMA)
 
 
 def _tag_file_ids(text: DataFrame, manifest: DataFrame) -> DataFrame:

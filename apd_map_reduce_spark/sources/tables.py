@@ -68,6 +68,22 @@ def events_ts_micros(events: DataFrame) -> DataFrame:
     return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A driver-side row list as a DataFrame over a `LocalRelation`,
+    typed by the DDL `schema`. The rows cross to the JVM as one Arrow
+    table. A Python list or an empty pandas frame handed to
+    `createDataFrame` plans a pickled RDD instead, whose every use
+    runs a job on Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], arrow)
+    return spark.createDataFrame(table, struct)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 

@@ -53,6 +53,7 @@ from apd_map_reduce_spark.operators.dedup import (
     stop_shingles,
     verify_jaccard,
 )
+from apd_map_reduce_spark.sources.tables import local_frame
 
 MATCHES_SCHEMA = (
     "batch_doc LONG, corpus_doc LONG, jaccard DOUBLE, batch_id LONG"
@@ -151,9 +152,9 @@ def _screen_and_index(index_path: str, matches_path: str, threshold: float):
             # 1000 files by default — a small first deployment is one
             # batch, and 'no duplicates yet' must read as 0 rows, not
             # a missing-path error).
-            spark.createDataFrame([], MATCHES_SCHEMA).write.mode(
-                "append"
-            ).parquet(matches_path)
+            local_frame(spark, [], MATCHES_SCHEMA).write.mode("append").parquet(
+                matches_path
+            )
 
         # Admit the batch to the index (append-only; the streaming
         # checkpoint guarantees each batch lands exactly once absent

@@ -31,6 +31,7 @@ the sf1 decade). Usage: python scripts/gen_degenerate_tables.py
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -53,7 +54,10 @@ TABLES = [
 ]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    ).parse_args(argv)
     OUT.mkdir(parents=True, exist_ok=True)
     con = duckdb.connect()
     for t in TABLES:
