@@ -36,7 +36,11 @@ written once:
               `lsh_candidate_pairs` dedups and
               `lsh_collision_multiplicity` counts
   verify      `verify_jaccard` (candidates ⋈ both guarded shingle sets)
-  expand      `_expand_exact_dups` (exact-dup members of the reps)
+  rep pairs   `_lsh_rep_pairs` (digests, dup members, guard, screen and
+              verify over one representative per content hash)
+  expand      `_expand_exact_dups` (exact-dup members of the reps) —
+              output only: `minhash_lsh_pairs` returns it, while the
+              clean-corpus near-dup drop reads the rep pairs directly
 The oracles mirror it with `_sig_band_ctes` / `_screen_ctes`.
 
 Filtered-universe semantics: `ngram_jaccard_pairs` computes Jaccard
@@ -862,6 +866,26 @@ def minhash_lsh_pairs(
     AND filtered shingle sets ⇒ identical signature/bands/jaccard, so
     the oracle needs no rep logic.
     """
+    return _expand_exact_dups(
+        *_lsh_rep_pairs(docs, threshold, clusters, bands, rows, sh, max_df)
+    )
+
+
+def _lsh_rep_pairs(
+    docs: DataFrame,
+    threshold: float = NEARDUP_THRESHOLD,
+    clusters: DataFrame | None = None,
+    bands: int = LSH_BANDS,
+    rows: int = LSH_ROWS,
+    sh: DataFrame | None = None,
+    max_df: int = MAX_SHINGLE_DF,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(rep_pairs, dup_members, shf) — `minhash_lsh_pairs` before its
+    exact-dup expansion: the verified (doc_a, doc_b, jaccard) pairs over
+    one representative per content hash, the (doc_id, rep_id) members
+    of clusters with > 1 copy, and the guarded rep-restricted shingle
+    relation the pairs were verified on. A caller that needs only the
+    representative level (the clean-corpus b-side drop) stops here."""
     digests = docs.select("doc_id", F.md5("text").alias("ch"))
     if clusters is None:
         clusters = dedup_exact(docs)
@@ -885,8 +909,7 @@ def minhash_lsh_pairs(
         dup_extras, "doc_id", "left_anti"
     ).cache()
     candidates = lsh_candidate_pairs(docs, bands=bands, rows=rows, shf=sh)
-    rep_pairs = verify_jaccard(candidates, sh, sh, threshold)
-    return _expand_exact_dups(rep_pairs, dup_members, sh)
+    return verify_jaccard(candidates, sh, sh, threshold), dup_members, sh
 
 
 def _sig_band_ctes(bands: int, rows: int, src: str = "shf", keys: str = "doc_id") -> str:

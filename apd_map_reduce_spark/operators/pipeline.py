@@ -10,9 +10,14 @@ operations a large-scale training-data pipeline would need").
       → clean snapshot
 
 Near-dup removal is single-pass (drop any doc that is the b-side of a
-qualifying pair) — deterministic and shuffle-bounded; transitive-closure
-grouping (connected components) is the iterative refinement a real
-pipeline might add and is documented as out of scope here.
+qualifying pair) — deterministic and shuffle-bounded. The b-side drop is
+taken at the representative level: from the LSH pairs over one doc per
+content hash, before `minhash_lsh_pairs` would expand them over the
+exact-dup members. That expansion adds no representative as a doc_b,
+and only representatives pass the exact-dup gate, so the result is the
+same (argument at the call site). Transitive-closure grouping
+(connected components) is the iterative refinement a real pipeline
+might add and is documented as out of scope here.
 
 `materialize_clean_snapshot` writes the surviving rows as partitioned
 parquet — the publishable dataset snapshot — and counts them with an
@@ -26,9 +31,9 @@ from pyspark.sql import functions as F
 
 from apd_map_reduce_spark.functions.text import WS_COUNT_SQL
 from apd_map_reduce_spark.operators.dedup import (
+    _lsh_rep_pairs,
     _minhash_oracle,
     dedup_exact,
-    minhash_lsh_pairs,
 )
 from apd_map_reduce_spark.operators.textstats import quality_score
 from apd_map_reduce_spark.plans.observe import observed
@@ -51,10 +56,11 @@ def clean_corpus(docs: DataFrame) -> DataFrame:
     keep_exact = clusters.select(F.col("keep_doc_id").alias("doc_id"))
     survivors = docs.join(keep_exact, "doc_id", "left_semi")
 
-    near_pairs = minhash_lsh_pairs(
-        docs, threshold=NEAR_DUP_THRESHOLD, clusters=clusters
-    )
-    drop_b = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    # Rep-level drop == the expanded one: survivors are reps, rep pairs
+    # have ra < rb, and an expanded greatest(ea, eb) is a rep only if it
+    # is rb (ra needs eb < ra < rb <= eb); intra-cluster doc_b's aren't.
+    rep_pairs, _, _ = _lsh_rep_pairs(docs, NEAR_DUP_THRESHOLD, clusters=clusters)
+    drop_b = rep_pairs.select(F.col("doc_b").alias("doc_id"))
     survivors = survivors.join(drop_b, "doc_id", "left_anti")
 
     q = quality_score(docs).select("doc_id", "n_tokens", "alpha_token_ratio")

@@ -10,6 +10,15 @@ chosen to also be the right default on a 1000-executor cluster:
   * shuffle.partitions sized to cores locally; on a real cluster this
     is AQE-coalesced upward from `initialPartitionNum`.
   * ANSI off + UTC session timezone for deterministic oracle parity.
+  * Generated-class cache of 500 entries (Spark's default is 100).
+    One pass of the 13 headline queries at sf0.01 compiles 253-270
+    distinct classes (289 over three passes); one clean snapshot
+    compiles ~90. A plan's class count follows the plan, not the data,
+    so at 100 the cache evicts classes before the next pass reuses
+    them at every scale: each headline pass recompiled ~260, and a
+    warm snapshot up to 46 of its ~105 (CHANGES.md has the sweep). The
+    cache is per JVM, so on a cluster every executor compiles and
+    caches its own copy too.
 """
 
 from __future__ import annotations
@@ -78,6 +87,8 @@ def get_spark(
         # rendered values agree engine-to-engine under the UTC session tz.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
+        # Generated-class cache sized to the engine's plans (module doc).
+        .config("spark.sql.codegen.cache.maxEntries", "500")
         # 100 TB posture: bound scan task size so a partition fits in
         # executor memory regardless of input file layout. Deployment
         # dial (guide §6 suggests 512m-1g for big sequential scans on

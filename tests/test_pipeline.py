@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import subprocess
+import sys
 import threading
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -32,6 +37,84 @@ def test_clean_corpus_drops_planted_duplicates(spark):
     keep = {r.doc_id for r in clean_corpus(planted).collect()}
     assert 9001 not in keep, "exact duplicate must drop (higher id)"
     assert 0 in keep, "canonical copy (min id) must survive"
+
+
+def _words(group: int, n: int = 20) -> list[str]:
+    # Letters-only vocabulary private to `group`: no shingle is shared
+    # across groups, and every token counts as alphabetic.
+    return ["".join(chr(97 + int(c)) for c in f"{group:02d}{i:02d}") + "x" for i in range(n)]
+
+
+def test_clean_corpus_drops_near_dups_at_rep_level(spark, tmp_path):
+    # The b-side drop reads the representative-level LSH pairs; it must
+    # equal both the DuckDB oracle and the drop over the pairs expanded
+    # across exact-dup clusters.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from apd_map_reduce_spark.operators.dedup import (
+        MAX_SHINGLE_DF,
+        dedup_exact,
+        minhash_lsh_pairs,
+    )
+    from apd_map_reduce_spark.operators.pipeline import (
+        MIN_ALPHA_RATIO,
+        MIN_TOKENS,
+        NEAR_DUP_THRESHOLD,
+        _clean_corpus_oracle,
+    )
+    from apd_map_reduce_spark.operators.textstats import quality_score
+
+    a, b, c, d = (" ".join(_words(g)) for g in range(4))
+    a_near = " ".join(_words(0)[:-1] + ["zzzx"])  # jaccard 17/19 with a
+    d_near = " ".join(_words(3)[:-1] + ["zzyx"])
+    texts = {
+        1: a, 10: a, 5: a_near,  # cluster {1, 10} near singleton 5
+        20: b, 21: b, 22: b,  # intra-cluster pairs, no near-dup
+        30: d, 31: d_near,  # plain near-dup pair of singletons
+        400: None, 401: None,  # NULL-text pair
+    }
+    # A cluster of max_df + 1 copies: every shingle is a stop-shingle.
+    texts.update({100 + i: c for i in range(MAX_SHINGLE_DF + 1)})
+    ids = sorted(texts)
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": [texts[i] for i in ids],
+                "lang": ["en"] * len(ids),
+                "source": ["s"] * len(ids),
+                "n_chars": pa.array([len(texts[i] or "") for i in ids], pa.int64()),
+            }
+        ),
+        path,
+    )
+    docs = spark.read.parquet(path)
+
+    got = {r.doc_id for r in clean_corpus(docs).collect()}
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    oracle = {r[0] for r in con.execute(_clean_corpus_oracle()).fetchall()}
+
+    expanded = minhash_lsh_pairs(docs, threshold=NEAR_DUP_THRESHOLD)
+    pairs = {(r.doc_a, r.doc_b) for r in expanded.collect()}
+    # The fixture exercises every expansion branch the drop skips.
+    assert {(1, 5), (5, 10), (20, 21), (21, 22), (30, 31)} <= pairs
+    assert not {p for p in pairs if p[0] >= 100 or p[1] >= 100}
+    keep_exact = dedup_exact(docs).select(F.col("keep_doc_id").alias("doc_id"))
+    good = quality_score(docs).filter(
+        (F.col("n_tokens") >= MIN_TOKENS) & (F.col("alpha_token_ratio") >= MIN_ALPHA_RATIO)
+    )
+    expanded_drop = (
+        docs.join(keep_exact, "doc_id", "left_semi")
+        .join(expanded.select(F.col("doc_b").alias("doc_id")), "doc_id", "left_anti")
+        .join(good, "doc_id", "left_semi")
+    )
+    parent_formula = {r.doc_id for r in expanded_drop.collect()}
+
+    assert got == oracle == parent_formula == {1, 20, 30, 100}
 
 
 def test_snapshot_roundtrip(spark, tmp_path):
@@ -65,6 +148,42 @@ def test_snapshot_runs_lsh_once(spark, tmp_path):
     lsh = [e for e in execs if band_join.search(e.physicalPlanDescription())]
     assert len(lsh) == 1, [e.description() for e in execs]
     assert not [e for e in execs if e.description().startswith("count at")]
+
+
+_SNAPSHOT_COMPILES = """
+import json, sys
+from apd_map_reduce_spark.operators.pipeline import materialize_clean_snapshot
+from apd_map_reduce_spark.session import get_spark
+from apd_map_reduce_spark.sources.tables import load_table
+spark = get_spark(master="local[4]", shuffle_partitions=4)
+metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+counts = []
+for _ in range(5):
+    before = metric.getCount()
+    materialize_clean_snapshot(load_table(spark, sys.argv[1], "documents"), sys.argv[2])
+    counts.append(metric.getCount() - before)
+print(json.dumps(counts))
+"""
+
+
+def test_repeated_snapshot_compiles_almost_nothing(tmp_path):
+    # The session's generated-class cache holds the snapshot's plan, so
+    # runs after the first find their classes compiled. The cache is
+    # JVM-wide and earlier tests warm it, so run 1 is only a cold
+    # baseline in a fresh JVM. With Spark's 100-entry default, runs 2-5
+    # recompile 70-105 classes together (run 1: ~105).
+    root = Path(__file__).resolve().parents[1]
+    env = {**os.environ, "PYTHONPATH": str(root), "SPARK_GRAFT_DRIVER_MEM": "2g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _SNAPSHOT_COMPILES, SF_SMOKE, str(tmp_path / "snap")],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    counts = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert counts[0] > 0 and sum(counts[1:]) <= counts[0] / 2, counts
 
 
 @pytest.mark.parametrize(
