@@ -21,9 +21,10 @@ Scale design (the part that matters at 100 TB):
     V-SMART-Join shape from PAPERS.md: candidate generation never
     materializes the n² cross product.
   * SimHash — 60-bit signature via 60 conditional-sum aggregates (no
-    per-bit row explosion); near-dup pairs via 4-chunk banding, which is
-    EXACT for hamming ≤ 3 by pigeonhole (4 chunks, ≤3 differing bits →
-    at least one chunk equal).
+    per-bit row explosion); near-dup pairs via `hamming_near_pairs`'
+    4-band screen, which is EXACT for hamming ≤ 3 by pigeonhole (4
+    bands, ≤3 differing bits → at least one band equal). The pHash
+    near-dup queries (operators/multimodal.py) share that screen.
 
 The LSH core — every screen (`minhash_lsh_pairs`, the candidate and
 multiplicity observables, the recall audit, `dedup_incremental_neardup`
@@ -34,14 +35,18 @@ written once:
   bands       `band_relation`
   collisions  `band_join`; `_band_collisions` for a self-screen, which
               `lsh_candidate_pairs` dedups and
-              `lsh_collision_multiplicity` counts
+              `lsh_collision_multiplicity` counts; the hamming
+              screen `hamming_near_pairs` (SimHash, pHash) bands
+              through it too
   verify      `verify_jaccard` (candidates ⋈ both guarded shingle sets)
   rep pairs   `_lsh_rep_pairs` (digests, dup members, guard, screen and
               verify over one representative per content hash)
   expand      `_expand_exact_dups` (exact-dup members of the reps) —
               output only: `minhash_lsh_pairs` returns it, while the
               clean-corpus near-dup drop reads the rep pairs directly
-The oracles mirror it with `_sig_band_ctes` / `_screen_ctes`.
+The oracles mirror it with `_sig_band_ctes` / `_screen_ctes`, and
+state the guarded exact Jaccard once, in `_pair_overlap_ctes`' `exact`
+(Spark twin: `_jaccard6`).
 
 Filtered-universe semantics: `ngram_jaccard_pairs` computes Jaccard
 over the shingle universe with document frequency ≤ `max_df` (default
@@ -98,7 +103,7 @@ NEARDUP_THRESHOLD = 0.5
 # sharing pair — so a lower reporting bar is safe and more informative.
 JACCARD_THRESHOLD = 0.2
 SIMHASH_BITS = 60
-SIMHASH_CHUNKS = 4
+HAMMING_BANDS = 4  # 15-bit bands of a 60-bit hash
 HAMMING_MAX = 3
 # Stop-shingle guard: a shingle shared by m docs contributes m² rows to
 # any inverted-index self-join — one boilerplate trigram shared by the
@@ -243,6 +248,20 @@ def stop_shingle_filter(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFram
     return sh.join(F.broadcast(stop_shingles(sh, max_df)), "sh", "left_anti")
 
 
+def _overlap6(den: Column) -> Column:
+    """`n_common` / `den` rounded to 6 dp — the one Spark spelling of
+    the shingle-overlap measures: Jaccard (`_jaccard6`) and
+    containment (`den` = one side's set size). `_overlap6_sql` is its
+    DuckDB twin."""
+    return F.round(F.col("n_common").cast("double") / den, 6)
+
+
+def _jaccard6(n_a: str, n_b: str) -> Column:
+    """Rounded shingle-set Jaccard |A∩B| / |A∪B| from `n_common` and
+    the per-side set-size columns `n_a`, `n_b`."""
+    return _overlap6(F.col(n_a) + F.col(n_b) - F.col("n_common"))
+
+
 def _shingle_pair_overlap(
     docs: DataFrame, max_df: int, raw: DataFrame | None = None
 ) -> DataFrame:
@@ -302,14 +321,7 @@ def ngram_jaccard_pairs(
     relation with a caller that also screens."""
     return (
         _shingle_pair_overlap(docs, max_df, raw=sh)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard6("n_a", "n_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
@@ -345,25 +357,37 @@ def containment_pairs(
     stop-shingle guard bounding per-key fan-out, same keyed
     self-join); only the final measure differs. Filtered-universe
     semantics carry over unchanged."""
-    cont_a = F.round(F.col("n_common").cast("double") / F.col("n_a"), 6)
-    cont_b = F.round(F.col("n_common").cast("double") / F.col("n_b"), 6)
     return (
         _shingle_pair_overlap(docs, max_df)
         .filter(F.least(F.col("n_a"), F.col("n_b")) >= min_shingles)
-        .withColumn("cont_a_in_b", cont_a)
-        .withColumn("cont_b_in_a", cont_b)
+        .withColumn("cont_a_in_b", _overlap6(F.col("n_a")))
+        .withColumn("cont_b_in_a", _overlap6(F.col("n_b")))
         .filter(F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold)
         .select("doc_a", "doc_b", "n_common", "cont_a_in_b", "cont_b_in_a")
     )
 
 
-# SQL twin of _shingle_pair_overlap, shared by the Jaccard and
-# containment oracles (change the stop-shingle / pair SQL here and both
-# oracles move together, like the Spark side).
-_PAIR_OVERLAP_CTES = f"""shf AS (
+def _overlap6_sql(den: str) -> str:
+    """SQL twin of `_overlap6`: `n_common` / `den` rounded to 6 dp."""
+    return f"ROUND(CAST(n_common AS DOUBLE) / {den}, 6)"
+
+
+def _jaccard6_sql(n_a: str = "ca.n", n_b: str = "cb.n") -> str:
+    """SQL twin of `_jaccard6`."""
+    return _overlap6_sql(f"({n_a} + {n_b} - n_common)")
+
+
+def _pair_overlap_ctes(threshold: float, max_df: int = MAX_SHINGLE_DF) -> str:
+    """SQL twin of `_shingle_pair_overlap` plus the exact verify, over
+    the shingle CTE `shh`: the guarded relation `shf`, per-doc sizes
+    `cnt`, sharing pairs `pairs` (doc_a, doc_b, n_common) and `exact` —
+    the pairs whose rounded guarded Jaccard is ≥ `threshold`. Every
+    shingle-overlap oracle (Jaccard, containment, the MinHash-LSH
+    family, the recall audit) builds on it."""
+    return f"""shf AS (
   SELECT doc_id, sh FROM shh
   WHERE sh NOT IN (
-    SELECT sh FROM shh GROUP BY sh HAVING COUNT(*) > {MAX_SHINGLE_DF}
+    SELECT sh FROM shh GROUP BY sh HAVING COUNT(*) > {max_df}
   )
 ),
 cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
@@ -371,16 +395,24 @@ pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM shf a JOIN shf b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2
+),
+exact AS (
+  SELECT * FROM (
+    SELECT doc_a, doc_b, n_common, {_jaccard6_sql()} AS jaccard
+    FROM pairs
+    JOIN cnt ca ON ca.doc_id = doc_a
+    JOIN cnt cb ON cb.doc_id = doc_b
+  ) WHERE jaccard >= {threshold}
 )"""
 
 
 CONTAINMENT_ORACLE = f"""
 WITH {_SHINGLES_CTE},
-{_PAIR_OVERLAP_CTES},
+{_pair_overlap_ctes(JACCARD_THRESHOLD)},
 scored AS (
   SELECT doc_a, doc_b, n_common,
-         ROUND(CAST(n_common AS DOUBLE) / ca.n, 6) AS cont_a_in_b,
-         ROUND(CAST(n_common AS DOUBLE) / cb.n, 6) AS cont_b_in_a
+         {_overlap6_sql("ca.n")} AS cont_a_in_b,
+         {_overlap6_sql("cb.n")} AS cont_b_in_a
   FROM pairs
   JOIN cnt ca ON ca.doc_id = doc_a
   JOIN cnt cb ON cb.doc_id = doc_b
@@ -394,13 +426,8 @@ WHERE greatest(cont_a_in_b, cont_b_in_a) >= {CONTAINMENT_THRESHOLD}
 
 NGRAM_JACCARD_ORACLE = f"""
 WITH {_SHINGLES_CTE},
-{_PAIR_OVERLAP_CTES}
-SELECT doc_a, doc_b, n_common,
-       ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) AS jaccard
-FROM pairs
-JOIN cnt ca ON ca.doc_id = doc_a
-JOIN cnt cb ON cb.doc_id = doc_b
-WHERE ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) >= {JACCARD_THRESHOLD}
+{_pair_overlap_ctes(JACCARD_THRESHOLD)}
+SELECT doc_a, doc_b, n_common, jaccard FROM exact
 """
 
 
@@ -708,15 +735,10 @@ def verify_jaccard(
         .groupBy(a, b)
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jaccard = F.round(
-        F.col("n_common").cast("double")
-        / (F.col(n_a) + F.col(n_b) - F.col("n_common")),
-        6,
-    )
     return (
         common.join(sizes(sh_a, a, n_a), a)
         .join(sizes(sh_b, b, n_b), b)
-        .withColumn("jaccard", jaccard)
+        .withColumn("jaccard", _jaccard6(n_a, n_b))
         .filter(F.col("jaccard") >= threshold)
         .select(a, b, "jaccard")
     )
@@ -958,32 +980,13 @@ def _minhash_ctes(
     rows: int = LSH_ROWS,
     max_df: int = MAX_SHINGLE_DF,
 ) -> str:
-    """The shared CTE block (shingles → stop-shingle guard → sig →
-    bands → candidates → exact) of `_minhash_oracle` and
-    `_minhash_estimate_oracle` — signatures, candidates, AND the
-    exact verify all over the df ≤ max_df filtered universe, mirroring
-    `minhash_lsh_pairs`."""
+    """The shared CTE block (shingles → stop-shingle guard → exact →
+    sig → bands → candidates) of the MinHash-LSH oracles — signatures,
+    candidates, AND the exact verify all over the df ≤ max_df filtered
+    universe, mirroring `minhash_lsh_pairs`."""
     return f"""{_SHINGLES_CTE},
-shf AS (
-  SELECT shh.doc_id, shh.sh FROM shh
-  JOIN (SELECT sh FROM shh GROUP BY sh HAVING COUNT(*) <= {max_df}) keepsh
-    ON shh.sh = keepsh.sh
-),
-{_screen_ctes(bands, rows)},
-cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM shf a JOIN shf b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-exact AS (
-  SELECT doc_a, doc_b,
-         ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) AS jaccard
-  FROM pairs
-  JOIN cnt ca ON ca.doc_id = doc_a
-  JOIN cnt cb ON cb.doc_id = doc_b
-  WHERE ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) >= {threshold}
-)"""
+{_pair_overlap_ctes(threshold, max_df)},
+{_screen_ctes(bands, rows)}"""
 
 
 def _minhash_oracle(
@@ -1077,7 +1080,7 @@ def lsh_recall_audit(
         docs, threshold=threshold, max_df=max_df, sh=sh
     ).select("doc_a", "doc_b")
     cands = lsh_candidate_pairs(
-        docs, bands=bands, rows=rows, sh=sh, max_df=max_df
+        docs, bands=bands, rows=rows, shf=stop_shingle_filter(sh, max_df=max_df)
     ).cache()
     hits = true_pairs.join(cands, ["doc_a", "doc_b"])
     nt = true_pairs.agg(F.count(F.lit(1)).alias("n_true_pairs"))
@@ -1105,30 +1108,21 @@ def _lsh_recall_audit_oracle(
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
 ) -> str:
-    """Oracle twin of `lsh_recall_audit`: the guarded exact-pair CTEs
-    (NGRAM_JACCARD's) plus the banded-candidate CTEs, counted."""
+    """Oracle twin of `lsh_recall_audit`: the guarded exact pairs
+    (`exact`, the truth set) and the banded candidates, counted."""
     return f"""
-WITH {_SHINGLES_CTE},
-{_PAIR_OVERLAP_CTES},
-true_pairs AS (
-  SELECT doc_a, doc_b
-  FROM pairs
-  JOIN cnt ca ON ca.doc_id = doc_a
-  JOIN cnt cb ON cb.doc_id = doc_b
-  WHERE ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) >= {threshold}
-),
-{_screen_ctes(bands, rows)},
+WITH {_minhash_ctes(threshold, bands, rows, max_df)},
 hits AS (
-  SELECT t.doc_a, t.doc_b FROM true_pairs t
+  SELECT t.doc_a, t.doc_b FROM exact t
   JOIN candidates c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
 )
 SELECT
-  (SELECT COUNT(*) FROM true_pairs)::BIGINT AS n_true_pairs,
+  (SELECT COUNT(*) FROM exact)::BIGINT AS n_true_pairs,
   (SELECT COUNT(*) FROM candidates)::BIGINT AS n_candidates,
   (SELECT COUNT(*) FROM hits)::BIGINT AS n_verified,
-  CASE WHEN (SELECT COUNT(*) FROM true_pairs) = 0 THEN NULL
+  CASE WHEN (SELECT COUNT(*) FROM exact) = 0 THEN NULL
        ELSE ROUND((SELECT COUNT(*) FROM hits) * 1.0
-                  / (SELECT COUNT(*) FROM true_pairs), 6)
+                  / (SELECT COUNT(*) FROM exact), 6)
   END AS recall6
 """
 
@@ -1262,12 +1256,7 @@ JOIN sig sb ON sb.doc_id = v.doc_b
 
 
 def _band_collisions(
-    docs: DataFrame,
-    bands: int,
-    rows: int,
-    sh: DataFrame | None,
-    max_df: int,
-    shf: DataFrame | None,
+    docs: DataFrame, bands: int, rows: int, max_df: int, shf: DataFrame | None
 ) -> tuple[DataFrame, list[Column]]:
     """One row per band collision of the self-screen, as `band_join`'s
     (rows, pair) with pair = (doc_a, doc_b): guard → signature → bands
@@ -1276,9 +1265,7 @@ def _band_collisions(
     `lsh_collision_multiplicity` (rows counted per pair); parameters as
     documented there."""
     if shf is None:
-        shf = stop_shingle_filter(
-            sh if sh is not None else doc_shingle_hashes(docs), max_df=max_df
-        )
+        shf = stop_shingle_filter(doc_shingle_hashes(docs), max_df=max_df)
     band_rel = band_relation(
         minhash_signatures(docs, sh=shf, n_perm=bands * rows), bands=bands, rows=rows
     )
@@ -1289,7 +1276,6 @@ def lsh_candidate_pairs(
     docs: DataFrame,
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    sh: DataFrame | None = None,
     max_df: int = MAX_SHINGLE_DF,
     shf: DataFrame | None = None,
 ) -> DataFrame:
@@ -1300,11 +1286,11 @@ def lsh_candidate_pairs(
     ~max_df docs and aligns the S-curve with the guarded measure the
     verifiers report). This is the screen half of `minhash_lsh_pairs`,
     exposed for the recall audit and the screen's cost observables.
-    `sh` shares a pre-computed RAW `doc_shingle_hashes` relation (guard
-    applied here); `shf` shares an ALREADY-GUARDED relation (e.g.
-    `minhash_lsh_pairs`' rep-restricted one, whose df must count
-    full-corpus copies) and takes precedence."""
-    hits, pair = _band_collisions(docs, bands, rows, sh, max_df, shf)
+    `shf` shares an already-guarded relation (e.g. `minhash_lsh_pairs`'
+    rep-restricted one, whose df must count full-corpus copies, or
+    `stop_shingle_filter` over a cached raw shingle relation); without
+    it the screen shingles `docs` and guards at `max_df` itself."""
+    hits, pair = _band_collisions(docs, bands, rows, max_df, shf)
     return hits.select(*pair).distinct()
 
 
@@ -1312,7 +1298,6 @@ def lsh_collision_multiplicity(
     docs: DataFrame,
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    sh: DataFrame | None = None,
     max_df: int = MAX_SHINGLE_DF,
     shf: DataFrame | None = None,
 ) -> DataFrame:
@@ -1325,7 +1310,7 @@ def lsh_collision_multiplicity(
     shuffle/spill driver the sf100 adjudication measured at 986M rows
     for b=24,r=3 (LSH_SF100_PLAN_r11.json) — while count(*) is the
     distinct-candidate count the exact verifier pays per row."""
-    hits, pair = _band_collisions(docs, bands, rows, sh, max_df, shf)
+    hits, pair = _band_collisions(docs, bands, rows, max_df, shf)
     return hits.groupBy(*pair).agg(F.count(F.lit(1)).alias("n_bands"))
 
 
@@ -1428,34 +1413,11 @@ def lsh_screened_jaccard_pairs(
     """`ngram_jaccard_pairs`' measure (Jaccard over the df ≤ `max_df`
     filtered shingle universe) at `threshold`, reported only for pairs
     the banded-LSH screen surfaces — which is exactly
-    `minhash_lsh_pairs`. Kept as its own registry entry and oracle: the
-    oracle states the result as screen ∩ exact enumeration."""
+    `minhash_lsh_pairs`. Kept as its own registry entry; its oracle is
+    `_minhash_oracle`, which states the result as candidates ⋈ exact."""
     return minhash_lsh_pairs(
         docs, threshold=threshold, clusters=clusters, bands=bands, rows=rows, max_df=max_df
     )
-
-
-def _lsh_screened_jaccard_oracle(
-    threshold: float = NEARDUP_THRESHOLD,
-    max_df: int = MAX_SHINGLE_DF,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-) -> str:
-    """No rep logic needed: exact-dup pre-grouping is result-transparent
-    (identical text ⇒ identical signature/bands/filtered set), so the
-    oracle is simply screen ∩ filtered-universe-jaccard over ALL docs."""
-    return f"""
-WITH {_SHINGLES_CTE},
-{_PAIR_OVERLAP_CTES},
-{_screen_ctes(bands, rows)}
-SELECT c.doc_a, c.doc_b,
-       ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) AS jaccard
-FROM candidates c
-JOIN pairs ON pairs.doc_a = c.doc_a AND pairs.doc_b = c.doc_b
-JOIN cnt ca ON ca.doc_id = c.doc_a
-JOIN cnt cb ON cb.doc_id = c.doc_b
-WHERE ROUND(CAST(n_common AS DOUBLE) / (ca.n + cb.n - n_common), 6) >= {threshold}
-"""
 
 
 # --- SimHash -------------------------------------------------------------------
@@ -1507,66 +1469,80 @@ SELECT doc_id, {sim_expr} AS simhash FROM bits
 """
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = HAMMING_MAX) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
+def hamming_near_pairs(
+    sig: DataFrame,
+    hash_col: str,
+    max_hamming: int,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """(a, b, hamming) — every pair of a (doc_id, `hash_col`) relation
+    of 60-bit hashes within hamming distance `max_hamming`, a < b. The
+    one near-dup screen of the hamming family (`simhash_near_dups`,
+    `multimodal_phash_neardup`, `image_phash_neardup`).
 
-    Banded join: 4 chunks of 15 bits; hamming ≤ 3 guarantees ≥1 equal
-    chunk (pigeonhole), so the banded candidate set is EXACT — same
-    result as the O(n²) scan, but the join is keyed (shuffle, no cross
-    product)."""
-    sig = simhash_signatures(docs)
-    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
-    mask = (1 << chunk_bits) - 1
-    # Single explode instead of a 4-way union (see minhash_lsh_pairs).
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("simhash"), c * chunk_bits)
-                .bitwiseAND(F.lit(mask))
-                .alias("chunk_val"),
-            )
-            for c in range(SIMHASH_CHUNKS)
-        ]
+    Banded: each hash splits into HAMMING_BANDS bands of 15 bits in
+    `band_join`'s (band, band_hash) form, and candidates come from the
+    ordered band self-join — a keyed shuffle, never a cross product.
+    By pigeonhole, ≤ HAMMING_BANDS − 1 differing bits leave at least
+    one band intact, so the banded set is EXACT (the O(n²) popcount
+    scan of the oracles, `_hamming_pairs_sql`). At HAMMING_BANDS
+    differing bits or more a pair can differ in every band and never
+    collide, so such a `max_hamming` raises ValueError instead of
+    silently under-reporting.
+
+    The popcount filter runs BEFORE the distinct: hamming is a pure
+    function of the pair, so duplicate collision rows agree on it and
+    the reorder is result-identical, but the distinct's exchange then
+    carries only the ≤ max_hamming pairs instead of the banded fan-out
+    (a band value shared by m docs makes m² collision rows). Callers
+    cache `sig` when it is costly to recompute: it feeds both join
+    sides."""
+    if max_hamming >= HAMMING_BANDS:
+        raise ValueError(
+            f"max_hamming={max_hamming}: banding is exact only below "
+            f"{HAMMING_BANDS} differing bits"
+        )
+    bits = SIMHASH_BITS // HAMMING_BANDS
+    band_structs = ", ".join(
+        f"named_struct('band', {band}, 'band_hash', "
+        f"shiftright({hash_col}, {band * bits}) & {(1 << bits) - 1})"
+        for band in range(HAMMING_BANDS)
     )
-    chunks = sig.select("doc_id", "simhash", F.explode(chunk_structs).alias("c")).select(
-        "doc_id", "simhash", F.col("c.chunk").alias("chunk"), F.col("c.chunk_val").alias("chunk_val")
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
+    bands = sig.selectExpr(
+        "doc_id", hash_col, f"explode(array({band_structs})) AS b"
+    ).selectExpr("doc_id", hash_col, "b.band", "b.band_hash")
+    hits, pair = band_join(bands, bands, a, b, ordered=True)
+    hamming = F.bit_count(F.col(f"l.{hash_col}").bitwiseXOR(F.col(f"r.{hash_col}")))
     return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("long").alias("hamming"),
-        )
-        # Filter BEFORE the distinct (guide §2.3): hamming is a pure
-        # function of the pair, so duplicate collision rows agree on it
-        # and the reorder is result-identical — but the distinct's
-        # exchange then carries only the ≤ max_hamming pairs instead of
-        # the full banded-collision fan-out, which is the quadratic
-        # term (surfaced by the r13 sf0.1 tail ranking at 14.5 s; a
-        # chunk value shared by m docs makes m² collision rows).
+        hits.select(*pair, hamming.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
 
 
+def _hamming_pairs_sql(src: str, hash_col: str, max_hamming: int, a: str, b: str) -> str:
+    """Oracle twin of `hamming_near_pairs` over the (doc_id, `hash_col`)
+    relation `src`: the O(n²) popcount scan. It states the result, not
+    the banding under test — the two agree because banding is exact
+    below HAMMING_BANDS differing bits."""
+    xor = f"bit_count(xor(x.{hash_col}, y.{hash_col}))"
+    return f"""SELECT x.doc_id AS {a}, y.doc_id AS {b}, CAST({xor} AS BIGINT) AS hamming
+FROM {src} x JOIN {src} y ON x.doc_id < y.doc_id
+WHERE {xor} <= {max_hamming}"""
+
+
+def simhash_near_dups(docs: DataFrame, max_hamming: int = HAMMING_MAX) -> DataFrame:
+    """(doc_a, doc_b, hamming) — near-dup pairs by SimHash hamming
+    distance ≤ max_hamming, through the exact banded screen
+    `hamming_near_pairs`."""
+    return hamming_near_pairs(simhash_signatures(docs), "simhash", max_hamming)
+
+
 def _simhash_pairs_oracle() -> str:
-    # Oracle uses the O(n²) formulation — same result set (banding is
-    # exact for hamming ≤ 3), simpler SQL.
     return f"""
 WITH sig AS ({_simhash_oracle_signature_sql()})
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) <= {HAMMING_MAX}
+{_hamming_pairs_sql("sig", "simhash", HAMMING_MAX, "doc_a", "doc_b")}
 """
 
 
@@ -1997,13 +1973,14 @@ pairs AS (
   FROM sided b JOIN sided c ON b.sh = c.sh AND b.side = 'b' AND c.side = 'c'
   GROUP BY 1, 2
 )
-SELECT cd.batch_doc, cd.corpus_doc,
-       ROUND(CAST(p.n_common AS DOUBLE) / (cb.n + cc.n - p.n_common), 6) AS jaccard
-FROM candidates cd
-JOIN pairs p ON p.batch_doc = cd.batch_doc AND p.corpus_doc = cd.corpus_doc
-JOIN cnt cb ON cb.doc_id = cd.batch_doc AND cb.side = 'b'
-JOIN cnt cc ON cc.doc_id = cd.corpus_doc AND cc.side = 'c'
-WHERE ROUND(CAST(p.n_common AS DOUBLE) / (cb.n + cc.n - p.n_common), 6) >= {threshold}
+SELECT * FROM (
+  SELECT cd.batch_doc, cd.corpus_doc,
+         {_jaccard6_sql("cb.n", "cc.n")} AS jaccard
+  FROM candidates cd
+  JOIN pairs p ON p.batch_doc = cd.batch_doc AND p.corpus_doc = cd.corpus_doc
+  JOIN cnt cb ON cb.doc_id = cd.batch_doc AND cb.side = 'b'
+  JOIN cnt cc ON cc.doc_id = cd.corpus_doc AND cc.side = 'c'
+) WHERE jaccard >= {threshold}
 """
 
 
@@ -2275,12 +2252,11 @@ DEDUP_QUERIES = [
         _lsh_recall_audit_sampled_oracle(),
     ),
     # ngram_jaccard's measure restricted to LSH-screened pairs — the
-    # same operator as dedup_minhash_lsh, checked against an oracle
-    # that states it as screen ∩ exact enumeration.
+    # same operator and oracle as dedup_minhash_lsh.
     QueryDef(
         "dedup_lsh_screened_jaccard",
         lambda s, d: lsh_screened_jaccard_pairs(_docs(s, d)),
-        _lsh_screened_jaccard_oracle(),
+        _minhash_oracle(),
     ),
     # The screen's cost observables as a hash-gated number (see
     # lsh_candidate_volume): candidate-volume regressions fail the

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apd_map_reduce_spark.operators.dedup import _hamming_pairs_sql, hamming_near_pairs
 from apd_map_reduce_spark.queries.base import QueryDef
 from apd_map_reduce_spark.sources.tables import load_table
 
@@ -483,9 +484,6 @@ FROM base b LEFT JOIN agg a ON b.doc_id = a.doc_id
 
 
 PHASH_BITS = 60
-PHASH_BANDS = 4
-PHASH_BAND_BITS = PHASH_BITS // PHASH_BANDS  # 15-bit bands
-PHASH_BAND_MASK = (1 << PHASH_BAND_BITS) - 1
 PHASH_MAX_HAMMING = 3
 PHASH_SCHEMA = "doc_id LONG, phash LONG"
 
@@ -536,19 +534,14 @@ def multimodal_phash(docs: DataFrame) -> DataFrame:
 def multimodal_phash_neardup(
     docs: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
-    """Perceptual-hash near-duplicate pairs over the binary payloads —
-    image-style near-dup detection for the multimodal column, the
-    visual sibling of simhash_near_dups.
-
-    Candidate generation is banded (same pigeonhole as SimHash): the
-    60-bit hash splits into 4 15-bit bands; hamming(a,b) <= 3 forces
-    at least one intact band, so candidates come from 4 per-band
-    equi-joins — never an all-pairs product. Candidates are verified
-    with the exact popcount of the XOR. (An earlier 16-bit width
-    collapsed at scale: 5000 docs produced 307k candidate pairs
-    because 4-bit bands only have 16 buckets; 15-bit bands give 32k
-    buckets per band, the same discrimination story as the 60-bit
-    SimHash.)
+    """(id_a, id_b, hamming) — perceptual-hash near-duplicate pairs
+    over the binary payloads: image-style near-dup detection for the
+    multimodal column, the visual sibling of `simhash_near_dups`, and
+    screened by the same exact banded hamming screen
+    (`dedup.hamming_near_pairs`: 4 bands of 15 bits, a keyed band
+    self-join, exact popcount before the distinct). 15-bit bands give
+    32k buckets per band; an earlier 16-bit hash with 4-bit bands had
+    16 buckets and made 307k candidate pairs out of 5000 docs.
 
     Scale: production uses a 64-bit DCT pHash with the identical
     band-join shape; a hot band bucket (near-constant images) is
@@ -560,41 +553,8 @@ def multimodal_phash_neardup(
     Python/Arrow stage once PER SIDE — hashing every payload twice.
     The cached relation is 2 narrow columns (same rule as dedup.py's
     shingle cache; bench clears caches between passes)."""
-    return _phash_banded_pairs(multimodal_phash(docs).cache(), max_hamming)
-
-
-def _phash_banded_pairs(ph: DataFrame, max_hamming: int) -> DataFrame:
-    """Banded near-dup pairs over ANY (doc_id, phash) relation — shared
-    by the byte-stub and real-pixel signature producers; callers cache
-    `ph` (it feeds both self-join sides)."""
-    bands = ph.select(
-        "doc_id",
-        "phash",
-        F.explode(F.array(*[F.lit(i) for i in range(PHASH_BANDS)])).alias("band"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(phash, band * {PHASH_BAND_BITS}) & {PHASH_BAND_MASK}"
-        ),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("id_a"), F.col("phash").alias("ph_a"), "band", "band_val"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"), F.col("phash").alias("ph_b"), "band", "band_val"
-    )
-    cand = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ph_a", "ph_b")
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.expr("ph_a ^ ph_b")).cast("long")
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return hamming_near_pairs(
+        multimodal_phash(docs).cache(), "phash", max_hamming, "id_a", "id_b"
     )
 
 
@@ -617,20 +577,8 @@ ph AS (
            i -> CASE WHEN cs[i + 1] * {PHASH_BITS} > list_sum(cs)
                 THEN (1::BIGINT << i) ELSE 0::BIGINT END))::BIGINT AS phash
   FROM sums
-),
-bands0 AS (
-  SELECT doc_id, phash, unnest(generate_series(0, {PHASH_BANDS - 1})) AS band FROM ph
-),
-bands AS (
-  SELECT doc_id, phash, band, (phash >> (band * {PHASH_BAND_BITS})) & {PHASH_BAND_MASK} AS band_val FROM bands0
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.phash AS ph_a, b.phash AS ph_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.band_val = b.band_val
-                           AND a.doc_id < b.doc_id
 )
-SELECT id_a, id_b, bit_count(xor(ph_a, ph_b))::BIGINT AS hamming
-FROM cand WHERE bit_count(xor(ph_a, ph_b)) <= {PHASH_MAX_HAMMING}
+{_hamming_pairs_sql("ph", "phash", PHASH_MAX_HAMMING, "id_a", "id_b")}
 """
 
 
@@ -681,11 +629,12 @@ def image_phash(images: DataFrame) -> DataFrame:
 def image_phash_neardup(
     images: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
-    """Near-duplicate image pairs from the REAL pHash — identical
-    banded candidate generation + exact-popcount verification as
-    `multimodal_phash_neardup` (the machinery is literally shared via
-    `_phash_banded_pairs`); only the signature producer differs."""
-    return _phash_banded_pairs(image_phash(images).cache(), max_hamming)
+    """(id_a, id_b, hamming) — near-duplicate image pairs from the
+    REAL pHash, through the same hamming screen as
+    `multimodal_phash_neardup`; only the signature producer differs."""
+    return hamming_near_pairs(
+        image_phash(images).cache(), "phash", max_hamming, "id_a", "id_b"
+    )
 
 
 MULTIMODAL_QUERIES = [

@@ -12,7 +12,15 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="apd-tests", master="local[4]", shuffle_partitions=4)
+    # A 4g heap instead of get_spark's 8g default: the fixtures are
+    # sf0.001/sf0.01, and under 8g the session JVM grew to 6.5 GB
+    # resident, enough to be OOM-killed beside other Spark JVMs.
+    spark = get_spark(
+        app_name="apd-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": "4g"},
+    )
     yield spark
 
 

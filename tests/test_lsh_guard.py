@@ -66,8 +66,9 @@ def test_lsh_band_buckets_bounded_by_max_df(spark):
     # bucket is a singleton — and in general no bucket can exceed
     # max_df, because every doc in a bucket contains the bucket's
     # argmin shingle, whose df is ≤ max_df by construction.
-    assert _bucket_sizes(stop_shingle_filter(raw, max_df=max_df)) == 1
-    assert lsh_candidate_pairs(docs, sh=raw, max_df=max_df).count() == 0
+    shf = stop_shingle_filter(raw, max_df=max_df)
+    assert _bucket_sizes(shf) == 1
+    assert lsh_candidate_pairs(docs, shf=shf).count() == 0
 
 
 def test_lsh_screen_finds_stop_diluted_pair(spark):

@@ -147,7 +147,7 @@ def test_audio_stats_matches_python_model(spark):
 
 def test_phash_neardup_matches_bruteforce(spark):
     """Banding completeness: for hamming <= PHASH_MAX_HAMMING the
-    4-nibble pigeonhole guarantees candidate recall is EXACT, so the
+    4-band pigeonhole guarantees candidate recall is EXACT, so the
     banded pair set must equal the brute-force pair set computed from
     the signatures in Python."""
     from apd_map_reduce_spark.operators.multimodal import (
